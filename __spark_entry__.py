@@ -2720,9 +2720,8 @@ def _q_topk_price_by_flag(spark: SparkSession, sf: str) -> DataFrame:
     pushdown: the executed plan carries a Partial WindowGroupLimit BELOW
     the exchange, so each map task pre-prunes to its local top-K per flag
     and the 3 post-shuffle flag groups see O(tasks × K) rows, not the whole
-    table (plan pinned in tests/test_topk.py; the manual salted two-phase
-    is kept as grouped_topk_salted for engines without the rewrite —
-    measured A/B in BENCH/BASELINE.md)."""
+    table (plan pinned in tests/test_topk.py; measured A/B against a manual
+    salted two-phase in BENCH/BASELINE.md)."""
     from json_to_avro_schema_spark.operators.topk import grouped_topk
 
     li = load_table(spark, sf, "lineitem").select(
@@ -4919,11 +4918,13 @@ def _q_sequence_gaps_events(spark: SparkSession, sf: str) -> DataFrame:
     """Global sequence-gap detection (operators/temporal.sequence_gaps):
     the id ranges missing from the click-filtered event stream — the
     surrogate-key / completeness audit.  A naive global window is a
-    single-partition sort; this range-partitions the ids, finds holes
-    per partition via a spark_partition_id window (range pids ascend, so
-    in-partition order IS global order), and stitches the ≤P−1 boundary
-    holes from an O(P)-row min/max aggregate — the packing module's
-    two-level shape, never a global sort, never the data on the driver."""
+    single-partition sort; this buckets the ids by approximate-quantile
+    value bounds embedded as plan literals (the operators/_prefix
+    scaffold shared with packing and the KS/EMD drift checks), finds
+    holes per bucket with a bucket-partitioned window (ascending bucket
+    == ascending id), and stitches the ≤P−1 boundary holes from an
+    O(P)-row min/max aggregate — never a global sort, never the data on
+    the driver."""
     ev = load_table(spark, sf, "events")
     clicks = ev.filter(F.col("event_type") == "click")
     out = tmp.sequence_gaps(clicks, "event_id")

@@ -6,11 +6,12 @@ Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-``--scaling`` mode: run the flagship validation job at two parallelism
-levels (local[8] vs local[32] by default) in separate processes on the SAME
-input and report throughput at both plus scaling efficiency
-(T_8/T_32)/4 — the sandbox evidence for the north rule's N→4N executor
-criterion (BASELINE.md). Results are appended to BENCH/BASELINE.md.
+Scaling modes (N→4N strong scaling of the flagship validation job on one
+pre-generated input, the north rule's executor criterion; results are
+analysed in BENCH/BASELINE.md): ``--scaling-multiproc`` runs N vs 4N
+independent single-core JVMs over disjoint shards, and
+``--scaling-cluster-interleaved`` runs N vs 4N executors under
+``local-cluster`` in alternating pairs.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ def _bench_input(spark, n_docs: int) -> str:
     """Materialize the synthetic interleaved table ONCE (cached in /tmp,
     keyed by size). The north-rule metric is *validation* throughput
     (docs/sec) — timing the on-the-fly generator would measure the synthetic
-    data source, not the engine. Same methodology as ``--scaling``."""
+    data source, not the engine. Same methodology as the scaling modes."""
     from json_to_avro_schema_spark.sources.synthetic import generate_documents_iv
 
     path = f"/tmp/bench_docs_iv_{n_docs}.parquet"
@@ -286,100 +287,6 @@ def _scaling_gen() -> None:
     ).write.mode("overwrite").parquet(SCALE_DATA)
 
 
-def _scaling_child(cpus: int, n_docs: int) -> None:
-    """One timed validation of the pre-generated table at local[cpus]:
-    warm run (page cache + codegen) then the measured run — per-partition
-    verdict aggregation with the violation-row count riding the same scan
-    (runner.verdicts_with_violation_count), the engine's real one-compute-
-    scan job shape (the sink path derives verdicts from written violations
-    the same way)."""
-    from json_to_avro_schema_spark.compiler.plan import compile_document
-    from json_to_avro_schema_spark.runner import verdicts_with_violation_count
-    from json_to_avro_schema_spark.session import get_spark
-    from json_to_avro_schema_spark.sources.synthetic import (
-        documents_iv_rich_spec,
-        documents_iv_spec,
-    )
-
-    spark = get_spark(app=f"scale{cpus}", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    # default 'rich': production-density constraint surface (~3× the checks
-    # of the minimal flagship spec) — the minimal spec is parquet-decode-
-    # bound at high core counts and measures the decoder, not the engine
-    spec_kind = os.environ.get("SPARK_GRAFT_SCALE_SPEC", "rich")
-    plan = compile_document(
-        documents_iv_rich_spec() if spec_kind == "rich" else documents_iv_spec()
-    )
-
-    def run() -> int:
-        verd, obs = verdicts_with_violation_count(
-            spark.read.parquet(SCALE_DATA), plan
-        )
-        verd.collect()
-        return int(obs.get["n_rows"])
-
-    run()  # warmup
-    t0 = time.perf_counter()
-    n = run()
-    dt = time.perf_counter() - t0
-    print(json.dumps({"cpus": cpus, "sec": dt, "docs": n,
-                      "docs_per_sec": n / dt}))
-
-
-def run_scaling(n_small: int | None = None, n_large: int | None = None) -> dict:
-    """Same job, same input, two parallelism levels; min-of-trials absorbs
-    hypervisor noise. Default pair 2→8 (see BENCH/BASELINE.md: a pure-CPU
-    microbenchmark shows this VM itself stops scaling past ~16 active
-    vCPUs, so 8→32 measures the platform, not the engine)."""
-    n_small = n_small or SCALE_PAIR[0]
-    n_large = n_large or SCALE_PAIR[1]
-    if not os.path.exists(SCALE_DATA):
-        subprocess.run(
-            [sys.executable, __file__, "--scaling-gen"],
-            check=True, cwd=REPO, timeout=1800,
-        )
-    results = {}
-    for cpus in (n_small, n_large):
-        best = None
-        for _ in range(SCALE_TRIALS):
-            out = subprocess.run(
-                [sys.executable, __file__, "--scaling-child", str(cpus),
-                 str(SCALE_DOCS)],
-                capture_output=True, text=True, cwd=REPO, timeout=1800,
-                env={
-                    **os.environ,
-                    "SPARK_GRAFT_CPUS": str(cpus),
-                    # memory scales WITH parallelism, as on a real cluster
-                    # where 4N executors bring 4N × executor-memory; a heap
-                    # fixed across core counts GC-throttles the 4N config
-                    # and measures the heap, not the engine
-                    "SPARK_DRIVER_MEMORY": (
-                        f"{int(os.environ.get('SPARK_GRAFT_MEM_PER_CORE_G', '2')) * cpus}g"
-                    ),
-                },
-            )
-            line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-            r = json.loads(line)
-            if best is None or r["sec"] < best["sec"]:
-                best = r
-        results[cpus] = best
-    t_small = results[n_small]["sec"]
-    t_large = results[n_large]["sec"]
-    ratio = n_large / n_small
-    efficiency = (t_small / t_large) / ratio
-    report = {
-        "n_docs": SCALE_DOCS,
-        f"local[{n_small}]_sec": round(t_small, 2),
-        f"local[{n_large}]_sec": round(t_large, 2),
-        f"local[{n_small}]_docs_per_sec": round(results[n_small]["docs_per_sec"], 1),
-        f"local[{n_large}]_docs_per_sec": round(results[n_large]["docs_per_sec"], 1),
-        "scaling_efficiency": round(efficiency, 3),
-        "target": 0.8,
-        "meets_target": efficiency >= 0.8,
-    }
-    return report
-
-
 def _shard_child(n_workers: int, idx: int) -> None:
     """One executor-analog: a separate single-core JVM (local[1], own heap)
     validating its strided shard of the input files. Prints
@@ -397,6 +304,9 @@ def _shard_child(n_workers: int, idx: int) -> None:
 
     spark = get_spark(app=f"shard{idx}", cpus=1)
     spark.sparkContext.setLogLevel("ERROR")
+    # default 'rich': production-density constraint surface (~3× the checks
+    # of the minimal flagship spec) — the minimal spec is parquet-decode-
+    # bound at high core counts and measures the decoder, not the engine
     spec_kind = os.environ.get("SPARK_GRAFT_SCALE_SPEC", "rich")
     plan = compile_document(
         documents_iv_rich_spec() if spec_kind == "rich" else documents_iv_spec()
@@ -523,7 +433,7 @@ def _cluster_child(n_exec: int, cores: int) -> None:
     JVMs (own heap each), tasks dispatched over RPC, shuffle over netty.
     This is the exact runtime shape `spark-submit --py-files` deploys on a
     standalone cluster, minus the network between machines. Warm run then
-    measured run, same protocol as --scaling-child."""
+    measured run."""
     from json_to_avro_schema_spark.compiler.plan import compile_document
     from json_to_avro_schema_spark.runner import verdicts_with_violation_count
     from json_to_avro_schema_spark.session import get_spark
@@ -568,69 +478,22 @@ def _cluster_child(n_exec: int, cores: int) -> None:
                       "docs": n, "docs_per_sec": n / dt}))
 
 
-def run_scaling_cluster(
-    n_small: int | None = None, n_large: int | None = None, cores: int = 2
+def run_scaling_cluster_interleaved(
+    n_small: int | None = None, n_large: int | None = None, cores: int = 2,
+    rounds: int | None = None,
 ) -> dict:
     """N vs 4N *executors* under local-cluster: separate executor JVMs with
     real task dispatch + netty shuffle (vs --scaling-multiproc's independent
     single-JVM shards, which model executors but bypass Spark's scheduler).
     Default 1 vs 4 executors × 2 cores (2 vs 8 total) — the band below this
-    VM's DRAM-bandwidth ceiling (BENCH/BASELINE.md); the platform, not the
-    engine, caps wider configs. Min of trials absorbs hypervisor noise."""
-    n_small = n_small or int(os.environ.get("SPARK_GRAFT_CLUSTER_SMALL", "1"))
-    n_large = n_large or int(os.environ.get("SPARK_GRAFT_CLUSTER_LARGE", "4"))
-    if not os.path.exists(SCALE_DATA):
-        subprocess.run(
-            [sys.executable, __file__, "--scaling-gen"],
-            check=True, cwd=REPO, timeout=1800,
-        )
-    results = {}
-    for n_exec in (n_small, n_large):
-        best = None
-        for _ in range(max(SCALE_TRIALS, 2)):
-            out = subprocess.run(
-                [sys.executable, __file__, "--scaling-cluster-child",
-                 str(n_exec), str(cores)],
-                capture_output=True, text=True, cwd=REPO, timeout=1800,
-                env={**os.environ,
-                     # driver heap stays modest; executor heaps are sized
-                     # inside the child (mem-per-core × cores each)
-                     "SPARK_DRIVER_MEMORY": "4g"},
-            )
-            line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-            r = json.loads(line)
-            if best is None or r["sec"] < best["sec"]:
-                best = r
-        results[n_exec] = best
-    tput_s = results[n_small]["docs_per_sec"]
-    tput_l = results[n_large]["docs_per_sec"]
-    ratio = n_large / n_small
-    efficiency = (tput_l / tput_s) / ratio
-    return {
-        "mode": "local-cluster-executors",
-        "cores_per_executor": cores,
-        "n_docs": results[n_large]["docs"],
-        f"exec{n_small}_sec": round(results[n_small]["sec"], 2),
-        f"exec{n_large}_sec": round(results[n_large]["sec"], 2),
-        f"exec{n_small}_docs_per_sec": round(tput_s, 1),
-        f"exec{n_large}_docs_per_sec": round(tput_l, 1),
-        "scaling_efficiency": round(efficiency, 3),
-        "target": 0.8,
-        "meets_target": efficiency >= 0.8,
-    }
-
-
-def run_scaling_cluster_interleaved(
-    n_small: int | None = None, n_large: int | None = None, cores: int = 2,
-    rounds: int | None = None,
-) -> dict:
-    """Drift-resistant variant of --scaling-cluster: instead of running all
-    small-config trials then all large-config trials (a ~35-minute span a
-    single hypervisor phase change can bisect — observed 2026-08-19, where
-    same-session memory-BW ceilings swung 0.41/0.94/0.20 and the grouped
-    protocol read 0.683 on a validation path that measured 0.93+ in three
-    earlier sessions), alternate small,large,small,large,... and compute
-    the efficiency of each ADJACENT pair, reporting the median. A phase
+    VM's DRAM-bandwidth ceiling (BENCH/BASELINE.md). Drift-resistant:
+    instead of running all small-config trials then all large-config
+    trials (a ~35-minute span a single hypervisor phase change can bisect
+    — observed 2026-08-19, where same-session memory-BW ceilings swung
+    0.41/0.94/0.20 and the grouped protocol read 0.683 on a validation
+    path that measured 0.93+ in three earlier sessions), alternate
+    small,large,small,large,... and compute the efficiency of each
+    ADJACENT pair, reporting the median. A phase
     shift then lands inside one pair (visible as pair spread) rather than
     biasing every pair the same way — the same interleaving rationale as
     the funnel persist A/B (BENCH/BASELINE.md §1d). Each child still warms
@@ -985,20 +848,14 @@ def run_corpus_bench() -> dict:
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--scaling-gen":
         _scaling_gen()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-child":
-        _scaling_child(int(sys.argv[2]), int(sys.argv[3]))
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-shard":
         _shard_child(int(sys.argv[2]), int(sys.argv[3]))
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-cluster-child":
         _cluster_child(int(sys.argv[2]), int(sys.argv[3]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-cluster":
-        print(json.dumps(run_scaling_cluster()))
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-cluster-interleaved":
         print(json.dumps(run_scaling_cluster_interleaved()))
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-multiproc":
         print(json.dumps(run_scaling_multiproc()))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        print(json.dumps(run_scaling()))
     elif len(sys.argv) > 1 and sys.argv[1] == "--packing-bench":
         print(json.dumps(run_packing_bench()))
     elif len(sys.argv) > 1 and sys.argv[1] == "--web-bench":

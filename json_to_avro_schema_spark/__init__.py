@@ -77,7 +77,7 @@ from .operators.matching import fuzzy_dedup_candidates, fuzzy_join
 from .operators.text import normalize_unicode
 from .operators.drift import benford_report
 from .operators.profile import fd_candidates, suggest_fds
-from .operators.topk import grouped_topk, grouped_topk_salted
+from .operators.topk import grouped_topk
 from .operators.web import (
     domain_caps,
     domain_filter,
@@ -153,7 +153,6 @@ __all__ = [
     "deterministic_topn_sample",
     "get_spark",
     "grouped_topk",
-    "grouped_topk_salted",
     "ks_drift",
     "ks_drift_report",
     "normalize_unicode",

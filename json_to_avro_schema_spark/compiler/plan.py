@@ -563,6 +563,18 @@ def _assert_string_enums(s: JSchema, path: str) -> None:
 
 # ------------------------------------------------------------- extensions
 
+def _table_check_name(entry: Dict[str, Any], keyword: str, prefix: str) -> str:
+    """Check name of a single-column table-check entry (default
+    ``<prefix>_<column>``); an entry without ``column`` is a
+    SpecCompileError naming the check, not a raw KeyError."""
+    if "column" not in entry:
+        raise SpecCompileError(
+            f"{keyword} '{entry.get('name', prefix)}': missing required "
+            "'column'"
+        )
+    return entry.get("name", f"{prefix}_{entry['column']}")
+
+
 def _compile_extensions(doc: Dict[str, Any], plan: CompiledPlan) -> None:
     for i, u in enumerate(doc.get("x-unique", []) or []):
         if isinstance(u, str):
@@ -644,7 +656,7 @@ def _compile_extensions(doc: Dict[str, Any], plan: CompiledPlan) -> None:
             )
         )
     for oc in doc.get("x-outlier", []) or []:
-        name = oc.get("name", f"outlier_{oc['column']}")
+        name = _table_check_name(oc, "x-outlier", "outlier")
         method = oc.get("method", "mad")
         if method not in ("mad", "iqr"):
             raise SpecCompileError(
@@ -665,7 +677,7 @@ def _compile_extensions(doc: Dict[str, Any], plan: CompiledPlan) -> None:
             )
         )
     for bc in doc.get("x-benford", []) or []:
-        name = bc.get("name", f"benford_{bc['column']}")
+        name = _table_check_name(bc, "x-benford", "benford")
         thr = float(bc.get("madThreshold", 0.015))
         if not thr > 0.0:
             raise SpecCompileError(

@@ -32,6 +32,8 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import _prefix
+
 
 def histogram(
     df: DataFrame,
@@ -381,10 +383,9 @@ def _cdf_scaffold(
        ``(v, nc, nb)`` — partial+final hash agg, the only data-scale
        shuffle. The merged frame is persisted: it is post-aggregation
        (distinct-value) volume and feeds the jobs below.
-    2. sqrt-blocked pid bounds over ``v`` (``packing._order_bounds`` —
-       the same capped two-level prefix-sum shape
-       :func:`~json_to_avro_schema_spark.operators.packing.cumulative_tokens`
-       uses, see that module's docstring for the full rationale).
+    2. value-bounded pids over ``v`` — the prefix-sum scaffold of
+       :mod:`._prefix` (see that module for the full rationale), shared
+       with :func:`~.packing.cumulative_tokens`.
     3. per-pid ``(Σnc, Σnb, min v, max v)`` collected — O(P) rows, never
        O(values); the driver derives the exclusive per-pid prefixes, the
        global totals, the value range, AND each pid's successor-start
@@ -396,8 +397,6 @@ def _cdf_scaffold(
     list of ``(pid, off_c, off_b, next_start)``.
     """
     from pyspark.sql.types import NumericType
-
-    from .packing import _MAX_PID_BUCKETS, _order_bounds, _pid_from_bounds
 
     if not isinstance(current.schema[column].dataType, NumericType):
         raise TypeError(
@@ -421,27 +420,13 @@ def _cdf_scaffold(
         .agg(F.sum("__c").alias("nc"), F.sum("__b").alias("nb"))
         .persist()
     )
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    n_parts = min(n_parts, _MAX_PID_BUCKETS)
-    bounds = _order_bounds(merged, "v", n_parts) or []
-    # value-neutral nondeterminism barrier: same Catalyst constraint-
-    # inference hazard as packing.cumulative_tokens (the pid expression
-    # holds a HOF lambda and feeds a join equality; see that function's
-    # comment and the pinned repro in test_packing.py)
-    pid = (
-        _pid_from_bounds("v", bounds).cast("long")
-        + F.lit(0) * F.monotonically_increasing_id()
-    ).cast("int")
-    part = merged.withColumn(_KS_PID, pid)
-
-    totals = (
-        part.groupBy(_KS_PID)
-        .agg(
-            F.sum("nc").alias("tc"), F.sum("nb").alias("tb"),
-            F.min("v").alias("v_lo"), F.max("v").alias("v_hi"),
-        )
-        .orderBy(_KS_PID)
-        .collect()
+    part = _prefix.with_pid(
+        merged, "v", _KS_PID, _prefix.bucket_count(spark, num_partitions)
+    )
+    totals = _prefix.pid_totals(
+        part, _KS_PID,
+        F.sum("nc").alias("tc"), F.sum("nb").alias("tb"),
+        F.min("v").alias("v_lo"), F.max("v").alias("v_hi"),
     )
     acc_c = acc_b = 0
     rows = []
@@ -640,28 +625,17 @@ def emd_drift(
     nxt = F.coalesce(F.lead("v").over(w_lead), F.col("__next_start"))
     gap = F.coalesce(nxt.cast("double") - F.col("v").cast("double"), F.lit(0.0))
     span = (vmax - vmin) if (vmax is not None and vmax > vmin) else None
-    w1 = F.sum(F.col("__gap") * F.col("__d")).alias("w1")
-    w1_norm = (
-        (F.sum(F.col("__gap") * F.col("__d")) / F.lit(span))
-        if span
-        else F.lit(0.0)
-    ).alias("w1_norm")
+    w1 = F.sum(F.col("__gap") * F.col("__d"))
+    w1_norm = (w1 / F.lit(span)) if span else F.lit(0.0)
     out = (
         part.join(F.broadcast(offsets), _KS_PID)
         .select(gap.alias("__gap"), F.abs(cdf_c - cdf_b).alias("__d"))
         .agg(
-            w1,
-            w1_norm,
+            w1.alias("w1"),
+            w1_norm.alias("w1_norm"),
             F.lit(tc).alias("n_current"),
             F.lit(tb).alias("n_baseline"),
-            (
-                (
-                    F.sum(F.col("__gap") * F.col("__d")) / F.lit(span)
-                    if span
-                    else F.lit(0.0)
-                )
-                < F.lit(float(emd_threshold))
-            ).alias("pass"),
+            (w1_norm < F.lit(float(emd_threshold))).alias("pass"),
         )
     )
     # release handle for the persisted merged frame — see ks_drift

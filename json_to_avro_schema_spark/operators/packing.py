@@ -1,33 +1,13 @@
 """Token-budget shard packing + data-mixture selection.
 
 Both operators need a *global running sum* of token counts in a
-deterministic document order (optionally per group). The naive
-formulation is ``sum() OVER (ORDER BY ...)`` — a window whose Spark plan
-sorts the ENTIRE table into ONE partition, a single-task bottleneck at
-any scale. :func:`cumulative_tokens` is the distributed prefix-sum shape
-instead:
-
-1. derive P-1 approximate-quantile bounds of the order column (one
-   narrow aggregate; at 100 TB this scan is column-pruned to one
-   column), making ``pid(row) = #bounds <= order`` a deterministic,
-   retry-safe function of the row VALUE — no sampling-based range
-   partitioner, no checkpoint pinning,
-2. per-(pid, group) token totals — tiny, O(P × #groups present) rows —
-   collected to the driver (never O(rows)),
-3. an exclusive prefix per group over those totals in pid order
-   (bounds are monotonic in the order column, so ascending pid ==
-   ascending order), broadcast back as a join on (pid, group),
-4. a *within-pid* running sum — a window partitioned by (pid, group)
-   whose own shuffle is the ONLY wide exchange; every pid bucket
-   computes in parallel.
-
-Non-numeric order columns fall back to ``repartitionByRange`` +
+deterministic document order (optionally per group).
+:func:`cumulative_tokens` is the value-bounded distributed prefix sum of
+:mod:`._prefix` (see that module for the plan shape and why it is exact)
+with an exclusive per-group prefix as its driver fold. Non-numeric order
+columns have no quantile bounds and fall back to ``repartitionByRange`` +
 ``spark_partition_id`` with a ``localCheckpoint`` to freeze the sampled
 partitioning between the totals and window branches.
-
-Global offset = partition/group offset + within-partition running sum;
-bit-identical to the single-partition window at any parallelism, which
-is exactly what the DuckDB oracles check.
 
 On top of it:
 
@@ -42,88 +22,17 @@ On top of it:
 from __future__ import annotations
 
 import logging
-import math
 from typing import Dict, Mapping, Optional
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import _prefix
 
 _LOG = logging.getLogger(__name__)
 
 _PID = "__pack_pid"
 _BEFORE = "__pack_before"
-
-# Upper bound on pid buckets, independent of cluster parallelism. The P-1
-# quantile bounds are embedded in the plan as literals (a multi-MB plan at
-# uncapped 10^5-core defaults); correctness only needs enough buckets to
-# parallelize the within-pid window. Per-row assignment cost is kept flat
-# by the two-level scan in _pid_from_bounds (O(2*sqrt(P)) comparisons).
-_MAX_PID_BUCKETS = 4096
-
-# bound count above which _pid_from_bounds switches to the sqrt-blocked
-# two-level scan (below it the flat literal-array filter is cheaper)
-_TWO_LEVEL_MIN = 128
-
-
-def _order_bounds(
-    df: DataFrame, order_col: str, n_parts: int
-) -> Optional[list]:
-    """P-1 approximate-quantile bounds of a NUMERIC order column (None
-    for non-numeric types — callers fall back to range partitioning).
-    One narrow aggregate job; the result is embedded as literals so every
-    later branch assigns identical pids, retry- and AQE-proof."""
-    from pyspark.sql.types import NumericType
-
-    if not isinstance(df.schema[order_col].dataType, NumericType):
-        return None
-    if n_parts <= 1:
-        return []
-    probs = [i / n_parts for i in range(1, n_parts)]
-    row = df.agg(
-        F.percentile_approx(order_col, probs, 10_000).alias("b")
-    ).collect()[0]
-    return list(row["b"] or [])
-
-
-def _pid_from_bounds(order_col: str, bounds: list):
-    """pid(x) = #{b in bounds : b <= x} over the SORTED bound list.
-
-    Small bound counts use one literal-array filter scan. Past
-    ``_TWO_LEVEL_MIN`` the scan goes two-level (sqrt-blocked): count the
-    blocks whose max <= x via a coarse array, then scan only the one
-    straddling block — O(2*sqrt(P)) comparisons per row instead of O(P).
-    Measured at 10M rows x 4096 bounds: the flat scan costs ~12x the
-    64-bound plan; two-level brings it back to ~1x (BENCH/BASELINE.md).
-    Correct with duplicate bounds: the list is sorted, so every element
-    of a later block >= every element of an earlier one — elements <= x
-    can only live in fully-counted blocks or the single straddling block.
-    """
-    if not bounds:
-        return F.lit(0)
-    x = F.col(order_col)
-    if len(bounds) <= _TWO_LEVEL_MIN:
-        barr = F.array(*[F.lit(b) for b in bounds])
-        return F.size(F.filter(barr, lambda b: b <= x))
-    bs = int(math.isqrt(len(bounds) - 1)) + 1
-    blocks = [bounds[i:i + bs] for i in range(0, len(bounds), bs)]
-    coarse = F.array(*[F.lit(b[-1]) for b in blocks])
-    # element counts of blocks 0..i-1, so count_full = psize[full]
-    psizes, acc = [0], 0
-    for b in blocks:
-        acc += len(b)
-        psizes.append(acc)
-    psize_arr = F.array(*[F.lit(p) for p in psizes])
-    blocks_arr = F.array(*[F.array(*[F.lit(v) for v in b]) for b in blocks])
-    full = F.size(F.filter(coarse, lambda b: b <= x))
-    count_full = F.element_at(psize_arr, full + 1)
-    straddle = F.element_at(
-        blocks_arr, F.least(full, F.lit(len(blocks) - 1)) + 1
-    )
-    partial = F.when(
-        full < len(blocks),
-        F.size(F.filter(straddle, lambda b: b <= x)),
-    ).otherwise(F.lit(0))
-    return count_full + partial
 
 
 def cumulative_tokens(
@@ -142,7 +51,7 @@ def cumulative_tokens(
     equi-join); filter or fill nulls first.
 
     ``num_partitions`` requests pid-bucket count; both it and the derived
-    default are capped at ``_MAX_PID_BUCKETS`` (4096) — results are
+    default are capped at ``_prefix._MAX_PID_BUCKETS`` (4096) — results are
     identical at any bucket count, only window parallelism changes. A
     non-numeric ``order_col`` takes a documented slow path (full-input
     localCheckpoint; a warning is logged)."""
@@ -151,31 +60,9 @@ def cumulative_tokens(
             raise ValueError(f"input already has working column {c!r}")
 
     spark = df.sparkSession
-    # 2x parallelism: pids are hash-assigned to window tasks, so extra
-    # logical buckets smooth the assignment; capped so the bound-literal
-    # count never tracks cluster size (see _MAX_PID_BUCKETS)
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    n_parts = min(n_parts, _MAX_PID_BUCKETS)
-    bounds = _order_bounds(df, order_col, n_parts)
-    if bounds is not None:
-        # The `+ 0 * monotonically_increasing_id()` is a value-neutral
-        # NONDETERMINISM BARRIER, not dead code: the pid expression holds
-        # a HOF lambda with an outer reference, and Catalyst's
-        # InferFiltersFromConstraints mis-computes that lambda's reference
-        # set — it derives `pid_expr <=> __pack_pid` from the offset join
-        # and pushes it to the offset side, where the order column does
-        # not exist, producing an unresolvable `!Filter` that fails task
-        # binding (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND; reproduced with an
-        # int order column, pinned in test_packing.py). Constraints are
-        # only inferred from deterministic expressions, so the no-op
-        # nondeterministic term suppresses exactly this inference; the
-        # value is unchanged (x*0) under any retry.
-        pid = (
-            _pid_from_bounds(order_col, bounds).cast("long")
-            + F.lit(0) * F.monotonically_increasing_id()
-        ).cast("int")
-        part = df.withColumn(_PID, pid)
-    else:
+    n_parts = _prefix.bucket_count(spark, num_partitions)
+    part = _prefix.with_pid(df, order_col, _PID, n_parts)
+    if part is None:
         # the expensive path: a full wide-row localCheckpoint
         # materialization just to freeze the sampled range partitioning —
         # make hitting it with a non-numeric order column a VISIBLE choice
@@ -198,12 +85,7 @@ def cumulative_tokens(
         part = part.localCheckpoint(eager=False)
 
     group_cols = [_PID] + ([by] if by else [])
-    totals = (
-        part.groupBy(*group_cols)
-        .agg(F.sum(token_col).alias("t"))
-        .orderBy(*group_cols)
-        .collect()
-    )
+    totals = _prefix.pid_totals(part, _PID, F.sum(token_col).alias("t"), by=by)
     acc: Dict[object, int] = {}
     rows = []
     for row in totals:  # ordered by (pid) within each group's pid sequence

@@ -50,6 +50,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _prefix
+
 _SIDE = "__asof_side"
 _TS = "__asof_ts"
 _MATCH_TS = "__asof_match_ts"
@@ -167,13 +169,17 @@ def sequence_gaps(
 
     With ``key_cols`` the sort distributes on the keys (one exchange, one
     window).  WITHOUT keys a naive global window is a single-partition
-    sort — the anti-pattern — so the global mode range-partitions the
-    sequence instead: within-partition holes come from a window
-    partitioned by ``spark_partition_id()`` (range partitions are
-    ascending by pid, so in-partition order is global order), and the
-    ≤P−1 cross-partition boundary holes are stitched from the per-pid
-    min/max — an O(P)-row driver aggregate, the same two-level shape as
-    the packing prefix sum.
+    sort — the anti-pattern — so the global mode is the value-bounded
+    prefix-sum scaffold of :mod:`._prefix`: approximate-quantile bounds of
+    the sequence, computed once and embedded as plan literals, assign
+    every value a pid (ascending pid == ascending value, equal values
+    share a pid).  Holes inside a pid come from a window partitioned by
+    the pid; the ≤P−1 holes across pid boundaries are stitched on the
+    driver from the previous pid's max to the current pid's min, an
+    O(P)-row aggregate.  Both branches see the same literal bounds, so
+    the result is exact at any ``num_partitions`` (a requested pid-bucket
+    count, defaulting to twice the default parallelism).  The global mode
+    needs a numeric sequence column (``TypeError`` otherwise).
     """
     key_cols = list(key_cols or [])
     seq = F.col(seq_col)
@@ -194,18 +200,18 @@ def sequence_gaps(
         )
 
     spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
+    part = _prefix.with_pid(
+        df.filter(seq.isNotNull()).select(seq.alias("__seq")),
+        "__seq", "__pid", _prefix.bucket_count(spark, num_partitions),
     )
-    ranged = (
-        df.filter(seq.isNotNull())
-        .select(seq.alias("__seq"))
-        .repartitionByRange(n, F.col("__seq"))
-        .withColumn("__pid", F.spark_partition_id())
-    )
+    if part is None:
+        raise TypeError(
+            f"sequence_gaps needs a numeric sequence column; {seq_col!r} "
+            f"is {df.schema[seq_col].dataType.simpleString()}"
+        )
     w = Window.partitionBy("__pid").orderBy(F.col("__seq").asc())
     within = (
-        ranged.withColumn("__prev", F.lag("__seq").over(w))
+        part.withColumn("__prev", F.lag("__seq").over(w))
         .filter(F.col("__seq") - F.col("__prev") > 1)
         .select(
             (F.col("__prev") + 1).alias("gap_start"),
@@ -213,17 +219,14 @@ def sequence_gaps(
             (F.col("__seq") - F.col("__prev") - 1).alias("n_missing"),
         )
     )
-    # boundary holes between adjacent non-empty range partitions: O(P)
-    # rows to the driver, never the data
-    bounds = sorted(
-        ranged.groupBy("__pid")
-        .agg(F.min("__seq").alias("lo"), F.max("__seq").alias("hi"))
-        .collect(),
-        key=lambda r: r["__pid"],
+    # boundary holes between adjacent non-empty pids: O(P) rows to the
+    # driver, never the data
+    spans = _prefix.pid_totals(
+        part, "__pid", F.min("__seq").alias("lo"), F.max("__seq").alias("hi")
     )
     edge_rows = [
         (int(prev["hi"]) + 1, int(cur["lo"]) - 1, int(cur["lo"] - prev["hi"] - 1))
-        for prev, cur in zip(bounds, bounds[1:])
+        for prev, cur in zip(spans, spans[1:])
         if cur["lo"] - prev["hi"] > 1
     ]
     edges = spark.createDataFrame(

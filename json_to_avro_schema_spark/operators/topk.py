@@ -17,17 +17,7 @@ pays an extra shuffle for parallelism Catalyst already provides
 (BENCH/BASELINE.md "grouped top-K at a skewed scale point").
 
 :func:`grouped_topk` therefore uses the plain window and PINS the rewrite
-in its plan (tests/test_topk.py asserts the Partial WindowGroupLimit);
-:func:`grouped_topk_salted` keeps the manual salted two-phase for engines
-or configs without the rewrite (``spark.sql.window.group.limit.threshold``
-= -1 disables it).
-
-Exactness of the salted variant: a row in the global top-K of its group is
-necessarily in the top-K of its salt bucket (the bucket holds a subset of
-competitors), so phase 1 never drops a winner. Phase 2's input is bounded
-by G·S·K rows — independent of N. The salt is a deterministic hash of the
-row's tie-break columns (not a random number): results are reproducible
-across runs, retries, and repartitioning.
+in its plan (tests/test_topk.py asserts the Partial WindowGroupLimit).
 """
 
 from __future__ import annotations
@@ -38,14 +28,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _check_args(df: DataFrame, k: int, rank_col: str, working: set) -> None:
+def _check_args(df: DataFrame, k: int, rank_col: str) -> None:
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    clash = (working | {rank_col}) & set(df.columns)
-    if clash:
+    if rank_col in df.columns:
         raise ValueError(
-            f"grouped_topk working/output columns {sorted(clash)} already "
-            f"exist on the input — rename them or pass a different rank_col"
+            f"grouped_topk output column {rank_col!r} already exists on "
+            "the input — rename it or pass a different rank_col"
         )
 
 
@@ -69,49 +58,12 @@ def grouped_topk(
     docstring): the executed plan carries a Partial WindowGroupLimit before
     the exchange, so map tasks pre-prune to their local top-K and the
     post-shuffle per-group work is O(tasks × K), not O(N). ``tiebreak_cols``
-    / ``num_salts`` are accepted for signature compatibility with
-    :func:`grouped_topk_salted` (the manual fallback).
+    and ``num_salts`` are accepted and ignored.
     """
-    _check_args(df, k, rank_col, set())
+    _check_args(df, k, rank_col)
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
     return (
         df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
 
-
-def grouped_topk_salted(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_by: Sequence[Column],
-    tiebreak_cols: Sequence[str],
-    k: int,
-    *,
-    num_salts: Optional[int] = None,
-    rank_col: str = "rk",
-) -> DataFrame:
-    """Manual salted two-phase grouped top-K — the fallback when the
-    optimizer's WindowGroupLimit rewrite is unavailable or disabled.
-
-    phase 1  window over (group, salt) — |groups| × |salts| concurrent
-             sorts of N/(G·S) rows each; keep each bucket's local top-K
-    phase 2  exact window over the surviving |groups| × |salts| × K rows
-
-    Exactness and determinism per the module docstring; ``tiebreak_cols``
-    feed the salt hash and must appear in ``order_by``.
-    """
-    _check_args(df, k, rank_col, {"__salt", "__lrk"})
-    spark = df.sparkSession
-    s = num_salts or spark.sparkContext.defaultParallelism
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in tiebreak_cols]), F.lit(s))
-
-    w_local = Window.partitionBy(*group_cols, "__salt").orderBy(*order_by)
-    w_final = Window.partitionBy(*group_cols).orderBy(*order_by)
-    return (
-        df.withColumn("__salt", salt)
-        .withColumn("__lrk", F.row_number().over(w_local))
-        .filter(F.col("__lrk") <= k)
-        .drop("__salt", "__lrk")
-        .withColumn(rank_col, F.row_number().over(w_final))
-        .filter(F.col(rank_col) <= k)
-    )

@@ -166,6 +166,12 @@ def test_x_benford_table_check(spark):
             "properties": {"a": {"type": "number"}},
             "x-benford": [{"column": "a", "madThreshold": 0}],
         })
+    with pytest.raises(SpecCompileError, match="x-benford 'benford'.*column"):
+        compile_document({
+            "$id": "x://t/BFE2", "type": "object",
+            "properties": {"a": {"type": "number"}},
+            "x-benford": [{"madThreshold": 0.02}],
+        })
 
 
 def test_all_null_column_raises_cleanly(spark):

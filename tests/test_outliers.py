@@ -164,3 +164,9 @@ def test_x_outlier_table_check(spark, df):
             "properties": {"v": {"type": "number"}},
             "x-outlier": [{"column": "v", "maxFraction": 1.0}],
         })
+    with pytest.raises(SpecCompileError, match="x-outlier 'no_col'.*column"):
+        compile_document({
+            "$id": "x://t/OE3", "type": "object",
+            "properties": {"v": {"type": "number"}},
+            "x-outlier": [{"name": "no_col", "method": "iqr"}],
+        })

@@ -177,16 +177,16 @@ def test_pid_bucket_count_capped(spark, monkeypatch):
     """A huge num_partitions request (10^5-core-cluster default) must be
     capped at _MAX_PID_BUCKETS: the P-1 quantile bounds are plan literals
     scanned per row, so P must not track cluster size. Results unchanged."""
-    from json_to_avro_schema_spark.operators import packing
+    from json_to_avro_schema_spark.operators import _prefix
 
     seen = []
-    orig = packing._order_bounds
+    orig = _prefix._order_bounds
 
     def spy(df, order_col, n_parts):
         seen.append(n_parts)
         return orig(df, order_col, n_parts)
 
-    monkeypatch.setattr(packing, "_order_bounds", spy)
+    monkeypatch.setattr(_prefix, "_order_bounds", spy)
     df = _input(spark, n=2_000)
     got = {
         r["doc_id"]: (r["cum_tokens_before"], r["shard_id"])
@@ -202,7 +202,7 @@ def test_pid_bucket_count_capped(spark, monkeypatch):
         ).collect()
     }
     assert got == want
-    assert seen == [packing._MAX_PID_BUCKETS]
+    assert seen == [_prefix._MAX_PID_BUCKETS]
 
 
 def test_two_level_pid_scan_matches_flat(spark):
@@ -210,19 +210,19 @@ def test_two_level_pid_scan_matches_flat(spark):
     sqrt-blocked two-level scan — it must agree with the flat definition
     pid(x) = #{b <= x} everywhere, including duplicate bounds, values
     below/above every bound, and exact bound hits."""
-    from json_to_avro_schema_spark.operators import packing
+    from json_to_avro_schema_spark.operators import _prefix
 
     import random
 
     rnd = random.Random(7)
     bounds = sorted(rnd.randrange(0, 500) for _ in range(300))  # dupes likely
-    assert len(bounds) > packing._TWO_LEVEL_MIN
+    assert len(bounds) > _prefix._TWO_LEVEL_MIN
     vals = list(range(-3, 503))
     df = spark.createDataFrame([(v,) for v in vals], "x long")
     got = {
         r["x"]: r["pid"]
         for r in df.select(
-            "x", packing._pid_from_bounds("x", bounds).alias("pid")
+            "x", _prefix._pid_from_bounds("x", bounds).alias("pid")
         ).collect()
     }
     for v in vals:

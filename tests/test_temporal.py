@@ -397,6 +397,31 @@ def test_sequence_gaps_global_with_boundary_stitch(spark):
     assert got2 == [(2, 2)]
 
 
+def test_sequence_gaps_global_stable_under_coarse_sampling(spark):
+    """Every call must return the exact hole list. A range partitioner
+    re-samples its bounds in every query that evaluates it, so a window
+    branch and a boundary-stitch aggregate built on it can disagree on
+    where the partitions end; value-literal pid bounds cannot. A coarse
+    range-exchange sample makes any such disagreement near-certain."""
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    try:
+        df = spark.range(20_000).filter(F.col("id") % 13 != 0).toDF("seq")
+        want = [(m, m, 1) for m in range(13, 20_000, 13)]
+        for _ in range(3):
+            got = sorted(
+                (r["gap_start"], r["gap_end"], r["n_missing"])
+                for r in T.sequence_gaps(df, "seq", num_partitions=16).collect()
+            )
+            assert got == want
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def test_output_column_clash_guards(events, spark):
     with pytest.raises(ValueError, match="session_seq"):
         T.sessionize(events.withColumn("session_seq", F.lit(1)))

@@ -1,7 +1,5 @@
-"""Grouped top-K: the default path must carry Catalyst's Partial
-WindowGroupLimit (native two-phase, skew-proof); the manual salted fallback
-must equal the plain window exactly — salting changes parallelism, never
-results."""
+"""Grouped top-K: the path must carry Catalyst's Partial WindowGroupLimit
+(native two-phase, skew-proof) and equal the plain window exactly."""
 
 from __future__ import annotations
 
@@ -15,10 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from json_to_avro_schema_spark.operators.topk import (  # noqa: E402
-    grouped_topk,
-    grouped_topk_salted,
-)
+from json_to_avro_schema_spark.operators.topk import grouped_topk  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +43,7 @@ def _rows(df):
     return sorted(map(tuple, df.select("grp", "val", "id", "rk").collect()))
 
 
-@pytest.mark.parametrize("fn", [grouped_topk, grouped_topk_salted])
+@pytest.mark.parametrize("fn", [grouped_topk])
 def test_matches_plain_window_with_ties(spark, skewed_df, fn):
     got = fn(
         skewed_df,
@@ -60,7 +55,7 @@ def test_matches_plain_window_with_ties(spark, skewed_df, fn):
     assert _rows(got) == _rows(_plain(skewed_df, 7))
 
 
-@pytest.mark.parametrize("fn", [grouped_topk, grouped_topk_salted])
+@pytest.mark.parametrize("fn", [grouped_topk])
 def test_partition_independent_and_deterministic(spark, skewed_df, fn):
     a = _rows(
         fn(skewed_df, ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 5)
@@ -98,11 +93,6 @@ def test_working_column_clash_rejected(spark, skewed_df):
             skewed_df.withColumn("rk", F.lit(1)),
             ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 5,
         )
-    with pytest.raises(ValueError):
-        grouped_topk_salted(
-            skewed_df.withColumn("__salt", F.lit(1)),
-            ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 5,
-        )
 
 
 def test_default_path_has_partial_window_group_limit(spark, skewed_df):
@@ -120,16 +110,3 @@ def test_default_path_has_partial_window_group_limit(spark, skewed_df):
     assert "WindowGroupLimit" in plan, plan
     assert "Partial" in plan, plan
 
-
-def test_salted_phase_fans_out(spark, skewed_df):
-    """The fallback's phase-1 window must partition by (group, salt) — the
-    big sort is spread even without the optimizer rewrite."""
-    plan = (
-        grouped_topk_salted(
-            skewed_df, ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 5
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "__salt" in plan, plan
