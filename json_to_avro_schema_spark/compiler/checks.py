@@ -1,32 +1,34 @@
-"""Keyword → ``pyspark.sql.Column`` predicate generators (SURVEY.md §2.2).
+"""Keyword → Spark SQL predicate text generators (SURVEY.md §2.2).
 
 Every JSON-Schema keyword the reference's AST captures
 (/root/reference/src/main/scala/JsonSchema.scala:9-46) becomes a check
 generator here.  Semantics follow draft-6: a keyword constrains the value only
 when the value is present (non-null) and of the keyword's applicable type —
-so every value-level predicate is *null-gated*: ``expr.isNull() | pred``.
+so every value-level predicate is *null-gated*: ``expr IS NULL OR pred``.
 Requiredness (``required``) is compiled separately as ``isNotNull`` checks,
 mirroring the reference's optionality rewrite (Transpiler.scala:203-211:
 not-required ⇒ union[null, T] ⇒ null passes).
 
-All predicates are built from JVM-side ``pyspark.sql.functions`` (higher-order
-functions for arrays/maps) so they stay inside whole-stage codegen — zero
-Python UDFs on this path.
+Each generator takes the SQL text of the value it constrains and returns the
+SQL text of a boolean predicate (built with the helpers in ``sql.py``), so a
+whole check is one string the runner hands to Spark in one call. Predicates
+use only JVM-side built-ins (higher-order functions for arrays/maps), so they
+stay inside whole-stage codegen — zero Python UDFs on this path.
 """
 
 from __future__ import annotations
 
 import json
-import math
 from typing import Any, List
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..errors import SpecCompileError
-from ..spec.model import UNSET, ConstraintSpec, JSchema
-from .types import carrier_type, is_null_arm, union_arms
+from ..spec.model import UNSET, ConstraintSpec, JSchema, is_empty_spec
+from .sql import (
+    ADD, MUL, Sql, and_, binop, call, cast, chain, cmp, coalesce_false, field,
+    is_not_null, is_null, isin, lam, lit, not_, or_, rlike, struct, when,
+)
+from .types import carrier_type, has_null_arm, is_null_arm, union_arms
 
 DOUBLE_EPS = 1e-9
 
@@ -88,64 +90,41 @@ CONTENT_ENCODING_REGEX = {
 }
 
 
-def gate(expr: Column, pred: Column) -> Column:
+def gate(expr: str, pred: str) -> Sql:
     """Null-gate: an absent value passes every value-level constraint."""
-    return expr.isNull() | pred
+    return or_(is_null(expr), pred)
 
 
-def node_predicate(s: JSchema, expr: Column, path: str = "$") -> Column:
+def node_predicate(s: JSchema, expr: str, path: str = "$") -> Sql:
     """Full null-gated conformance predicate for a (ref-free) spec node."""
     return gate(expr, value_predicate(s, expr, path))
 
 
-def element_predicate(s: JSchema, e: Column, path: str) -> Column:
+def element_predicate(s: JSchema, e: str, path: str) -> Sql:
     """Predicate for array elements / map values: unlike struct fields, a
     null element is a VALUE (JSON null), not an absent field — it conforms
     only when the element spec admits type null."""
-    if s is True:
-        return F.lit(True)
-    if s is False:
-        return F.lit(False)
+    if s is True or s is False:
+        return lit(s)
     assert isinstance(s, ConstraintSpec)
-    from ..spec.model import is_empty_spec
-    from .types import has_null_arm as _hna
-
-    allow_null = _hna(s) or s.types == ("null",) or is_empty_spec(s)
-    return F.when(e.isNull(), F.lit(allow_null)).otherwise(
-        _as_bool(value_predicate(s, e, path))
-    )
+    allow_null = has_null_arm(s) or s.types == ("null",) or is_empty_spec(s)
+    return when(is_null(e), lit(allow_null), coalesce_false(value_predicate(s, e, path)))
 
 
-def value_predicate(s: JSchema, expr: Column, path: str = "$") -> Column:
+def value_predicate(s: JSchema, expr: str, path: str = "$") -> Sql:
     """Conformance predicate assuming ``expr`` is non-null."""
-    if s is True:
-        return F.lit(True)
-    if s is False:
-        return F.lit(False)
+    if s is True or s is False:
+        return lit(s)
     assert isinstance(s, ConstraintSpec)
-    preds = all_keyword_predicates(s, expr, path)
-    return _conj(preds)
-
-
-def _conj(preds: List[Column]) -> Column:
-    if not preds:
-        return F.lit(True)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out & p
-    return out
-
-
-def _as_bool(c: Column) -> Column:
-    return F.coalesce(c, F.lit(False))
+    return and_(*all_keyword_predicates(s, expr, path))
 
 
 def all_keyword_predicates(
-    s: ConstraintSpec, expr: Column, path: str
-) -> List[Column]:
+    s: ConstraintSpec, expr: str, path: str
+) -> List[Sql]:
     """One predicate per applicable keyword; conjunction = node conformance."""
     dtype = carrier_type(s, path)
-    preds: List[Column] = []
+    preds: List[Sql] = []
 
     # --- union shapes (type unions / oneOf) -------------------------------
     arms = union_arms(s)
@@ -159,7 +138,7 @@ def all_keyword_predicates(
 
     # --- type: null → value must be absent --------------------------------
     if s.types == ("null",):
-        preds.append(F.lit(False))  # gated: only null passes
+        preds.append(lit(False))  # gated: only null passes
         return preds
 
     preds.extend(_scalar_keyword_predicates(s, expr, dtype))
@@ -171,8 +150,8 @@ def all_keyword_predicates(
 # ------------------------------------------------------------- scalar kws
 
 def _scalar_keyword_predicates(
-    s: ConstraintSpec, expr: Column, dtype: T.DataType
-) -> List[Column]:
+    s: ConstraintSpec, expr: str, dtype: T.DataType
+) -> List[Sql]:
     """Scalar keyword predicates.
 
     Typed specs apply each keyword family on the declared carrier. An
@@ -181,74 +160,69 @@ def _scalar_keyword_predicates(
     enforce its keywords per draft-6: the engine casts the value to the
     keyword's domain and null-gates the cast, so values outside the domain
     pass (draft-6: a keyword constrains only its own type)."""
-    preds: List[Column] = []
+    preds: List[Sql] = []
     untyped = not s.types
 
     if s.const is not UNSET:
         preds.append(_const_predicate(s.const, expr))
 
     if s.enum:
-        preds.append(expr.isin(*[v for v in s.enum]))
+        preds.append(isin(expr, s.enum))
 
     numeric = isinstance(dtype, (T.LongType, T.DoubleType, T.IntegerType))
     if numeric or untyped:
-        num = expr if numeric else expr.cast("double")
+        num = expr if numeric else cast(expr, "DOUBLE")
 
-        def ngate(pred: Column) -> Column:
-            return pred if numeric else (num.isNull() | pred)
+        def ngate(pred: Sql) -> Sql:
+            return pred if numeric else or_(is_null(num), pred)
 
-        if s.minimum is not None:
-            preds.append(ngate(num >= F.lit(s.minimum)))
-        if s.maximum is not None:
-            preds.append(ngate(num <= F.lit(s.maximum)))
-        if s.exclusive_minimum is not None:
-            preds.append(ngate(num > F.lit(s.exclusive_minimum)))
-        if s.exclusive_maximum is not None:
-            preds.append(ngate(num < F.lit(s.exclusive_maximum)))
+        for op, bound in (
+            (">=", s.minimum), ("<=", s.maximum),
+            (">", s.exclusive_minimum), ("<", s.exclusive_maximum),
+        ):
+            if bound is not None:
+                preds.append(ngate(cmp(num, op, bound)))
         if s.multiple_of is not None:
             m = s.multiple_of
             if isinstance(dtype, T.LongType) and float(m).is_integer():
-                preds.append(F.pmod(expr, F.lit(int(m))) == 0)
+                preds.append(cmp(call("pmod", expr, lit(int(m))), "=", 0))
             else:
                 # double semantics need epsilon care (SURVEY.md §7)
-                ratio = num / F.lit(float(m))
-                preds.append(ngate(F.abs(ratio - F.round(ratio)) < F.lit(DOUBLE_EPS)))
+                ratio = binop("/", MUL, num, lit(float(m)))
+                off = binop("-", ADD, ratio, call("round", ratio))
+                preds.append(ngate(cmp(call("abs", off), "<", DOUBLE_EPS)))
 
     stringish = isinstance(dtype, T.StringType) or (
         untyped and not isinstance(dtype, (T.ArrayType, T.MapType, T.StructType))
     )
     if stringish:
-        sv = expr if isinstance(dtype, T.StringType) else expr.cast("string")
+        sv = expr if isinstance(dtype, T.StringType) else cast(expr, "STRING")
         if s.min_length > 0:
-            preds.append(F.length(sv) >= F.lit(s.min_length))
+            preds.append(cmp(call("length", sv), ">=", s.min_length))
         if s.max_length is not None:
-            preds.append(F.length(sv) <= F.lit(s.max_length))
+            preds.append(cmp(call("length", sv), "<=", s.max_length))
         if s.pattern is not None:
-            preds.append(sv.rlike(s.pattern))
+            preds.append(rlike(sv, s.pattern))
         if s.format is not None and s.format in FORMAT_REGEX:
-            preds.append(sv.rlike(FORMAT_REGEX[s.format]))
+            preds.append(rlike(sv, FORMAT_REGEX[s.format]))
         enc = (s.content_encoding or "").lower()
         if enc in CONTENT_ENCODING_REGEX:
-            preds.append(sv.rlike(CONTENT_ENCODING_REGEX[enc]))
+            preds.append(rlike(sv, CONTENT_ENCODING_REGEX[enc]))
         mt = (s.content_media_type or "").lower()
         if mt == "application/json" or mt.endswith("+json"):
             # draft-7 §8.4: the media type describes the DECODED content.
             # Gate on the encoding's syntax so the decoder never sees junk
             # (a failed gate nulls the pred → the row already fails via
-            # the encoding check, and _as_bool treats null as
+            # the encoding check, and coalesce_false treats null as
             # non-conforming). Encodings the engine cannot decode
             # (quoted-printable, ...) make the media type annotation-only
             # — asserting JSON-ness of the TRANSPORT form would reject
             # spec-valid values.
-            if enc == "base64":
-                payload = F.when(
-                    sv.rlike(CONTENT_ENCODING_REGEX["base64"]),
-                    F.unbase64(sv).cast("string"),
-                )
-            elif enc == "base16":
-                payload = F.when(
-                    sv.rlike(CONTENT_ENCODING_REGEX["base16"]),
-                    F.unhex(sv).cast("string"),
+            decoders = {"base64": "unbase64", "base16": "unhex"}
+            if enc in decoders:
+                payload = when(
+                    rlike(sv, CONTENT_ENCODING_REGEX[enc]),
+                    cast(call(decoders[enc], sv), "STRING"),
                 )
             elif s.content_encoding is None or enc in ("7bit", "8bit", "binary"):
                 # RFC-2045 identity encodings: the content IS the value
@@ -256,34 +230,35 @@ def _scalar_keyword_predicates(
             else:
                 payload = None
             if payload is not None:
-                preds.append(F.try_parse_json(payload).isNotNull())
+                preds.append(is_not_null(call("try_parse_json", payload)))
 
     return preds
 
 
-def _const_predicate(const: Any, expr: Column) -> Column:
+def _const_predicate(const: Any, expr: str) -> Sql:
     if const is None:
-        return F.lit(False)  # gated: only null passes
+        return lit(False)  # gated: only null passes
     if isinstance(const, (bool, int, float, str)):
-        return expr == F.lit(const)
+        return cmp(expr, "=", const)
     # complex const → structural comparison through canonical JSON
-    return F.to_json(expr) == F.lit(json.dumps(const, separators=(",", ":")))
+    return cmp(call("to_json", expr), "=", json.dumps(const, separators=(",", ":")))
 
 
 # ---------------------------------------------------------- container kws
 
 def _container_keyword_predicates(
-    s: ConstraintSpec, expr: Column, dtype: T.DataType, path: str
-) -> List[Column]:
-    preds: List[Column] = []
+    s: ConstraintSpec, expr: str, dtype: T.DataType, path: str
+) -> List[Sql]:
+    preds: List[Sql] = []
 
     if isinstance(dtype, T.ArrayType):
+        size = call("size", expr)
         if s.min_items > 0:
-            preds.append(F.size(expr) >= F.lit(s.min_items))
+            preds.append(cmp(size, ">=", s.min_items))
         if s.max_items is not None:
-            preds.append(F.size(expr) <= F.lit(s.max_items))
+            preds.append(cmp(size, "<=", s.max_items))
         if s.unique_items:
-            preds.append(F.size(expr) == F.size(F.array_distinct(expr)))
+            preds.append(cmp(size, "=", call("size", call("array_distinct", expr))))
         if (
             s.items is not None
             and not isinstance(s.items, tuple)
@@ -299,10 +274,8 @@ def _container_keyword_predicates(
                 )
             )
         elif s.items is not None and not isinstance(s.items, tuple):
-            items = s.items
-            preds.append(
-                F.forall(expr, lambda e: element_predicate(items, e, f"{path}[]"))
-            )
+            preds.append(call("forall", expr, lam(
+                lambda e: element_predicate(s.items, e, f"{path}[]"), "e")))
         if isinstance(s.items, tuple):
             # positional (tuple-form) items on an array carrier: index k is
             # constrained only when the array is long enough (draft-6:
@@ -310,29 +283,25 @@ def _container_keyword_predicates(
             # (Transpiler.scala:290)
             n_tuple = len(s.items)
             for k, it in enumerate(s.items):
-                preds.append(
-                    F.when(F.size(expr) <= F.lit(k), F.lit(True)).otherwise(
-                        element_predicate(it, F.element_at(expr, k + 1), f"{path}[{k}]")
-                    )
-                )
-            if s.additional_items is False:
-                preds.append(F.size(expr) <= F.lit(n_tuple))
-            elif s.additional_items is not None and s.additional_items is not True:
-                ai = s.additional_items
-                rest = F.filter(expr, lambda e, i: i >= F.lit(n_tuple))
-                preds.append(
-                    F.forall(rest, lambda e: element_predicate(ai, e, f"{path}[+]"))
-                )
-        if s.contains is not None:
-            contains = s.contains
-            preds.append(
-                F.exists(
-                    expr,
-                    lambda e: _as_bool(
-                        e.isNotNull() & value_predicate(contains, e, f"{path}[c]")
+                preds.append(when(
+                    cmp(size, "<=", k), lit(True),
+                    element_predicate(
+                        it, call("element_at", expr, lit(k + 1)), f"{path}[{k}]"
                     ),
-                )
-            )
+                ))
+            if s.additional_items is False:
+                preds.append(cmp(size, "<=", n_tuple))
+            elif s.additional_items is not None and s.additional_items is not True:
+                rest = call("filter", expr, lam(lambda e, i: cmp(i, ">=", n_tuple), "e", "i"))
+                preds.append(call("forall", rest, lam(
+                    lambda e: element_predicate(s.additional_items, e, f"{path}[+]"), "e")))
+        if s.contains is not None:
+            preds.append(call("exists", expr, lam(
+                lambda e: coalesce_false(and_(
+                    is_not_null(e), value_predicate(s.contains, e, f"{path}[c]")
+                )),
+                "e",
+            )))
         if s.x_monotonic and not (
             s.items is not None and not isinstance(s.items, tuple)
         ):
@@ -342,36 +311,26 @@ def _container_keyword_predicates(
                 preds.append(monotonic_increasing(expr, fname, elem_t))
 
     if isinstance(dtype, T.MapType):
-        keys = F.map_keys(expr)
+        keys = call("map_keys", expr)
         if s.min_properties > 0:
-            preds.append(F.size(keys) >= F.lit(s.min_properties))
+            preds.append(cmp(call("size", keys), ">=", s.min_properties))
         if s.max_properties is not None:
-            preds.append(F.size(keys) <= F.lit(s.max_properties))
+            preds.append(cmp(call("size", keys), "<=", s.max_properties))
         if s.property_names is not None:
-            pn = s.property_names
-            preds.append(
-                F.forall(keys, lambda k: _as_bool(value_predicate(pn, k, f"{path}.<k>")))
-            )
+            preds.append(call("forall", keys, lam(
+                lambda k: coalesce_false(value_predicate(s.property_names, k, f"{path}.<k>")),
+                "k",
+            )))
         if (
             s.additional_properties is not None
             and s.additional_properties is not True
         ):
-            ap = s.additional_properties
-            preds.append(
-                F.forall(
-                    F.map_values(expr),
-                    lambda v: element_predicate(ap, v, f"{path}.<v>"),
-                )
-            )
+            preds.append(call("forall", call("map_values", expr), lam(
+                lambda v: element_predicate(s.additional_properties, v, f"{path}.<v>"), "v")))
         for pat, sub in s.pattern_properties.items():
-            matching = F.map_filter(expr, lambda k, v: k.rlike(pat))
-            sub_s = sub
-            preds.append(
-                F.forall(
-                    F.map_values(matching),
-                    lambda v: element_predicate(sub_s, v, f"{path}.<p>"),
-                )
-            )
+            matching = call("map_filter", expr, lam(lambda k, v: rlike(k, pat), "k", "v"))
+            preds.append(call("forall", call("map_values", matching), lam(
+                lambda v: element_predicate(sub, v, f"{path}.<p>"), "v")))
 
     if isinstance(dtype, T.StructType) and isinstance(s.items, tuple) and not s.properties:
         # heterogeneous tuple carried as fixed-width struct (i0..iN): each
@@ -379,35 +338,34 @@ def _container_keyword_predicates(
         # which draft-6 allows, so node_predicate's gate applies. minItems
         # translates to the first minItems positions being present.
         for k, it in enumerate(s.items):
-            preds.append(node_predicate(it, expr[f"i{k}"], f"{path}[{k}]"))
+            preds.append(node_predicate(it, field(expr, f"i{k}"), f"{path}[{k}]"))
         if s.min_items > 0:
             for k in range(min(s.min_items, len(s.items))):
-                preds.append(expr[f"i{k}"].isNotNull())
+                preds.append(is_not_null(field(expr, f"i{k}")))
 
     if isinstance(dtype, T.StructType) and s.properties:
         for name, sub in s.properties.items():
-            preds.append(node_predicate(sub, expr[name], f"{path}.{name}"))
+            preds.append(node_predicate(sub, field(expr, name), f"{path}.{name}"))
         for name in s.required:
             if name in s.properties:
-                preds.append(expr[name].isNotNull())
+                preds.append(is_not_null(field(expr, name)))
         for dep_key, dep in s.dependencies.items():
-            present = expr[dep_key].isNotNull()
             if isinstance(dep, tuple):
-                need = _conj([expr[d].isNotNull() for d in dep])
+                need = and_(*[is_not_null(field(expr, d)) for d in dep])
             else:
                 need = value_predicate(dep, expr, f"{path}.dep[{dep_key}]")
-            preds.append(~present | need)
+            preds.append(or_(not_(is_not_null(field(expr, dep_key))), need))
 
     return preds
 
 
 def _fused_items_monotonic(
-    expr: Column,
+    expr: str,
     items: "ConstraintSpec",
     fields: List[str],
     elem_type: T.DataType,
     path: str,
-) -> Column:
+) -> Sql:
     """One ``aggregate`` traversal checking BOTH per-element conformance
     (the uniform-``items`` forall) and strict monotonicity of each field in
     ``fields``. Semantics are exactly forall(items) AND monotonic(f) for
@@ -416,134 +374,112 @@ def _fused_items_monotonic(
     instead of 1 + len(fields) times, which at 10^12 rows is a full extra
     pass over the dominant column saved per fused check.
     """
-    def value_of(x: Column, field: str) -> Column:
-        return x[field] if isinstance(elem_type, T.StructType) else x
+    def value_of(x: str, fname: str) -> Sql:
+        return field(x, fname) if isinstance(elem_type, T.StructType) else x
 
-    init = F.struct(
-        *[F.lit(None).cast("long").alias(f"prev_{i}") for i in range(len(fields))],
-        F.lit(True).alias("ok"),
+    init = struct(
+        **{f"prev_{i}": cast("NULL", "BIGINT") for i in range(len(fields))},
+        ok=lit(True),
     )
 
-    def step(acc: Column, x: Column) -> Column:
-        ok = acc["ok"] & element_predicate(items, x, f"{path}[]")
-        prevs = []
+    def step(acc: Sql, x: Sql) -> Sql:
+        ok = and_(field(acc, "ok"), element_predicate(items, x, f"{path}[]"))
+        prevs = {}
         for i, fname in enumerate(fields):
-            v = value_of(x, fname)
-            mono = F.coalesce(
-                F.when(acc[f"prev_{i}"].isNull(), v.isNotNull()).otherwise(
-                    v > acc[f"prev_{i}"]
-                ),
-                F.lit(False),
-            )
-            ok = ok & mono
-            prevs.append(v.cast("long").alias(f"prev_{i}"))
-        return F.struct(*prevs, ok.alias("ok"))
+            ok = and_(ok, _increases(field(acc, f"prev_{i}"), value_of(x, fname)))
+            prevs[f"prev_{i}"] = cast(value_of(x, fname), "BIGINT")
+        return struct(**prevs, ok=ok)
 
-    return F.aggregate(expr, init, step, lambda acc: _as_bool(acc["ok"]))
+    return call("aggregate", expr, init, lam(step, "acc", "x"),
+                lam(lambda acc: coalesce_false(field(acc, "ok")), "acc"))
+
+
+def _increases(prev: str, v: str) -> Sql:
+    """``v`` follows ``prev`` strictly increasing (the first element only
+    needs to be present); null fails closed."""
+    return coalesce_false(when(is_null(prev), is_not_null(v), cmp(v, ">", prev)))
 
 
 def monotonic_increasing(
-    expr: Column, field: str, elem_type: T.DataType
-) -> Column:
-    """Engine extension: struct-array element ``field`` strictly increasing.
+    expr: str, fname: str, elem_type: T.DataType
+) -> Sql:
+    """Engine extension: struct-array element ``fname`` strictly increasing.
 
     Single-pass ``aggregate`` with a (prev, ok) accumulator — no intermediate
     array allocations (a slice+zip_with formulation allocates 3 arrays per
     row, measurable at 10^12 rows). Null elements/fields fail closed.
     This is the span ``offset`` ordering invariant for interleaved documents.
     """
-    def value_of(x: Column) -> Column:
-        return x[field] if isinstance(elem_type, T.StructType) else x
+    def value_of(x: str) -> Sql:
+        return field(x, fname) if isinstance(elem_type, T.StructType) else x
 
-    init = F.struct(
-        F.lit(None).cast("long").alias("prev"), F.lit(True).alias("ok")
-    )
-    return F.aggregate(
-        expr,
-        init,
-        lambda acc, x: F.struct(
-            value_of(x).cast("long").alias("prev"),
-            (
-                acc["ok"]
-                & F.coalesce(
-                    F.when(acc["prev"].isNull(), value_of(x).isNotNull()).otherwise(
-                        value_of(x) > acc["prev"]
-                    ),
-                    F.lit(False),
-                )
-            ).alias("ok"),
-        ),
-        lambda acc: _as_bool(acc["ok"]),
-    )
+    init = struct(prev=cast("NULL", "BIGINT"), ok=lit(True))
+    step = lam(lambda acc, x: struct(
+        prev=cast(value_of(x), "BIGINT"),
+        ok=and_(field(acc, "ok"), _increases(field(acc, "prev"), value_of(x))),
+    ), "acc", "x")
+    return call("aggregate", expr, init, step,
+                lam(lambda acc: coalesce_false(field(acc, "ok")), "acc"))
 
 
 # ------------------------------------------------------------ combinators
 
 def _combinator_predicates(
-    s: ConstraintSpec, expr: Column, path: str
-) -> List[Column]:
-    preds: List[Column] = []
+    s: ConstraintSpec, expr: str, path: str
+) -> List[Sql]:
+    preds: List[Sql] = []
     if s.all_of:
-        preds.append(
-            _conj([value_predicate(a, expr, f"{path}&{i}") for i, a in enumerate(s.all_of)])
-        )
+        preds.append(and_(*[
+            value_predicate(a, expr, f"{path}&{i}") for i, a in enumerate(s.all_of)
+        ]))
     if s.any_of:
-        disj = F.lit(False)
-        for i, a in enumerate(s.any_of):
-            disj = disj | _as_bool(value_predicate(a, expr, f"{path}|{i}"))
-        preds.append(disj)
+        preds.append(or_(lit(False), *[
+            coalesce_false(value_predicate(a, expr, f"{path}|{i}"))
+            for i, a in enumerate(s.any_of)
+        ]))
     if s.not_ is not None:
-        preds.append(~_as_bool(value_predicate(s.not_, expr, f"{path}!")))
+        preds.append(not_(coalesce_false(value_predicate(s.not_, expr, f"{path}!"))))
     if s.if_ is not None:
         # draft-7 conditional (beyond the reference's draft-6 surface):
         # if matches -> then must hold; else -> else must hold. Absent
         # branches default to true; then/else without if are inert per spec.
-        cond = _as_bool(value_predicate(s.if_, expr, f"{path}?"))
-        then_ok = (
-            _as_bool(value_predicate(s.then_, expr, f"{path}?t"))
-            if s.then_ is not None else F.lit(True)
-        )
-        else_ok = (
-            _as_bool(value_predicate(s.else_, expr, f"{path}?e"))
-            if s.else_ is not None else F.lit(True)
-        )
-        preds.append(F.when(cond, then_ok).otherwise(else_ok))
+        def branch(sub: JSchema, tag: str) -> Sql:
+            if sub is None:
+                return lit(True)
+            return coalesce_false(value_predicate(sub, expr, f"{path}?{tag}"))
+
+        preds.append(when(branch(s.if_, ""), branch(s.then_, "t"), branch(s.else_, "e")))
     return preds
 
 
 def _union_predicate(
     s: ConstraintSpec,
     arms,
-    expr: Column,
+    expr: str,
     dtype: T.DataType,
     path: str,
-) -> Column:
+) -> Sql:
     value_arms = [(n, a) for n, a in arms if not is_null_arm(a) and a is not True]
 
     if isinstance(dtype, T.StructType) and value_arms and all(
         f.name == n for f, (n, _) in zip(dtype.fields, value_arms)
     ):
         # tagged struct of optional arms: exactly one non-null + that arm passes
-        present = [expr[n].isNotNull().cast("int") for n, _ in value_arms]
-        exactly_one = sum(present[1:], present[0]) == F.lit(1)
-        arms_ok = _conj(
-            [
-                gate(expr[n], value_predicate(a, expr[n], f"{path}^{n}"))
-                for n, a in value_arms
-            ]
-        )
-        return exactly_one & arms_ok
+        present = [cast(is_not_null(field(expr, n)), "INT") for n, _ in value_arms]
+        exactly_one = cmp(chain("+", ADD, present, "0"), "=", 1)
+        arms_ok = and_(*[
+            gate(field(expr, n), value_predicate(a, field(expr, n), f"{path}^{n}"))
+            for n, a in value_arms
+        ])
+        return and_(exactly_one, arms_ok)
 
     # scalar-collapsed union: exactly one arm's constraints hold
     arm_preds = [
-        _as_bool(value_predicate(a, expr, f"{path}^{i}")).cast("int")
+        cast(coalesce_false(value_predicate(a, expr, f"{path}^{i}")), "INT")
         for i, (n, a) in enumerate(value_arms)
     ]
     if not arm_preds:
-        return F.lit(True)
-    total = arm_preds[0]
-    for p in arm_preds[1:]:
-        total = total + p
+        return lit(True)
     # oneOf = exactly one; multi-valued `type` = at least one (a JSON value
     # has exactly one type, so ==1 and >=1 coincide there)
-    return total == F.lit(1) if s.one_of else total >= F.lit(1)
+    return cmp(chain("+", ADD, arm_preds, "0"), "=" if s.one_of else ">=", 1)

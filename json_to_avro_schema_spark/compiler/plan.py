@@ -10,8 +10,10 @@ driver-side pipeline — parse (P3) → $id normalization (P4) → symbol table 
       row_checks      : list[RowCheck]            (§2.2 keyword predicates)
       unique/ref/drift/stats checks               (§2.3 table-level config) }
 
-Everything here is pure driver-side Python; Column objects are built lazily
-(factories) so a plan can be compiled and inspected without a SparkSession.
+Everything here is pure driver-side Python. Each row check is lowered to one
+Spark SQL boolean expression (``RowCheck.sql``, built by ``checks.py``), so a
+plan compiles and prints without a SparkSession, and the runner hands each
+check to Spark as a single string.
 
 Table-level checks are declared with engine extension keywords at the spec
 root (no JSON-Schema counterpart — these are the north-rule operators):
@@ -32,10 +34,8 @@ from __future__ import annotations
 import hashlib
 import json
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Callable, Dict, List, Optional, Tuple
+from typing import Any, Dict, List, Optional, Tuple
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import SpecCompileError, SpecParseError
@@ -45,6 +45,7 @@ from ..spec.parser import parse_root
 from ..spec.symbols import resolve_symbols
 from .checks import gate, node_predicate, value_predicate
 from .names import sanitize_check_name
+from .sql import and_, call, ident, is_not_null, is_null, not_, or_
 from .refs import inline_refs
 from .types import carrier_type, has_null_arm
 
@@ -53,19 +54,17 @@ from .types import carrier_type, has_null_arm
 class RowCheck:
     """A named per-row predicate; True = row passes this check.
 
-    ``severity`` is the expectation level (spec keyword ``x-severity``):
-    "enforce" failures make the row a violation; "warn" failures are
-    reported in the verdicts but leave the row valid.
+    ``sql`` is the predicate as one Spark SQL boolean expression over the
+    row's columns. ``severity`` is the expectation level (spec keyword
+    ``x-severity``): "enforce" failures make the row a violation; "warn"
+    failures are reported in the verdicts but leave the row valid.
     """
 
     name: str
     path: str
     description: str
-    factory: Callable[[], Column]
+    sql: str
     severity: str = "enforce"
-
-    def predicate(self) -> Column:
-        return self.factory()
 
 
 @dataclass(frozen=True)
@@ -226,11 +225,7 @@ class CompiledPlan:
                                 f"undeclared column '{name}' matches "
                                 f"patternProperties /{pat}/ and conforms"
                             ),
-                            factory=(
-                                lambda n=name, s=sub: node_predicate(
-                                    s, F.col(n), f"$.{n}"
-                                )
-                            ),
+                            sql=node_predicate(sub, ident(name), f"$.{name}"),
                         )
                     )
             if matched:
@@ -249,7 +244,7 @@ class CompiledPlan:
                             f"additionalProperties: false — undeclared column "
                             f"'{name}' must be absent (null)"
                         ),
-                        factory=(lambda n=name: F.col(n).isNull()),
+                        sql=is_null(ident(name)),
                     )
                 )
             else:
@@ -263,9 +258,7 @@ class CompiledPlan:
                             f"undeclared column '{name}' conforms to "
                             "additionalProperties"
                         ),
-                        factory=(
-                            lambda n=name, s=ap: node_predicate(s, F.col(n), f"$.{n}")
-                        ),
+                        sql=node_predicate(ap, ident(name), f"$.{name}"),
                     )
                 )
         if not extra_checks:
@@ -429,10 +422,6 @@ def _as_struct(dt: T.DataType) -> T.StructType:
 
 # ------------------------------------------------------------- row checks
 
-def _col(name: str) -> Callable[[], Column]:
-    return lambda: F.col(name)
-
-
 def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
     root_name = plan.spec_name
 
@@ -443,7 +432,7 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
                 name=sanitize_check_name("value__conforms", root_name),
                 path="$.value",
                 description="root oneOf: exactly one alternative passes",
-                factory=lambda: node_predicate(value_spec, F.col("value"), "$.value"),
+                sql=node_predicate(value_spec, ident("value"), "$.value"),
             )
         )
         if not has_null_arm(spec):
@@ -452,7 +441,7 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
                     name=sanitize_check_name("value__required", root_name),
                     path="$.value",
                     description="root oneOf value must be present",
-                    factory=lambda: F.col("value").isNotNull(),
+                    sql=is_not_null(ident("value")),
                 )
             )
         return
@@ -471,7 +460,7 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
                 name=sanitize_check_name(f"{prop}__required", root_name),
                 path=f"$.{prop}",
                 description=f"required property '{prop}' must be non-null",
-                factory=(lambda p=prop: F.col(p).isNotNull()),
+                sql=is_not_null(ident(prop)),
                 severity=_severity(prop),
             )
         )
@@ -489,9 +478,7 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
                 name=sanitize_check_name(f"{prop}__conforms", root_name),
                 path=f"$.{prop}",
                 description=desc,
-                factory=(
-                    lambda p=prop, s=sub: node_predicate(s, F.col(p), f"$.{p}")
-                ),
+                sql=node_predicate(sub, ident(prop), f"$.{prop}"),
                 severity=_severity(prop),
             )
         )
@@ -503,9 +490,9 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
                     name=sanitize_check_name(f"{dep_key}__dependencies", root_name),
                     path=f"$.{dep_key}",
                     description=f"if '{dep_key}' present then {list(dep)} present",
-                    factory=(
-                        lambda k=dep_key, d=dep: ~F.col(k).isNotNull()
-                        | _conj_cols([F.col(x).isNotNull() for x in d])
+                    sql=or_(
+                        not_(is_not_null(ident(dep_key))),
+                        and_(*[is_not_null(ident(x)) for x in dep]),
                     ),
                 )
             )
@@ -515,25 +502,18 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
                     name=sanitize_check_name(f"{dep_key}__dependencies", root_name),
                     path=f"$.{dep_key}",
                     description=f"if '{dep_key}' present then dependent schema holds",
-                    factory=(
-                        lambda k=dep_key, d=dep, s=spec: ~F.col(k).isNotNull()
-                        | _row_schema_predicate(d, s)
+                    sql=or_(
+                        not_(is_not_null(ident(dep_key))),
+                        _row_schema_predicate(dep, spec),
                     ),
                 )
             )
 
 
-def _row_schema_predicate(dep: JSchema, parent: ConstraintSpec) -> Column:
+def _row_schema_predicate(dep: JSchema, parent: ConstraintSpec) -> str:
     """Apply a schema-form dependency against the whole row (as a struct)."""
-    row = F.struct(*[F.col(p) for p in parent.properties])
+    row = call("struct", *[ident(p) for p in parent.properties])
     return gate(row, value_predicate(dep, row, "$"))
-
-
-def _conj_cols(cols: List[Column]) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out & c
-    return out
 
 
 def _assert_string_enums(s: JSchema, path: str) -> None:
@@ -697,6 +677,44 @@ def _compile_extensions(doc: Dict[str, Any], plan: CompiledPlan) -> None:
                 name=sanitize_check_name(c["name"], plan.spec_name),
                 path="$",
                 description=c.get("description", c["expr"]),
-                factory=(lambda e=c["expr"]: F.expr(e)),
+                sql=_closed_expr(c["name"], c["expr"]),
             )
         )
+
+
+def _closed_expr(name: str, text: str) -> str:
+    """An ``x-checks`` expression, verified to be ONE self-contained SQL
+    expression: quotes and backticks closed, parentheses balanced, no
+    comment, no top-level comma or semicolon. The runner splices each check
+    into its own projection (``coalesce(<expr>, false) AS <column>``), so a
+    text that passes cannot reach past its own check; anything else is a
+    SpecCompileError naming the check."""
+    depth, i, n = 0, 0, len(text)
+
+    def reject(why: str) -> SpecCompileError:
+        return SpecCompileError(f"x-checks '{name}': {why} in {text!r}")
+
+    while i < n:
+        ch = text[i]
+        if ch in "'\"`":
+            # r'...' (at a token start) is a raw string: no escapes inside
+            raw = (ch != "`" and text[i - 1:i] in ("r", "R")
+                   and not (text[i - 2:i - 1].isalnum() or text[i - 2:i - 1] == "_"))
+            j = i + 1
+            while j < n and text[j] != ch:
+                j += 2 if text[j] == "\\" and ch != "`" and not raw else 1
+            if j >= n:
+                raise reject(f"unterminated {ch}")
+            i = j + 1
+            continue
+        if text.startswith(("--", "/*"), i):
+            raise reject("comment")
+        if ch == ";" or (ch == "," and depth == 0):
+            raise reject(f"top-level {ch!r}")
+        depth += {"(": 1, ")": -1}.get(ch, 0)
+        if depth < 0:
+            raise reject("unbalanced ')'")
+        i += 1
+    if depth or not text.strip():
+        raise reject("unbalanced '(' or empty expression")
+    return text

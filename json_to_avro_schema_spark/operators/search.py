@@ -44,6 +44,7 @@ SURVEY.md §2.3's pipeline-extra surface like operators/similarity.py.
 
 from __future__ import annotations
 
+import re
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -52,12 +53,18 @@ from pyspark.sql import functions as F
 from .text import tokens
 
 
+# Java's ``\s``, the class ``text.tokens`` splits documents on; Python's
+# ``str.split()`` would also split on Unicode spaces such as U+00A0
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
 def query_terms(query: str) -> list[str]:
-    """Tokenize a query string exactly like document text (lowercased
-    whitespace tokens), deduplicated keeping first-occurrence order —
-    the order term contributions are summed in."""
+    """Tokenize a query string exactly like document text
+    (:func:`text.tokens`: lowercased, split on Java ``\\s+``, empties
+    dropped), deduplicated keeping first-occurrence order — the order term
+    contributions are summed in."""
     out: list[str] = []
-    for t in query.lower().split():
+    for t in _JAVA_WS.split(query.lower()):
         if t and t not in out:
             out.append(t)
     return out

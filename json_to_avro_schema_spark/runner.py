@@ -8,8 +8,10 @@ Engine lifecycle per SURVEY.md §3:
        table checks (uniqueness / referential / drift / stats) → operators/
 
 Scale notes (the parts that matter at 10^12 rows):
-  * All §2.2 predicates are Column expressions → whole-stage codegen; one
-    scan produces both violations and per-partition verdicts.
+  * All §2.2 predicates arrive as Spark SQL text (``RowCheck.sql``), one
+    string per check parsed by Spark in one call, and compile to built-in
+    expressions → whole-stage codegen; one scan produces both violations
+    and per-partition verdicts.
   * Violation rows keep the original ``spans`` column selected as-is so
     Tungsten carries the bytes untouched (span-sequence equality invariant —
     never round-tripped through Python).
@@ -28,6 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .compiler.plan import CompiledPlan
+from .compiler.sql import (
+    and_, call, coalesce_false, ident, is_not_null, lam, lit, not_, string, when,
+)
 from .errors import SchemaMismatchError, ValidationFailedError
 
 ROW_PASS = "__row_pass"
@@ -82,44 +87,37 @@ def apply_row_checks(
     counts as a failure. Null *inputs* already pass via the compiler's
     null-gating, so nulls here only arise from genuinely undecidable values.
     """
-    orig = [F.col(c) for c in df.columns]
-    checks = [
-        F.coalesce(chk.predicate(), F.lit(False)).alias(CHECK_PREFIX + chk.name)
+    out = df.selectExpr("*", *[
+        f"{coalesce_false(chk.sql)} AS {ident(CHECK_PREFIX + chk.name)}"
         for chk in plan.row_checks
-    ]
-    out = df.select(*orig, *checks)
+    ])
     if part_key is not None and "part_key" not in df.columns:
         out = out.withColumn("part_key", part_key)
     # only enforce-severity checks gate the row; warn-severity checks
     # (x-severity: warn) still get their column + verdict line but a
     # failing row stays valid (DLT's plain `expect` level)
-    pass_cols = [
-        F.col(CHECK_PREFIX + c.name)
+    row_pass = and_(lit(True), *[
+        ident(CHECK_PREFIX + c.name)
         for c in plan.row_checks
         if c.severity == "enforce"
-    ]
-    row_pass = F.lit(True)
-    for c in pass_cols:
-        row_pass = row_pass & c
-    return out.withColumn(ROW_PASS, row_pass)
+    ])
+    return out.withColumn(ROW_PASS, F.expr(row_pass))
 
 
 def extract_violations(checked: DataFrame, original_columns: List[str]) -> DataFrame:
     """Rows failing ≥1 check; original columns selected untouched, plus the
     names of the failed checks for the report."""
     check_cols = [c for c in checked.columns if c.startswith(CHECK_PREFIX)]
-    failed_names = F.filter(
-        F.array(
-            *[
-                F.when(~F.col(c), F.lit(c[len(CHECK_PREFIX):])).otherwise(F.lit(None))
-                for c in check_cols
-            ]
-        ),
-        lambda x: x.isNotNull(),
+    failed_names = call(
+        "filter",
+        call("array", *[
+            when(not_(ident(c)), string(c[len(CHECK_PREFIX):]), "NULL")
+            for c in check_cols
+        ]),
+        lam(is_not_null, "x"),
     )
-    return (
-        checked.filter(~F.col(ROW_PASS))
-        .select(*[F.col(c) for c in original_columns], failed_names.alias("failed_checks"))
+    return checked.filter(not_(ident(ROW_PASS))).selectExpr(
+        *map(ident, original_columns), f"{failed_names} AS failed_checks"
     )
 
 
@@ -129,34 +127,36 @@ def partition_verdicts(checked: DataFrame, plan: CompiledPlan) -> DataFrame:
     groupBy(part_key).agg(count, sum(fail_i)…) then unpivot driver-side via
     ``stack`` so the shuffle carries one compact row per partition.
     """
-    check_cols = [CHECK_PREFIX + c.name for c in plan.row_checks]
-    key = F.col("part_key") if "part_key" in checked.columns else F.lit("__all__")
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum((~F.col(c)).cast("long")).alias(f"fail_{i}")
-        for i, c in enumerate(check_cols)
-    ]
-    wide = checked.groupBy(key.alias("part_key")).agg(*aggs)
-    k = len(check_cols)
+    key = _part_key_sql(checked, "part_key")
+    wide = checked.groupBy(F.expr(f"{key} AS part_key")).agg(
+        F.expr("count(1) AS n_rows"),
+        *[
+            F.expr(f"sum(CAST(NOT {ident(CHECK_PREFIX + c.name)} AS BIGINT)) AS fail_{i}")
+            for i, c in enumerate(plan.row_checks)
+        ],
+    )
+    k = len(plan.row_checks)
     if k == 0:
-        return wide.select(
-            "part_key", F.lit(None).cast("string").alias("check_name"),
-            "n_rows", F.lit(0).alias("n_fail"), F.lit(True).alias("pass"),
+        return wide.selectExpr(
+            "part_key", "CAST(NULL AS STRING) AS check_name",
+            "n_rows", "0 AS n_fail", "true AS pass",
         )
     stack_args = ", ".join(
-        f"'{plan.row_checks[i].name}', fail_{i}" for i in range(k)
+        f"{string(c.name)}, fail_{i}" for i, c in enumerate(plan.row_checks)
     )
     long = wide.selectExpr(
         "part_key",
         "n_rows",
         f"stack({k}, {stack_args}) as (check_name, n_fail)",
     )
-    return long.select(
-        "part_key",
-        "check_name",
-        "n_rows",
-        "n_fail",
-        (F.col("n_fail") == 0).alias("pass"),
+    return long.selectExpr(
+        "part_key", "check_name", "n_rows", "n_fail", "n_fail = 0 AS pass"
     )
+
+
+def _part_key_sql(df: DataFrame, part_key_col: str) -> str:
+    """The partition key column, or the constant '__all__' partition."""
+    return ident(part_key_col) if part_key_col in df.columns else string("__all__")
 
 
 def sample_violations(
@@ -200,8 +200,8 @@ def verdicts_with_violation_count(
     obs = Observation()
     observed = checked.observe(
         obs,
-        F.sum((~F.col(ROW_PASS)).cast("long")).alias("n_violations"),
-        F.count(F.lit(1)).alias("n_rows"),
+        F.expr(f"sum(CAST(NOT {ident(ROW_PASS)} AS BIGINT)) AS n_violations"),
+        F.expr("count(1) AS n_rows"),
     )
     return partition_verdicts(observed, plan), obs
 
@@ -238,36 +238,29 @@ def verdicts_from_violations(
             f"{warn} (their failures are not violations) — use "
             f"partition_verdicts for this plan"
         )
-    key = (
-        F.col(part_key_col) if part_key_col in df.columns else F.lit("__all__")
-    )
-    rows_per_part = df.groupBy(key.alias("part_key")).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-    vkey = (
-        F.col(part_key_col)
-        if part_key_col in violations.columns
-        else F.lit("__all__")
-    )
+    rows_per_part = df.groupBy(
+        F.expr(f"{_part_key_sql(df, part_key_col)} AS part_key")
+    ).agg(F.expr("count(1) AS n_rows"))
     fails = (
-        violations.select(
-            vkey.alias("part_key"), F.explode("failed_checks").alias("check_name")
+        violations.selectExpr(
+            f"{_part_key_sql(violations, part_key_col)} AS part_key",
+            "explode(failed_checks) AS check_name",
         )
         .groupBy("part_key", "check_name")
-        .agg(F.count(F.lit(1)).alias("n_fail"))
+        .agg(F.expr("count(1) AS n_fail"))
     )
-    checks = F.explode(
-        F.array(*[F.lit(c.name) for c in plan.row_checks])
-    ).alias("check_name")
-    grid = rows_per_part.select("part_key", "n_rows", checks)
+    names = call("array", *[string(c.name) for c in plan.row_checks])
+    grid = rows_per_part.selectExpr(
+        "part_key", "n_rows", f"explode({names}) AS check_name"
+    )
     return (
         grid.join(F.broadcast(fails), ["part_key", "check_name"], "left")
-        .select(
+        .selectExpr(
             "part_key",
             "check_name",
             "n_rows",
-            F.coalesce("n_fail", F.lit(0)).alias("n_fail"),
-            (F.coalesce("n_fail", F.lit(0)) == 0).alias("pass"),
+            "coalesce(n_fail, 0) AS n_fail",
+            "coalesce(n_fail, 0) = 0 AS pass",
         )
     )
 
@@ -300,8 +293,8 @@ def run_validation(
         checked=checked,
         violations=extract_violations(checked, original_columns),
         verdicts=partition_verdicts(checked, plan),
-        valid=checked.filter(F.col(ROW_PASS)).select(
-            *[F.col(c) for c in original_columns]
+        valid=checked.filter(ident(ROW_PASS)).selectExpr(
+            *map(ident, original_columns)
         ),
         schema_problems=problems,
         unchecked_paths=list(plan.unchecked_paths),

@@ -22,6 +22,7 @@ from json_to_avro_schema_spark.operators.search import (  # noqa: E402
     query_terms,
     tfidf_top_terms,
 )
+from json_to_avro_schema_spark.operators.text import tokens  # noqa: E402
 
 CORPUS = [
     (1, "hash join merge join hash"),
@@ -62,6 +63,15 @@ def corpus_df(spark):
 
 def test_query_terms_dedup_order():
     assert query_terms("Hash JOIN hash  merge") == ["hash", "join", "merge"]
+
+
+def test_query_terms_split_like_document_tokens(spark):
+    """A no-break space (U+00A0) is not Java ``\\s``: document tokens keep
+    it inside a token, so query terms must too."""
+    q = "Hash\u00a0Join merge\tHASH\u00a0join"
+    doc = spark.createDataFrame([(q,)], "t string")
+    jvm = doc.select(tokens(F.col("t")).alias("t")).first()["t"]
+    assert query_terms(q) == list(dict.fromkeys(jvm)) == ["hash\u00a0join", "merge"]
     with pytest.raises(ValueError):
         bm25_search(None, "   ")
 
