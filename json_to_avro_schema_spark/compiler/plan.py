@@ -39,7 +39,7 @@ from typing import Any, Dict, List, Optional, Tuple
 from pyspark.sql import types as T
 
 from ..errors import SpecCompileError, SpecParseError
-from ..spec.model import ConstraintSpec, JSchema, RootConstraintSpec
+from ..spec.model import ConstraintSpec, JSchema, children, is_empty_spec
 from ..spec.normalize import normalize_ids
 from ..spec.parser import parse_root
 from ..spec.symbols import resolve_symbols
@@ -186,10 +186,6 @@ class CompiledPlan:
     def check_names(self) -> List[str]:
         return [c.name for c in self.row_checks]
 
-    def with_row_checks(self, *checks: RowCheck) -> "CompiledPlan":
-        self.row_checks.extend(checks)
-        return self
-
     def bind_schema(self, schema: T.StructType) -> "CompiledPlan":
         """Materialize checks that need the ACTUAL data schema: root-level
         accumulative ``additionalProperties`` / ``patternProperties``.
@@ -281,49 +277,8 @@ def _assert_severity_positions(spec: ConstraintSpec) -> None:
     it would be silently ignored — rows the author meant to merely warn
     on would become violations — so unsupported positions are a
     compile-time error, not a no-op."""
-    from ..errors import SpecCompileError
 
-    def children(node: ConstraintSpec, path: str) -> List[Tuple[Any, str]]:
-        """Every child schema node EXCEPT ``properties`` values (handled
-        by the caller, because only the ROOT's are severity-eligible)."""
-        out: List[Tuple[Any, str]] = []
-        items = node.items
-        if isinstance(items, tuple):
-            out += [(s, f"{path}.items[{i}]") for i, s in enumerate(items)]
-        elif items is not None:
-            out.append((items, f"{path}.items"))
-        for group in ("all_of", "any_of", "one_of"):
-            out += [
-                (s, f"{path}.{group}[{i}]")
-                for i, s in enumerate(getattr(node, group))
-            ]
-        for label, extra in (
-            ("additionalItems", node.additional_items),
-            ("contains", node.contains),
-            ("propertyNames", node.property_names),
-            ("additionalProperties", node.additional_properties),
-            ("not", node.not_), ("if", node.if_),
-            ("then", node.then_), ("else", node.else_),
-        ):
-            out.append((extra, f"{path}.{label}"))
-        out += [
-            (s, f"{path}.patternProperties")
-            for s in node.pattern_properties.values()
-        ]
-        out += [
-            (s, f"{path}.definitions.{k}")
-            for k, s in node.definitions.items()
-        ]
-        out += [
-            (d, f"{path}.dependencies.{k}")
-            for k, d in node.dependencies.items()
-            if not isinstance(d, tuple)
-        ]
-        return out
-
-    def walk(node: Any, path: str, allowed: bool) -> None:
-        if not isinstance(node, ConstraintSpec):
-            return
+    def walk(node: ConstraintSpec, path: str, allowed: bool) -> None:
         if node.x_severity is not None and node.ref is not None:
             # $ref siblings are discarded during inlining (draft-6
             # semantics), which would silently downgrade warn to enforce
@@ -336,22 +291,10 @@ def _assert_severity_positions(spec: ConstraintSpec) -> None:
                 f"x-severity at {path} is not honored there — it applies "
                 f"only to top-level property specs"
             )
-        for prop, sub in node.properties.items():
-            walk(sub, f"{path}.properties.{prop}", allowed=False)
-        for sub, p in children(node, path):
-            walk(sub, p, allowed=False)
+        for field, child_path, child in children(node, path):
+            walk(child, child_path, node is spec and field == "properties")
 
-    # allowed ONLY on the direct values of root.properties; the root
-    # itself and every deeper node are errors
-    if spec.x_severity is not None:
-        raise SpecCompileError(
-            "x-severity at $ (root) is not honored — it applies only to "
-            "top-level property specs"
-        )
-    for prop, sub in spec.properties.items():
-        walk(sub, f"$.properties.{prop}", allowed=True)
-    for sub, p in children(spec, "$"):
-        walk(sub, p, allowed=False)
+    walk(spec, "$", allowed=False)
 
 
 def compile_document(
@@ -466,7 +409,7 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
         )
 
     for prop, sub in spec.properties.items():
-        if sub is True or (isinstance(sub, ConstraintSpec) and sub == ConstraintSpec()):
+        if is_empty_spec(sub):
             continue  # empty schema constrains nothing — no check column
         desc = (
             sub.desc
@@ -516,29 +459,15 @@ def _row_schema_predicate(dep: JSchema, parent: ConstraintSpec) -> str:
     return gate(row, value_predicate(dep, row, "$"))
 
 
-def _assert_string_enums(s: JSchema, path: str) -> None:
-    if not isinstance(s, ConstraintSpec):
-        return
+def _assert_string_enums(s: ConstraintSpec, path: str) -> None:
     for v in s.enum:
         if not isinstance(v, str):
             raise SpecCompileError(
                 f"Unimplemented: non-string enums aren't supported yet at {path}. "
                 f"Value: {v!r}"
             )
-    children: List[Tuple[str, Any]] = []
-    children += [(f"{path}.{k}", c) for k, c in s.properties.items()]
-    children += [(f"{path}.def[{k}]", c) for k, c in s.definitions.items()]
-    if s.items is not None and not isinstance(s.items, tuple):
-        children.append((f"{path}[]", s.items))
-    if isinstance(s.items, tuple):
-        children += [(f"{path}[{k}]", c) for k, c in enumerate(s.items)]
-    children += [(f"{path}^{i}", c) for i, c in enumerate(s.one_of)]
-    children += [(f"{path}&{i}", c) for i, c in enumerate(s.all_of)]
-    children += [(f"{path}|{i}", c) for i, c in enumerate(s.any_of)]
-    if s.additional_properties is not None:
-        children.append((f"{path}.<v>", s.additional_properties))
-    for p, c in children:
-        _assert_string_enums(c, p)
+    for _, child_path, child in children(s, path):
+        _assert_string_enums(child, child_path)
 
 
 # ------------------------------------------------------------- extensions

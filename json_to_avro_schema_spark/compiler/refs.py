@@ -23,7 +23,7 @@ from dataclasses import dataclass, field as dc_field
 from typing import List, Tuple
 
 from ..errors import SpecCompileError
-from ..spec.model import ConstraintSpec, JSchema, RootConstraintSpec
+from ..spec.model import ConstraintSpec, JSchema, RootConstraintSpec, map_children
 from ..spec.symbols import Symbols
 
 
@@ -98,55 +98,14 @@ def inline_refs(
                 return True  # residual depth: anything passes, disclosed in verdicts
             target = resolve_ref_uri(node.ref, root.spec, symbols)
             return visit(target, path, stack + (node.ref,))
-        return _map_children(node, path, stack, visit)
+        # definitions are resolution sources only; drop them post-inline so the
+        # compiled tree is self-contained (dead-definition elimination —
+        # Transpiler.scala:111-125 analog: unused defs never compiled).
+        return map_children(
+            node, lambda c, p: visit(c, p, stack), path, definitions={}
+        )
 
     spec = visit(root.spec, "$", ())
     if isinstance(spec, bool):
         raise SpecCompileError("root schema cannot be a boolean schema")
     return InlineResult(spec=spec, unchecked_paths=unchecked)
-
-
-def _map_children(s: ConstraintSpec, path: str, stack, visit) -> ConstraintSpec:
-    def v(x: JSchema, p: str) -> JSchema:
-        return visit(x, p, stack)
-
-    items = s.items
-    if isinstance(items, tuple):
-        items = tuple(v(i, f"{path}[{n}]") for n, i in enumerate(items))
-    elif items is not None:
-        items = v(items, f"{path}[]")
-
-    return s.evolve(
-        # definitions are resolution sources only; drop them post-inline so the
-        # compiled tree is self-contained (dead-definition elimination —
-        # Transpiler.scala:111-125 analog: unused defs never compiled).
-        definitions={},
-        properties={k: v(p, f"{path}.{k}") for k, p in s.properties.items()},
-        pattern_properties={
-            k: v(p, f"{path}.<pattern:{k}>") for k, p in s.pattern_properties.items()
-        },
-        additional_properties=(
-            None
-            if s.additional_properties is None
-            else v(s.additional_properties, f"{path}.<additional>")
-        ),
-        additional_items=(
-            None if s.additional_items is None else v(s.additional_items, f"{path}[+]")
-        ),
-        items=items,
-        contains=None if s.contains is None else v(s.contains, f"{path}[contains]"),
-        property_names=(
-            None if s.property_names is None else v(s.property_names, f"{path}.<keys>")
-        ),
-        not_=None if s.not_ is None else v(s.not_, f"{path}!"),
-        if_=None if s.if_ is None else v(s.if_, f"{path}?"),
-        then_=None if s.then_ is None else v(s.then_, f"{path}?t"),
-        else_=None if s.else_ is None else v(s.else_, f"{path}?e"),
-        all_of=tuple(v(x, f"{path}&{n}") for n, x in enumerate(s.all_of)),
-        any_of=tuple(v(x, f"{path}|{n}") for n, x in enumerate(s.any_of)),
-        one_of=tuple(v(x, f"{path}^{n}") for n, x in enumerate(s.one_of)),
-        dependencies={
-            k: (d if isinstance(d, tuple) else v(d, f"{path}.dep[{k}]"))
-            for k, d in s.dependencies.items()
-        },
-    )

@@ -15,7 +15,7 @@ full :class:`ConstraintSpec`.
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
-from typing import Any, Dict, List, Optional, Tuple, Union
+from typing import Any, Callable, Container, Dict, Iterator, Optional, Tuple, Union
 
 
 class _Unset:
@@ -162,3 +162,84 @@ EMPTY_SPEC = ConstraintSpec()
 def is_empty_spec(s: JSchema) -> bool:
     """True when the node constrains nothing (empty schema ⇒ 'any')."""
     return s is True or (isinstance(s, ConstraintSpec) and s == EMPTY_SPEC)
+
+
+# The ConstraintSpec fields that hold child schemas, each with the path label
+# of a child in it — the one list every spec-tree pass walks (the reference's
+# $id pass likewise visits "all schema-bearing keywords" from one list,
+# IdNormalizer.scala:24-35). A slot's shape follows from its value: a dict
+# (``{key}`` = name; ``dependencies``' property-list form is not a schema and
+# is skipped), a tuple (``{key}`` = position), or one optional child (``{key}``
+# = "", so single-form ``items`` reads ``[]``). Table order is traversal
+# order, which fixes the order of a plan's ``unchecked_paths``.
+CHILD_SLOTS: Tuple[Tuple[str, str], ...] = (
+    ("definitions", "{path}.def[{key}]"),
+    ("items", "{path}[{key}]"),
+    ("properties", "{path}.{key}"),
+    ("pattern_properties", "{path}.<pattern:{key}>"),
+    ("additional_properties", "{path}.<additional>"),
+    ("additional_items", "{path}[+]"),
+    ("contains", "{path}[contains]"),
+    ("property_names", "{path}.<keys>"),
+    ("not_", "{path}!"),
+    ("if_", "{path}?"),
+    ("then_", "{path}?t"),
+    ("else_", "{path}?e"),
+    ("all_of", "{path}&{key}"),
+    ("any_of", "{path}|{key}"),
+    ("one_of", "{path}^{key}"),
+    ("dependencies", "{path}.dep[{key}]"),
+)
+
+
+def _keyed(value: Any) -> Iterator[Tuple[Any, Any]]:
+    if isinstance(value, dict):
+        return iter(value.items())
+    if isinstance(value, tuple):
+        return enumerate(value)
+    return iter((("", value),))
+
+
+def _entries(
+    node: ConstraintSpec, path: str, skip: Container[str] = ()
+) -> Iterator[Tuple[str, Any, str, ConstraintSpec]]:
+    for name, label in CHILD_SLOTS:
+        value = getattr(node, name)
+        if name in skip or not value:  # replaced, absent or empty
+            continue
+        for key, child in _keyed(value):
+            if isinstance(child, ConstraintSpec):
+                yield name, key, label.format(path=path, key=key), child
+
+
+def children(
+    node: ConstraintSpec, path: str
+) -> Iterator[Tuple[str, str, ConstraintSpec]]:
+    """``(field, child_path, child)`` for every child schema of ``node``.
+    Boolean schemas carry no keywords, so no pass has work in them and they
+    are not yielded."""
+    for name, _, child_path, child in _entries(node, path):
+        yield name, child_path, child
+
+
+def map_children(
+    node: ConstraintSpec,
+    fn: Callable[[ConstraintSpec, str], JSchema],
+    path: str = "$",
+    **fields: Any,
+) -> ConstraintSpec:
+    """``node`` with every child schema ``c`` replaced by ``fn(c, child_path)``
+    (called in table order) and with ``fields`` set, rebuilt with one
+    ``evolve``. A slot named in ``fields`` takes the given value unwalked."""
+    kw: Dict[str, Any] = {}
+    for name, key, child_path, child in _entries(node, path, fields):
+        new = kw.setdefault(name, dict(_keyed(getattr(node, name))))
+        new[key] = fn(child, child_path)
+    for name, new in kw.items():
+        old = getattr(node, name)
+        kw[name] = (
+            new if isinstance(old, dict)
+            else tuple(new.values()) if isinstance(old, tuple)
+            else new[""]
+        )
+    return node.evolve(**kw, **fields)

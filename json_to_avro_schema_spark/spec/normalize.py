@@ -4,7 +4,8 @@ Resolves every nested relative ``$id`` against the current base URI, RFC-3986
 style; each ``$id`` introduces a new base URI for its subtree; absolute URLs
 and URNs pass through unchanged.  Semantics from the reference
 (/root/reference/src/main/scala/IdNormalizer.scala:8-51, combineUris :111-123;
-all schema-bearing keywords visited :24-35).  The root spec MUST declare
+all schema-bearing keywords visited :24-35 — here, every slot of
+``model.CHILD_SLOTS``).  The root spec MUST declare
 ``$id`` (IdNormalizer.scala:13).
 """
 
@@ -14,7 +15,7 @@ from typing import Optional
 from urllib.parse import urljoin, urlparse
 
 from ..errors import SpecResolutionError
-from .model import ConstraintSpec, JSchema, RootConstraintSpec
+from .model import ConstraintSpec, RootConstraintSpec, map_children
 
 
 def _combine(base: str, rel: str) -> str:
@@ -33,50 +34,10 @@ def normalize_ids(root: RootConstraintSpec) -> RootConstraintSpec:
     )
 
 
-def _visit_js(s: JSchema, base: Optional[str]) -> JSchema:
-    if isinstance(s, bool):
-        return s
-    return _visit(s, base)
-
-
 def _visit(s: ConstraintSpec, base: Optional[str]) -> ConstraintSpec:
     new_id = s.id
     if s.id is not None and base is not None and s.id != base:
         new_id = _combine(base, s.id)
     # a declared $id becomes the base for its own subtree (IdNormalizer.scala:20-22)
     sub_base = new_id if new_id is not None else base
-
-    def v(x: JSchema) -> JSchema:
-        return _visit_js(x, sub_base)
-
-    items = s.items
-    if isinstance(items, tuple):
-        items = tuple(v(i) for i in items)
-    elif items is not None:
-        items = v(items)
-
-    deps = {
-        k: (d if isinstance(d, tuple) else v(d)) for k, d in s.dependencies.items()
-    }
-
-    return s.evolve(
-        id=new_id,
-        definitions={k: v(d) for k, d in s.definitions.items()},
-        properties={k: v(p) for k, p in s.properties.items()},
-        pattern_properties={k: v(p) for k, p in s.pattern_properties.items()},
-        additional_properties=(
-            None if s.additional_properties is None else v(s.additional_properties)
-        ),
-        additional_items=None if s.additional_items is None else v(s.additional_items),
-        items=items,
-        contains=None if s.contains is None else v(s.contains),
-        property_names=None if s.property_names is None else v(s.property_names),
-        not_=None if s.not_ is None else v(s.not_),
-        if_=None if s.if_ is None else v(s.if_),
-        then_=None if s.then_ is None else v(s.then_),
-        else_=None if s.else_ is None else v(s.else_),
-        all_of=tuple(v(x) for x in s.all_of),
-        any_of=tuple(v(x) for x in s.any_of),
-        one_of=tuple(v(x) for x in s.one_of),
-        dependencies=deps,
-    )
+    return map_children(s, lambda c, _: _visit(c, sub_base), id=new_id)

@@ -12,7 +12,6 @@ tests carry over.
 
 from __future__ import annotations
 
-import json
 from typing import Any, Dict, Tuple
 
 from ..errors import SpecParseError
@@ -23,11 +22,6 @@ from .model import (
     JSchema,
     RootConstraintSpec,
 )
-
-
-def parse_file(path: str) -> RootConstraintSpec:
-    with open(path, "r", encoding="utf-8") as f:
-        return parse_root(json.load(f))
 
 
 def parse_root(doc: Any) -> RootConstraintSpec:

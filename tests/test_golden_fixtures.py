@@ -425,3 +425,25 @@ def test_error_fixtures():
                          strict_enums=True)
     with pytest.raises(SpecParseError, match="root schema must be a schema"):
         compile_document(True)
+
+
+_NON_STRING_ENUM = {"enum": [1, 2]}
+
+
+@pytest.mark.parametrize("prop", [
+    {"not": _NON_STRING_ENUM},
+    {"type": "array", "contains": _NON_STRING_ENUM},
+    {"type": "object", "patternProperties": {"^x": _NON_STRING_ENUM}},
+    {"if": _NON_STRING_ENUM, "then": {"type": "integer"}},
+    {"if": {"type": "integer"}, "then": _NON_STRING_ENUM},
+    {"if": {"type": "integer"}, "else": _NON_STRING_ENUM},
+    {"type": "object", "propertyNames": _NON_STRING_ENUM},
+    {"type": "object",
+     "dependencies": {"x": {"properties": {"y": _NON_STRING_ENUM}}}},
+], ids=["not", "contains", "patternProperties", "if", "then", "else",
+        "propertyNames", "dependencies"])
+def test_strict_enums_cover_every_child_slot(prop):
+    doc = _root("E", properties={"a": prop})
+    compile_document(doc)  # compiles; only strict_enums rejects it
+    with pytest.raises(SpecCompileError, match="non-string enums"):
+        compile_document(doc, strict_enums=True)

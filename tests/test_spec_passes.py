@@ -7,10 +7,18 @@ parse/validation), IdNormalizerSpec (base-URI resolution), SymbolResolverSpec
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 from json_to_avro_schema_spark.errors import SpecParseError
-from json_to_avro_schema_spark.spec.model import UNSET, ConstraintSpec
+from json_to_avro_schema_spark.spec.model import (
+    CHILD_SLOTS,
+    UNSET,
+    ConstraintSpec,
+    children,
+    map_children,
+)
 from json_to_avro_schema_spark.spec.normalize import normalize_ids
 from json_to_avro_schema_spark.spec.parser import parse_root, parse_subspec
 from json_to_avro_schema_spark.spec.symbols import resolve_symbols
@@ -103,6 +111,45 @@ def test_parse_boolean_schemas():
 def test_parse_keyword_validation_errors(doc, msg):
     with pytest.raises(SpecParseError, match=msg):
         parse_subspec(doc)
+
+
+# ------------------------------------------------------------- child slots
+
+def test_child_slot_table_names_every_schema_field():
+    """Every ConstraintSpec field that can hold a child schema is in the slot
+    table, so a new schema-bearing keyword cannot go untraversed."""
+    schema_fields = {
+        f.name for f in dataclasses.fields(ConstraintSpec) if "JSchema" in str(f.type)
+    }
+    slot_fields = [name for name, _ in CHILD_SLOTS]
+    assert len(slot_fields) == len(set(slot_fields)) == 16
+    assert set(slot_fields) == schema_fields
+
+
+def test_children_labels_and_map_children():
+    s = parse_subspec({
+        "definitions": {"D": {}}, "items": [{}, True, {}], "contains": {},
+        "properties": {"p": {"not": {}}}, "oneOf": [{}, False],
+        "dependencies": {"a": ["b"], "c": {}}, "if": {}, "then": {},
+    })
+    assert [(f, p) for f, p, _ in children(s, "$")] == [
+        ("definitions", "$.def[D]"), ("items", "$[0]"), ("items", "$[2]"),
+        ("properties", "$.p"), ("contains", "$[contains]"), ("if_", "$?"),
+        ("then_", "$?t"), ("one_of", "$^0"), ("dependencies", "$.dep[c]"),
+    ]
+    assert [p for _, p, _ in children(s.properties["p"], "$.p")] == ["$.p!"]
+    assert map_children(s, lambda c, _: c) == s
+    # fn's result replaces exactly the schema children; boolean schemas and
+    # the property-list form of dependencies stay as they were
+    marked = map_children(s, lambda c, p: c.evolve(title=p))
+    assert marked.items[1] is True and marked.one_of[1] is False
+    assert marked.dependencies["a"] == ("b",)
+    assert marked.items[2].title == "$[2]" and marked.dependencies["c"].title == "$.dep[c]"
+    assert marked.properties["p"].not_ == ConstraintSpec()
+    # a slot set through ``fields`` is replaced without being walked
+    seen = []
+    dropped = map_children(s, lambda c, p: seen.append(p) or c, definitions={})
+    assert dropped.definitions == {} and "$.def[D]" not in seen and "$.p" in seen
 
 
 # --------------------------------------------------------------- normalize
