@@ -3964,7 +3964,7 @@ def _q_span_monotonic_violations(spark: SparkSession, sf: str) -> DataFrame:
     """The COMPILED spec pipeline catching planted span-order corruption:
     every 9th doc's offsets are reversed at derivation; the spec's
     x-monotonicIncreasing check (single-pass aggregate accumulator,
-    compiler/checks.py monotonic_increasing) must flag exactly the docs
+    compiler/checks.py _fused_items_monotonic) must flag exactly the docs
     where the reversal is observable (≥ 2 spans) — SQL-derivable from the
     derivation arithmetic."""
     docs = load_table(spark, sf, "documents")

@@ -33,7 +33,8 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field as dc_field
+import re
+from dataclasses import dataclass, field as dc_field, replace as dc_replace
 from typing import Any, Dict, List, Optional, Tuple
 
 from pyspark.sql import types as T
@@ -43,11 +44,11 @@ from ..spec.model import ConstraintSpec, JSchema, children, is_empty_spec
 from ..spec.normalize import normalize_ids
 from ..spec.parser import parse_root
 from ..spec.symbols import resolve_symbols
-from .checks import gate, node_predicate, value_predicate
+from .checks import accepts_null, gate, node_predicate, value_predicate
 from .names import sanitize_check_name
 from .sql import and_, call, ident, is_not_null, is_null, not_, or_
 from .refs import inline_refs
-from .types import carrier_type, has_null_arm
+from .types import carrier_type
 
 
 @dataclass(frozen=True)
@@ -197,71 +198,40 @@ class CompiledPlan:
         own checks — both keyword families apply on the same object, which
         is the draft-6 semantics the reference's Roadmap concedes it lacks.
         Returns a new plan; the input plan is untouched."""
-        import re as _re
-
-        if self.root_additional_properties is None and not self.root_pattern_properties:
+        ap = self.root_additional_properties
+        if ap is None and not self.root_pattern_properties:
             return self
-        declared = set(self.root_declared_properties)
-        extra_checks: List[RowCheck] = []
+        extra: List[RowCheck] = []
+
+        def add(name: str, suffix: str, description: str, sql: str) -> None:
+            extra.append(_row_check(self.spec_name, name, suffix, description, sql))
+
         for f in schema.fields:
-            name = f.name
-            if name in declared or name.startswith("__"):
+            name, col = f.name, ident(f.name)
+            if name in self.root_declared_properties or name.startswith("__"):
                 continue
             matched = False
             for pat, sub in self.root_pattern_properties.items():
-                if _re.search(pat, name):
+                if re.search(pat, name):
                     matched = True
-                    extra_checks.append(
-                        RowCheck(
-                            name=sanitize_check_name(
-                                f"{name}__pattern_conforms", self.spec_name
-                            ),
-                            path=f"$.{name}",
-                            description=(
-                                f"undeclared column '{name}' matches "
-                                f"patternProperties /{pat}/ and conforms"
-                            ),
-                            sql=node_predicate(sub, ident(name), f"$.{name}"),
-                        )
-                    )
-            if matched:
-                continue
-            ap = self.root_additional_properties
-            if ap is None or ap is True:
+                    add(name, "pattern_conforms",
+                        f"undeclared column '{name}' matches patternProperties "
+                        f"/{pat}/ and conforms",
+                        node_predicate(sub, col, f.dataType, f"$.{name}"))
+            if matched or ap is None or ap is True:
                 continue
             if ap is False:
-                extra_checks.append(
-                    RowCheck(
-                        name=sanitize_check_name(
-                            f"{name}__additional_forbidden", self.spec_name
-                        ),
-                        path=f"$.{name}",
-                        description=(
-                            f"additionalProperties: false — undeclared column "
-                            f"'{name}' must be absent (null)"
-                        ),
-                        sql=is_null(ident(name)),
-                    )
-                )
+                add(name, "additional_forbidden",
+                    f"additionalProperties: false — undeclared column '{name}' "
+                    "must be absent (null)",
+                    is_null(col))
             else:
-                extra_checks.append(
-                    RowCheck(
-                        name=sanitize_check_name(
-                            f"{name}__additional_conforms", self.spec_name
-                        ),
-                        path=f"$.{name}",
-                        description=(
-                            f"undeclared column '{name}' conforms to "
-                            "additionalProperties"
-                        ),
-                        sql=node_predicate(ap, ident(name), f"$.{name}"),
-                    )
-                )
-        if not extra_checks:
+                add(name, "additional_conforms",
+                    f"undeclared column '{name}' conforms to additionalProperties",
+                    node_predicate(ap, col, f.dataType, f"$.{name}"))
+        if not extra:
             return self
-        import dataclasses as _dc
-
-        return _dc.replace(self, row_checks=self.row_checks + extra_checks)
+        return dc_replace(self, row_checks=self.row_checks + extra)
 
 
 def spec_name_from_id(root_id: str) -> str:
@@ -365,28 +335,34 @@ def _as_struct(dt: T.DataType) -> T.StructType:
 
 # ------------------------------------------------------------- row checks
 
+def _row_check(
+    spec_name: str, prop: str, suffix: str, description: str, sql: str,
+    severity: str = "enforce",
+) -> RowCheck:
+    """The check ``<prop>__<suffix>`` on top-level property ``prop``."""
+    return RowCheck(
+        name=sanitize_check_name(f"{prop}__{suffix}", spec_name),
+        path=f"$.{prop}", description=description, sql=sql, severity=severity,
+    )
+
+
 def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
     root_name = plan.spec_name
+    schema = plan.expected_schema
 
     if spec.one_of and not spec.properties:
-        value_spec = spec.evolve(id=None)
-        plan.row_checks.append(
-            RowCheck(
-                name=sanitize_check_name("value__conforms", root_name),
-                path="$.value",
-                description="root oneOf: exactly one alternative passes",
-                sql=node_predicate(value_spec, ident("value"), "$.value"),
-            )
-        )
-        if not has_null_arm(spec):
-            plan.row_checks.append(
-                RowCheck(
-                    name=sanitize_check_name("value__required", root_name),
-                    path="$.value",
-                    description="root oneOf value must be present",
-                    sql=is_not_null(ident("value")),
-                )
-            )
+        plan.row_checks.append(_row_check(
+            root_name, "value", "conforms",
+            "root oneOf: exactly one alternative passes",
+            node_predicate(
+                spec.evolve(id=None), ident("value"), schema["value"].dataType, "$.value"
+            ),
+        ))
+        if not accepts_null(spec):
+            plan.row_checks.append(_row_check(
+                root_name, "value", "required", "root oneOf value must be present",
+                is_not_null(ident("value")),
+            ))
         return
 
     def _severity(prop: str) -> str:
@@ -396,17 +372,12 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
         return "enforce"
 
     for prop in spec.required:
-        if prop not in spec.properties:
-            continue
-        plan.row_checks.append(
-            RowCheck(
-                name=sanitize_check_name(f"{prop}__required", root_name),
-                path=f"$.{prop}",
-                description=f"required property '{prop}' must be non-null",
-                sql=is_not_null(ident(prop)),
-                severity=_severity(prop),
-            )
-        )
+        if prop in spec.properties:
+            plan.row_checks.append(_row_check(
+                root_name, prop, "required",
+                f"required property '{prop}' must be non-null",
+                is_not_null(ident(prop)), _severity(prop),
+            ))
 
     for prop, sub in spec.properties.items():
         if is_empty_spec(sub):
@@ -416,47 +387,31 @@ def _compile_row_checks(spec: ConstraintSpec, plan: CompiledPlan) -> None:
             if isinstance(sub, ConstraintSpec) and sub.desc
             else f"'{prop}' conforms to its spec"
         )
-        plan.row_checks.append(
-            RowCheck(
-                name=sanitize_check_name(f"{prop}__conforms", root_name),
-                path=f"$.{prop}",
-                description=desc,
-                sql=node_predicate(sub, ident(prop), f"$.{prop}"),
-                severity=_severity(prop),
-            )
-        )
+        plan.row_checks.append(_row_check(
+            root_name, prop, "conforms", desc,
+            node_predicate(sub, ident(prop), schema[prop].dataType, f"$.{prop}"),
+            _severity(prop),
+        ))
 
     for dep_key, dep in spec.dependencies.items():
         if isinstance(dep, tuple):
-            plan.row_checks.append(
-                RowCheck(
-                    name=sanitize_check_name(f"{dep_key}__dependencies", root_name),
-                    path=f"$.{dep_key}",
-                    description=f"if '{dep_key}' present then {list(dep)} present",
-                    sql=or_(
-                        not_(is_not_null(ident(dep_key))),
-                        and_(*[is_not_null(ident(x)) for x in dep]),
-                    ),
-                )
-            )
+            what = f"{list(dep)} present"
+            need = and_(*[is_not_null(ident(x)) for x in dep])
         else:
-            plan.row_checks.append(
-                RowCheck(
-                    name=sanitize_check_name(f"{dep_key}__dependencies", root_name),
-                    path=f"$.{dep_key}",
-                    description=f"if '{dep_key}' present then dependent schema holds",
-                    sql=or_(
-                        not_(is_not_null(ident(dep_key))),
-                        _row_schema_predicate(dep, spec),
-                    ),
-                )
+            what = "dependent schema holds"
+            need = _row_schema_predicate(
+                dep, schema if spec.properties else T.StructType()
             )
+        plan.row_checks.append(_row_check(
+            root_name, dep_key, "dependencies", f"if '{dep_key}' present then {what}",
+            or_(not_(is_not_null(ident(dep_key))), need),
+        ))
 
 
-def _row_schema_predicate(dep: JSchema, parent: ConstraintSpec) -> str:
+def _row_schema_predicate(dep: JSchema, row_type: T.StructType) -> str:
     """Apply a schema-form dependency against the whole row (as a struct)."""
-    row = call("struct", *[ident(p) for p in parent.properties])
-    return gate(row, value_predicate(dep, row, "$"))
+    row = call("struct", *[ident(p) for p in row_type.names])
+    return gate(row, value_predicate(dep, row, row_type, "$"))
 
 
 def _assert_string_enums(s: ConstraintSpec, path: str) -> None:

@@ -40,6 +40,8 @@ _PRIMITIVE_ARM_NAME = {
     "number": "double",
     "string": "string",
     "null": "null",
+    "array": "array",
+    "object": "object",
 }
 
 
@@ -65,49 +67,29 @@ def flatten_one_of(arms: Tuple[JSchema, ...]) -> List[JSchema]:
 
 
 def union_arms(s: ConstraintSpec) -> Optional[List[Tuple[str, JSchema]]]:
-    """Return named union arms when the node is union-shaped, else None.
+    """Return the named value arms when the node is union-shaped, else None.
 
-    Union shapes: multi-valued ``type``, or ``oneOf``. A null arm is removed
-    (it maps to plain column nullability) — caller treats presence of a null
-    arm as "null passes".
+    Union shapes: multi-valued ``type``, or ``oneOf``. Null arms and ``true``
+    arms are removed: they map to plain column nullability and to "any
+    value", not to a carrier of their own.
     """
+    named: List[Tuple[str, JSchema]] = []
     if len(s.types) > 1:
-        arms: List[Tuple[str, JSchema]] = []
-        for t in s.types:
-            arm_spec = s.evolve(types=(t,), one_of=())
-            arms.append((_PRIMITIVE_ARM_NAME[t], arm_spec))
-        return arms
-    if s.one_of and not s.types and not s.enum:
-        flat = flatten_one_of(s.one_of)
-        named: List[Tuple[str, JSchema]] = []
-        for i, a in enumerate(flat):
+        named = [(_PRIMITIVE_ARM_NAME[t], s.evolve(types=(t,), one_of=())) for t in s.types]
+    elif s.one_of and not s.types and not s.enum:
+        seen: dict = {}
+        for i, a in enumerate(flatten_one_of(s.one_of)):
             if isinstance(a, ConstraintSpec) and a.id:
                 name = a.id.rstrip("/").split("/")[-1].split("#")[-1]
             elif isinstance(a, ConstraintSpec) and len(a.types) == 1:
                 name = _PRIMITIVE_ARM_NAME[a.types[0]]
             else:
                 name = f"arm{i}"
-            named.append((name, a))
-        # dedupe arm names
-        seen: dict = {}
-        out = []
-        for name, a in named:
-            if name in seen:
-                seen[name] += 1
-                name = f"{name}{seen[name]}"
-            else:
-                seen[name] = 0
-            out.append((name, a))
-        return out
-    return None
-
-
-def has_null_arm(s: ConstraintSpec) -> bool:
-    if "null" in s.types:
-        return True
-    if s.one_of and not s.types:
-        return any(is_null_arm(a) or a is True for a in flatten_one_of(s.one_of))
-    return False
+            seen[name] = seen.get(name, -1) + 1  # dedupe: name, name1, …
+            named.append((f"{name}{seen[name]}" if seen[name] else name, a))
+    else:
+        return None
+    return [(n, a) for n, a in named if not is_null_arm(a) and a is not True]
 
 
 def carrier_type(s: JSchema, path: str = "$") -> T.DataType:
@@ -123,17 +105,15 @@ def carrier_type(s: JSchema, path: str = "$") -> T.DataType:
     # --- union shapes ---------------------------------------------------
     arms = union_arms(s)
     if arms is not None:
-        value_arms = [(n, a) for n, a in arms if not is_null_arm(a) and a is not True]
-        any_arms = [a for _, a in arms if a is True]
-        if not value_arms and any_arms:
-            return T.BinaryType()
-        if len(value_arms) == 1:
-            return carrier_type(value_arms[0][1], path)
-        carriers = [carrier_type(a, f"{path}^{n}") for n, a in value_arms]
+        if not arms:
+            return T.BinaryType()  # only null/any arms
+        if len(arms) == 1:
+            return carrier_type(arms[0][1], path)
+        carriers = [carrier_type(a, f"{path}^{n}") for n, a in arms]
         if all(c == carriers[0] for c in carriers[1:]):
             return carriers[0]  # scalar-collapsed union
         return T.StructType(
-            [T.StructField(n, c, True) for (n, _), c in zip(value_arms, carriers)]
+            [T.StructField(n, c, True) for (n, _), c in zip(arms, carriers)]
         )
 
     # --- single declared type -------------------------------------------
@@ -169,12 +149,8 @@ def carrier_type(s: JSchema, path: str = "$") -> T.DataType:
                 return T.ArrayType(T.StringType(), True)
     if s.enum:
         return _enum_carrier(s.enum, path)
-    if s.properties:
-        return _record_type(s, path)
-    if s.additional_properties is not None and s.additional_properties is not False:
-        return T.MapType(
-            T.StringType(), carrier_type(s.additional_properties, f"{path}.<v>"), True
-        )
+    if s.properties or s.additional_properties not in (None, False):
+        return _single_type(s, "object", path)
     return T.BinaryType()
 
 

@@ -550,3 +550,109 @@ def test_x_severity_warn_enforce_and_fail_levels(spark):
     from json_to_avro_schema_spark.runner import verdicts_from_violations
     with pytest.raises(ValueError):
         verdicts_from_violations(df, res.violations, plan)
+
+
+# ---- type-directed lowering: each arm lowers against the value's carrier.
+# The cases below are the minimal reproductions the JSON-Schema
+# differential (test_jsonschema_differential.py) found; each failed on the
+# commit before type-directed lowering.
+
+_ARRAYS = [(1, [1, 2]), (2, [1, 2, 3]), (3, [-1]), (4, [5, 6, 7, 8, 9]),
+           (5, []), (6, None)]
+
+
+@pytest.mark.parametrize("arms, failing", [
+    ({"allOf": [{"maxItems": 2}]}, {2, 4}),
+    ({"allOf": [{"minItems": 2}]}, {3, 5}),
+    ({"allOf": [{"items": {"minimum": 0}}]}, {3}),
+    ({"allOf": [{"contains": {"minimum": 5}}]}, {1, 2, 3, 5}),
+    ({"anyOf": [{"maxItems": 2}, {"minItems": 5}]}, {2}),
+    ({"not": {"maxItems": 2}}, {1, 3, 5}),
+])
+def test_untyped_array_keyword_arms(spark, arms, failing):
+    doc = _spec({"ai": {"type": "array", "items": {"type": "integer"}, **arms}})
+    assert _failing_ids(spark, doc, _ARRAYS, "id long, ai array<long>") == failing
+
+
+@pytest.mark.parametrize("spec, rows, failing", [
+    ({"type": "string", "oneOf": [{"pattern": "b$"}, {"pattern": "\\d"}]},
+     [(1, "ab"), (2, "a1"), (3, "1b"), (4, "xx")], {3, 4}),
+    ({"type": "number", "oneOf": [{"const": 1}, {"minimum": 2}]},
+     [(1, 1.0), (2, 2.5), (3, 1.5)], {3}),
+    ({"type": "string", "oneOf": [{"minLength": 2}, {"maxLength": 0}]},
+     [(1, ""), (2, "ab"), (3, "a")], {3}),
+    # parent: INVALID_EXTRACT_BASE_FIELD_TYPE at selectExpr
+    ({"type": "number", "allOf": [{"oneOf": [
+        {"maximum": 1}, {"maximum": 3, "const": 1}, {"minimum": 1}]}]},
+     [(1, 0.5), (2, 1.0), (3, 2.0), (4, 5.0)], {2}),
+    # parent: length(CAST(v AS STRING)) <= 1 on a number
+    ({"type": "number", "allOf": [{"maxLength": 1}]},
+     [(1, 12.5), (2, 3.0)], set()),
+    ({"type": "integer", "allOf": [{"type": "string"}]}, [(1, 1.0)], {1}),
+    ({"type": "number", "anyOf": [{"type": "integer"}, {"minimum": 10}]},
+     [(1, 2.0), (2, 2.5), (3, 12.5)], {2}),
+])
+def test_scalar_combinator_arms(spark, spec, rows, failing):
+    dtype = "long" if spec["type"] == "integer" else (
+        "double" if spec["type"] == "number" else "string")
+    rows = [(i, int(v) if dtype == "long" else v) for i, v in rows]
+    assert _failing_ids(spark, _spec({"v": spec}), rows, f"id long, v {dtype}") == failing
+
+
+def test_contains_null_element_matches_subschema_admitting_null(spark):
+    """A null element is JSON null: it satisfies an untyped ``contains``
+    (``minimum`` constrains numbers only) but not a typed one."""
+    doc = _spec({
+        "u": {"type": "array", "items": {"type": ["integer", "null"]},
+              "contains": {"minimum": 5}},
+        "t": {"type": "array", "items": {"type": ["integer", "null"]},
+              "contains": {"type": "integer", "minimum": 5}},
+    })
+    rows = [(1, [None, 1], [7]), (2, [1], [None, 1]), (3, [], [5])]
+    assert _failing_ids(
+        spark, doc, rows, "id long, u array<long>, t array<long>"
+    ) == {2, 3}
+
+
+@pytest.mark.parametrize("spec, rows, schema, failing", [
+    ({"type": ["array", "null"], "items": {"type": "string"}, "maxItems": 1},
+     [(1, ["a"]), (2, ["a", "b"]), (3, None)], "array<string>", {2}),
+    ({"type": ["object", "null"],
+      "properties": {"a": {"type": "integer", "minimum": 0}}},
+     [(1, (1,)), (2, (-1,)), (3, None)], "struct<a: long>", {2}),
+    ({"oneOf": [{"type": "null"},
+                {"type": "array", "items": {"type": "integer"}, "maxItems": 2}]},
+     [(1, [1]), (2, [1, 2, 3]), (3, None)], "array<long>", {2}),
+])
+def test_nullable_array_and_object_specs(spark, spec, rows, schema, failing):
+    """A union naming array/object arms compiles (parent: KeyError) and
+    validates like the arm it collapses to."""
+    assert _failing_ids(spark, _spec({"v": spec}), rows, f"id long, v {schema}") == failing
+
+
+@pytest.mark.parametrize("rows, schema, failing", [
+    ([(1, "abc"), (2, "7"), (3, None)], "string", set()),
+    ([(1, bytearray(b"\x00\x01")), (2, bytearray(b"9"))], "binary", set()),
+    ([(1, 3), (2, -1), (3, None)], "long", {2}),
+])
+def test_any_carrier_numeric_keyword_is_cast_safe(spark, rows, schema, failing):
+    """An untyped ``{"minimum": 0}`` property carries any column type
+    (BinaryType). A value that does not read as a number passes instead
+    of failing the job (parent: CAST_INVALID_INPUT on "abc",
+    DATATYPE_MISMATCH on binary); a bigint column is still checked."""
+    doc = _spec({"v": {"minimum": 0}})
+    assert _failing_ids(spark, doc, rows, f"id long, v {schema}") == failing
+
+
+@pytest.mark.parametrize("spans", [
+    {"type": "array"},
+    {"type": "array", "items": {"type": "integer"}},
+    {"type": "array", "items": {"type": "object",
+                                "properties": {"pos": {"type": "integer"}}}},
+])
+def test_malformed_monotonic_increasing_rejected_at_compile(spans):
+    from json_to_avro_schema_spark.errors import SpecCompileError
+
+    doc = _spec({"spans": {**spans, "x-monotonicIncreasing": ["offset"]}})
+    with pytest.raises(SpecCompileError, match=r"x-monotonicIncreasing at \$\.spans"):
+        compile_document(doc)
