@@ -422,8 +422,10 @@ def _q_colocated_dedup(spark: SparkSession, sf: str) -> DataFrame:
     timed action measures the recurring Exchange-free join, not the layout
     cost. Table names and paths are suffixed with the sf tag so builders
     for different scale factors can coexist in one session (each sf gets
-    its own catalog entries — no overwrite-under-a-lazy-DataFrame)."""
+    its own catalog entries — no overwrite-under-a-lazy-DataFrame); paths
+    also carry the process id, so concurrent replays never share files."""
     import os
+    import tempfile
 
     from json_to_avro_schema_spark.sources.bucketed import (
         dedup_exact_colocated,
@@ -435,7 +437,7 @@ def _q_colocated_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
     index = docs.filter(F.col("doc_id") < 250).select("fingerprint").distinct()
     tag = os.path.basename(sf.rstrip("/")).replace(".", "_").replace("-", "_")
-    base = f"/tmp/colocated_{tag}"
+    base = os.path.join(tempfile.gettempdir(), f"colocated_{tag}_{os.getpid()}")
     corpus_t, index_t = f"colocated_corpus_{tag}", f"colocated_index_{tag}"
     write_bucketed(
         docs, corpus_t, base + "/corpus", ["fingerprint"], n_buckets=8
@@ -3963,10 +3965,10 @@ _DERIVED_SPANS_SPEC = {
 def _q_span_monotonic_violations(spark: SparkSession, sf: str) -> DataFrame:
     """The COMPILED spec pipeline catching planted span-order corruption:
     every 9th doc's offsets are reversed at derivation; the spec's
-    x-monotonicIncreasing check (single-pass aggregate accumulator,
-    compiler/checks.py _fused_items_monotonic) must flag exactly the docs
-    where the reversal is observable (≥ 2 spans) — SQL-derivable from the
-    derivation arithmetic."""
+    x-monotonicIncreasing check (the sorted distinct non-null offsets must
+    be the offsets: compiler/checks.py _monotonic_increasing) must flag
+    exactly the docs where the reversal is observable (≥ 2 spans) —
+    SQL-derivable from the derivation arithmetic."""
     docs = load_table(spark, sf, "documents")
     bad = spans_from_documents(docs, corrupt_every=9)
     plan = compile_document(_DERIVED_SPANS_SPEC)

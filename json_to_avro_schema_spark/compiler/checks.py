@@ -29,22 +29,30 @@ carrier is an object except the ``i0…`` tuple carrier. The tagged struct
 field is set and that arm passes. Only the any-carrier (``BinaryType``)
 casts, with ``try_cast`` through STRING, so a value outside a keyword's
 domain reads as null and passes.
+
+Spark interprets higher-order functions element by element (``forall``,
+``exists`` and ``aggregate`` do not generate code), so two rewrites keep
+per-element work small, both exact: a ``oneOf`` whose arms all require one
+object field and pin it to distinct literals (a discriminator) lowers to a
+``CASE`` on that field that evaluates only the selected arm, instead of
+every arm plus a count; and ``x-monotonicIncreasing`` lowers to
+code-generated functions of the projected field array, which also make a
+``uniqueItems`` beside it redundant, so that check is dropped.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Any, List, Optional, Sequence
+from typing import Any, List, Optional, Sequence, Tuple
 
 from pyspark.sql import types as T
 
 from ..errors import SpecCompileError
 from ..spec.model import UNSET, ConstraintSpec, JSchema
 from .sql import (
-    ADD, MUL, Sql, and_, binop, call, cast, chain, cmp, coalesce_false, field,
-    is_not_null, is_null, isin, lam, lit, not_, or_, rlike, string, struct,
-    when,
+    ADD, MUL, Sql, and_, binop, call, case, cast, chain, cmp, coalesce_false,
+    field, is_not_null, is_null, isin, lam, lit, not_, or_, rlike, string, when,
 )
 from .types import union_arms
 
@@ -330,14 +338,15 @@ def _container_keyword_predicates(
             preds.append(cmp(size, ">=", s.min_items))
         if s.max_items is not None:
             preds.append(cmp(size, "<=", s.max_items))
-        if s.unique_items:
-            preds.append(cmp(size, "=", call("size", call("array_distinct", expr))))
-        uniform = None if s.items is None or isinstance(s.items, tuple) else s.items
         if s.x_monotonic:
-            preds.append(_fused_items_monotonic(expr, uniform, s.x_monotonic, et, path))
-        elif uniform is not None:
+            preds.append(_monotonic_increasing(expr, s.x_monotonic, et, path))
+        elif s.unique_items:
+            # strictly increasing present fields already make every element
+            # distinct, so uniqueItems beside x-monotonicIncreasing is implied
+            preds.append(cmp(size, "=", call("size", call("array_distinct", expr))))
+        if s.items is not None and not isinstance(s.items, tuple):
             preds.append(call("forall", expr, lam(
-                lambda e: element_predicate(uniform, e, et, f"{path}[]"), "e")))
+                lambda e: element_predicate(s.items, e, et, f"{path}[]"), "e")))
         if isinstance(s.items, tuple):
             # positional (tuple-form) items on an array carrier: index k is
             # constrained only when the array is long enough (draft-6:
@@ -450,48 +459,48 @@ def _struct_predicates(
     return preds
 
 
-def _fused_items_monotonic(
-    expr: str,
-    items: Optional[JSchema],
-    fields: Sequence[str],
-    elem_type: T.DataType,
-    path: str,
+def _monotonic_increasing(
+    expr: str, fields: Sequence[str], elem_type: T.DataType, path: str
 ) -> Sql:
     """Engine extension ``x-monotonicIncreasing``: each struct-element field
     in ``fields`` strictly increases along the array (the span ``offset``
-    invariant); null elements/fields fail closed. One ``aggregate`` with a
-    (prev, ok) accumulator, which also carries the ``items`` check when
-    given: the array is decoded once (measured ~30% off the spans check at
-    2M docs) and no intermediate arrays are allocated."""
+    invariant), compared in the field's own type; a null element or field
+    fails. Per field, over the projected array ``o = expr.f``: sorting the
+    distinct non-null values of ``o`` gives ``o`` back, which no null, tie
+    or decrease survives. Code-generated array functions only; ``o`` appears
+    just twice because a filter pushed below a projection repeats a
+    computed input column once per reference."""
     if not isinstance(elem_type, T.StructType) or not set(fields) <= set(elem_type.names):
         raise SpecCompileError(
             f"x-monotonicIncreasing at {path} needs array items that are a "
             f"struct with fields {list(fields)}; the items carrier is "
             f"{elem_type.simpleString()}"
         )
-    init = struct(
-        **{f"prev_{i}": cast("NULL", "BIGINT") for i in range(len(fields))},
-        ok=lit(True),
-    )
+    preds = []
+    for name in fields:
+        ftype = elem_type[name].dataType
+        if not _orderable(ftype):
+            raise SpecCompileError(
+                f"x-monotonicIncreasing at {path}: field {name} has type "
+                f"{ftype.simpleString()}, which Spark cannot order"
+            )
+        o = field(expr, name)
+        preds.append(cmp(call("sort_array", call("array_except", o, call("array", "NULL"))), "=", o))
+        if isinstance(ftype, (T.FloatType, T.DoubleType)):
+            # hash-based set functions tell -0.0 from 0.0, which sorting
+            # ties; a struct wrapper makes array_distinct compare by ordering
+            preds.append(cmp(call("size", call("array_distinct", call("arrays_zip", o))),
+                             "=", call("size", o)))
+    return and_(*preds)
 
-    def step(acc: Sql, x: Sql) -> Sql:
-        ok = field(acc, "ok")
-        if items is not None:
-            ok = and_(ok, element_predicate(items, x, elem_type, f"{path}[]"))
-        prevs = {}
-        for i, fname in enumerate(fields):
-            ok = and_(ok, _increases(field(acc, f"prev_{i}"), field(x, fname)))
-            prevs[f"prev_{i}"] = cast(field(x, fname), "BIGINT")
-        return struct(**prevs, ok=ok)
 
-    return call("aggregate", expr, init, lam(step, "acc", "x"),
-                lam(lambda acc: coalesce_false(field(acc, "ok")), "acc"))
-
-
-def _increases(prev: str, v: str) -> Sql:
-    """``v`` follows ``prev`` strictly increasing (the first element only
-    needs to be present); null fails closed."""
-    return coalesce_false(when(is_null(prev), is_not_null(v), cmp(v, ">", prev)))
+def _orderable(dtype: T.DataType) -> bool:
+    """Whether Spark can sort values of ``dtype`` (no map inside)."""
+    if isinstance(dtype, T.ArrayType):
+        return _orderable(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return all(_orderable(f.dataType) for f in dtype.fields)
+    return not isinstance(dtype, T.MapType)
 
 
 # ------------------------------------------------------------ combinators
@@ -512,13 +521,22 @@ def _combinator_predicates(
             coalesce_false(arm(a, f"|{i}")) for i, a in enumerate(s.any_of)
         ]))
     if s.one_of:
-        # exactly one arm holds (SURVEY.md §2.2: sum(cast(arm AS INT)) = 1);
-        # an arm that lowers to false adds nothing to the count
         arms = [arm(a, f"^{i}") for i, a in enumerate(s.one_of)]
-        count = chain("+", ADD, [
-            cast(coalesce_false(a), "INT") for a in arms if a != "false"
-        ], "0")
-        preds.append(cmp(count, "=", 1))
+        tag = _discriminator(s.one_of, dtype)
+        if tag is not None:
+            # at most one arm can hold, so exactly one holds iff the arm the
+            # tag selects does: one arm evaluated instead of all plus a count
+            name, values = tag
+            preds.append(case(field(expr, name), [
+                (v, coalesce_false(a)) for v, a in zip(values, arms)
+            ], "false"))
+        else:
+            # exactly one arm holds (SURVEY.md §2.2: sum(cast(arm AS INT)) =
+            # 1); an arm that lowers to false adds nothing to the count
+            count = chain("+", ADD, [
+                cast(coalesce_false(a), "INT") for a in arms if a != "false"
+            ], "0")
+            preds.append(cmp(count, "=", 1))
     if s.not_ is not None:
         preds.append(not_(coalesce_false(arm(s.not_, "!"))))
     if s.if_ is not None:
@@ -530,6 +548,40 @@ def _combinator_predicates(
 
         preds.append(when(branch(s.if_, "?"), branch(s.then_, "?t"), branch(s.else_, "?e")))
     return preds
+
+
+# a discriminator literal and the field it pins compare exactly
+_TAG_TYPES = {str: T.StringType, bool: T.BooleanType, int: T.IntegralType}
+
+
+def _discriminator(
+    arms: Sequence[JSchema], dtype: T.DataType
+) -> Optional[Tuple[str, List[Any]]]:
+    """``(P, [c1, …])`` when every ``oneOf`` arm over an object struct
+    carrier requires the carrier field ``P`` and pins it with a ``const``
+    (or a one-value ``enum``) ``c_i``, a string, boolean or integer of the
+    field's own type, the ``c_i`` pairwise distinct; None otherwise. Arm
+    ``i`` can then hold only where ``P = c_i``."""
+    if not isinstance(dtype, T.StructType) or _is_tuple(dtype):
+        return None
+    if not all(isinstance(a, ConstraintSpec) for a in arms):
+        return None
+
+    def pin(a: ConstraintSpec, name: str) -> Any:
+        sub = a.properties.get(name)
+        if name not in a.required or not isinstance(sub, ConstraintSpec):
+            return UNSET
+        if sub.const is not UNSET:
+            return sub.const
+        return sub.enum[0] if len(sub.enum) == 1 else UNSET
+
+    for f in dtype.fields:
+        values = [pin(a, f.name) for a in arms]
+        if all(
+            isinstance(f.dataType, _TAG_TYPES.get(type(v), ())) for v in values
+        ) and len(set(values)) == len(values):
+            return f.name, values
+    return None
 
 
 def _tagged_union_predicate(

@@ -149,8 +149,11 @@ def when(cond: str, then: str, otherwise: Optional[str] = None) -> Sql:
     return Sql(f"CASE WHEN {cond} THEN {then}{tail} END")
 
 
-def struct(**fields: str) -> Sql:
-    return call("struct", *[f"{v} AS {ident(k)}" for k, v in fields.items()])
+def case(subject: str, branches, otherwise: str) -> Sql:
+    """``CASE subject WHEN v THEN r … ELSE otherwise END`` over ``(v, r)``
+    pairs, each ``v`` a literal."""
+    whens = " ".join(f"WHEN {lit(v)} THEN {r}" for v, r in branches)
+    return Sql(f"CASE {subject} {whens} ELSE {otherwise} END")
 
 
 _DEPTH: contextvars.ContextVar[int] = contextvars.ContextVar("lambda_depth", default=0)

@@ -94,3 +94,22 @@ def test_mismatched_bucket_count_still_correct(spark, bucketed_tables, tmp_path)
         assert joined.count() == expected.count()
     finally:
         spark.sql("DROP TABLE IF EXISTS index_b4")
+
+
+def test_colocated_dedup_query_writes_per_process_paths(spark, tmp_path):
+    """Two processes replaying the ``colocated_dedup`` bench query at once
+    must not overwrite each other's bucketed files: its tables live under a
+    directory of this process."""
+    import __spark_entry__ as entry
+
+    sf = tmp_path / "sf_tiny"
+    spark.createDataFrame(
+        [(i, f"text {i % 7}") for i in range(300)], "doc_id long, text string"
+    ).write.parquet(str(sf / "documents.parquet"))
+    entry.queries()["colocated_dedup"](spark, str(sf)).collect()
+    for t in ("colocated_corpus_sf_tiny", "colocated_index_sf_tiny"):
+        location = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
+            .filter("col_name = 'Location'").first()["data_type"]
+        )
+        assert f"colocated_sf_tiny_{os.getpid()}/" in location

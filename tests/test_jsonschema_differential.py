@@ -41,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import re
 import sys
 
 import pytest
@@ -276,16 +277,12 @@ def _row_pass_sql(plan) -> str:
     ])
 
 
-def test_engine_agrees_with_draft7_validator(spark):
-    rng = random.Random(SEED)
-    rows = _rows(rng)
-    df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
-    instances = [_instance(r) for r in rows]
-    gen = _Gen(rng, rows)
-
+def _compare(spark, df, instances, docs):
+    """Compile each spec, evaluate the row passes in batches and compare
+    them with ``Draft7Validator``: (evaluated, skipped, disagreements,
+    raw exceptions, allow-listed specs)."""
     evaluated, skipped, exceptions, allowed = [], 0, [], []
-    for i in range(N_SPECS):
-        doc = gen.document(i)
+    for doc in docs:
         try:
             plan = compile_document(doc).bind_schema(df.schema)
         except Exception as e:  # noqa: BLE001 — any raise is a finding
@@ -313,7 +310,7 @@ def test_engine_agrees_with_draft7_validator(spark):
                 try:
                     res = run_validation(spark, df, plan)
                     bad = {r["rid"] for r in res.violations.select("rid").collect()}
-                    columns.append([i not in bad for i in range(N_ROWS)])
+                    columns.append([i not in bad for i in range(len(instances))])
                 except Exception as e:  # noqa: BLE001
                     exceptions.append((doc, f"{type(e).__name__}: {str(e)[:300]}"))
                     columns.append(None)
@@ -324,15 +321,139 @@ def test_engine_agrees_with_draft7_validator(spark):
             for inst, ok in zip(instances, engine):
                 if validator.is_valid(inst) != ok:
                     disagreements.append((json.dumps(doc), inst, ok))
+    return evaluated, skipped, disagreements, exceptions, allowed
 
-    report = "\n".join(
-        [f"engine={ok} on {inst} for {doc}" for doc, inst, ok in disagreements[:8]]
-        + [f"{e} for {json.dumps(d)}" for d, e in exceptions[:8]]
-    )
-    print(f"differential: {len(evaluated)} evaluated, {skipped} skipped, "
+
+def _report(label, evaluated, skipped, disagreements, exceptions) -> str:
+    print(f"{label}: {len(evaluated)} evaluated, {skipped} skipped, "
           f"{len(disagreements)} disagreeing rows in "
           f"{len({d for d, _, _ in disagreements})} specs, "
           f"{len(exceptions)} raw exceptions")
+    return "\n".join(
+        [f"engine={ok} on {inst} for {doc}" for doc, inst, ok in disagreements[:8]]
+        + [f"{e} for {json.dumps(d)}" for d, e in exceptions[:8]]
+    )
+
+
+def test_engine_agrees_with_draft7_validator(spark):
+    rng = random.Random(SEED)
+    rows = _rows(rng)
+    df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
+    gen = _Gen(rng, rows)
+    docs = [gen.document(i) for i in range(N_SPECS)]
+
+    evaluated, skipped, disagreements, exceptions, allowed = _compare(
+        spark, df, [_instance(r) for r in rows], docs)
+    report = _report("differential", evaluated, skipped, disagreements, exceptions)
     assert not allowed, "the generator made a spec outside the compared surface"
     assert len(evaluated) >= MIN_EVALUATED
     assert not disagreements and not exceptions, report
+
+
+# ------------------------------------------------- discriminated oneOf
+
+TAGGED_SEED = 21
+N_TAGGED_SPECS = 240
+TAGGED_SCHEMA = (
+    "rid bigint, t struct<kind: string, a: bigint, b: string>, "
+    "at array<struct<kind: string, a: bigint, b: string>>"
+)
+TAGGED_PROPS = {"kind": {"type": "string"}, "a": {"type": "integer"},
+                "b": {"type": "string"}}
+TAGS = ("x", "y", "z")
+# a ``oneOf`` whose arms all require one field and pin it to distinct values
+# lowers to a CASE on that field; every near-miss keeps the arm count
+NEAR_MISSES = ("shared_const", "not_required", "two_value_enum", "wrong_type")
+CASE_RE = re.compile(r"CASE \S+\.`(kind|a)` WHEN")
+
+
+def _tagged_rows(rng: random.Random):
+    def some(gen, p_null=0.15):
+        return None if rng.random() < p_null else gen()
+
+    def obj():
+        return (some(lambda: rng.choice(TAGS + ("w",))), some(lambda: rng.randint(-1, 3)),
+                some(lambda: "".join(rng.choice("ab1") for _ in range(rng.randint(0, 2)))))
+
+    return [(i, some(obj), some(lambda: [some(obj, 0.1) for _ in range(rng.randint(0, 3))]))
+            for i in range(N_ROWS)]
+
+
+def _tagged_instance(row) -> dict:
+    def obj(o):
+        return None if o is None else {k: v for k, v in zip(("kind", "a", "b"), o)
+                                       if v is not None}
+
+    _, t, at = row
+    out = {"t": obj(t), "at": None if at is None else [obj(e) for e in at]}
+    return {k: v for k, v in out.items() if v is not None}
+
+
+def _tagged_one_of(rng: random.Random, variant: str) -> list:
+    """Arms that each require a tag field (``kind`` or, with integer tags,
+    ``a``) and pin it with a ``const`` or one-value ``enum``, plus random
+    constraints on the other fields; ``variant`` breaks the pattern once."""
+    name = "a" if rng.random() < 0.25 else "kind"
+    pool = [0, 1, 2] if name == "a" else list(TAGS)
+    values = rng.sample(pool, rng.randint(1, 3))
+    if variant == "shared_const":
+        values = values[:1] * 2 + values[1:]
+    arms = []
+    for v in values:
+        pin = {"const": v} if rng.random() < 0.7 else {"enum": [v]}
+        arm = {"properties": {name: pin}, "required": [name]}
+        other = rng.choice([f for f in TAGGED_PROPS if f != name])
+        if rng.random() < 0.7:
+            arm["properties"][other] = rng.choice((
+                {"minimum": rng.randint(0, 2)}, {"maximum": rng.randint(0, 2)},
+                {"pattern": rng.choice(("^a", "1"))}, {"maxLength": rng.randint(0, 1)},
+                {"type": "null"}, {"not": {"minimum": 2}},
+            ))
+        if rng.random() < 0.4:
+            arm["required"].append(other)
+        if rng.random() < 0.15:
+            arm["type"] = rng.choice(("object", "string"))
+        arms.append(arm)
+    k = rng.randrange(len(arms))
+    if variant == "not_required":
+        arms[k]["required"].remove(name)
+    elif variant == "two_value_enum":
+        arms[k]["properties"][name] = {"enum": [values[k], pool[(pool.index(values[k]) + 1) % 3]]}
+    elif variant == "wrong_type":
+        arms[k]["properties"][name] = {"const": 1 if name == "kind" else "x"}
+    return arms
+
+
+def _tagged_document(rng: random.Random, i: int):
+    variant = rng.choice(("case",) * 4 + NEAR_MISSES)
+    node = {"type": "object", "properties": dict(TAGGED_PROPS),
+            "oneOf": _tagged_one_of(rng, variant)}
+    if rng.random() < 0.5:
+        prop = {"t": node}
+    else:
+        if rng.random() < 0.3:
+            node["type"] = ["object", "null"]
+        prop = {"at": {"type": "array", "items": node}}
+    return variant, {"$id": f"x://diff/T{i}", "type": "object", "properties": prop}
+
+
+def test_discriminated_one_of_agrees_with_draft7_validator(spark):
+    rng = random.Random(TAGGED_SEED)
+    rows = _tagged_rows(rng)
+    df = spark.createDataFrame(rows, TAGGED_SCHEMA).coalesce(1)
+    variants, docs = zip(*[_tagged_document(rng, i) for i in range(N_TAGGED_SPECS)])
+
+    evaluated, skipped, disagreements, exceptions, allowed = _compare(
+        spark, df, [_tagged_instance(r) for r in rows], docs)
+    report = _report("discriminated oneOf", evaluated, skipped, disagreements, exceptions)
+    assert not allowed and not skipped
+    assert not disagreements and not exceptions, report
+    lowered = {
+        json.dumps(doc): any(CASE_RE.search(c.sql) for c in plan.row_checks)
+        for doc, plan in evaluated
+    }
+    by_variant = {v: [lowered[json.dumps(d)] for v2, d in zip(variants, docs) if v2 == v]
+                  for v in ("case",) + NEAR_MISSES}
+    assert len(by_variant["case"]) >= 60 and all(by_variant["case"])
+    for v in NEAR_MISSES:
+        assert len(by_variant[v]) >= 15 and not any(by_variant[v]), v

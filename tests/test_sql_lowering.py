@@ -135,3 +135,34 @@ def test_verdict_build_py4j_budget(spark):
     finally:
         client.__dict__.pop("send_command", None)
     assert len(calls) <= 150
+
+
+def _tree(node):
+    """Every node of a Catalyst tree (plan or expression), over py4j."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _tree(children.apply(i))
+
+
+def test_flagship_span_check_plan_shape(spark):
+    """The rich spec's optimized plan holds no interpreted ``aggregate``
+    fold, and each ``oneOf`` arm's pattern is evaluated in exactly one
+    place of ``spans__conforms`` (the arm the span's ``kind`` selects)."""
+    spec = documents_iv_rich_spec()
+    plan = compile_document(spec)
+    df = spark.createDataFrame([], plan.expected_schema)
+    optimized = runner.apply_row_checks(df, plan)._jdf.queryExecution().optimizedPlan()
+    exprs = [e for p in _tree(optimized) for i in range(p.expressions().size())
+             for e in _tree(p.expressions().apply(i))]
+    assert not [e for e in exprs if e.getClass().getSimpleName() == "ArrayAggregate"]
+
+    (spans,) = [e for e in exprs if e.getClass().getSimpleName() == "Alias"
+                and e.name() == runner.CHECK_PREFIX + "spans__conforms"]
+    patterns = sorted(e.right().toString() for e in _tree(spans)
+                      if e.getClass().getSimpleName() == "RLike")
+    arms = spec["properties"]["spans"]["items"]["oneOf"]
+    assert patterns == sorted(
+        sub["pattern"] for arm in arms for sub in arm["properties"].values()
+        if "pattern" in sub
+    )
