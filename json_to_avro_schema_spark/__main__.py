@@ -10,6 +10,14 @@ mandates::
 files, not ``-m`` modules; ``python -m json_to_avro_schema_spark`` works
 locally. ``scripts/make_pyfiles.py`` builds engine.zip.)
 
+Both modes run one sink step, :func:`runner.sink_validation`: violations,
+then verdicts keyed by ``--part-key-col`` — derived from the written
+violations when every check enforces, from the checked rows when any check
+is ``x-severity: warn``. A plain run writes flat ``violations/`` and
+``verdicts/``; a ``--checkpoint`` run writes them hive-partitioned by the
+key, for the pending partitions only (``checkpoint.py``). Any table check
+the plan declares adds ``table_verdicts/``.
+
 Arg handling mirrors the reference CLI (``[-n/--namespace ns] inputFile``,
 /root/reference/src/main/scala/Application.scala:47-61): result to stdout,
 logs to stderr, non-zero exit on typed spec errors.
@@ -25,7 +33,7 @@ import uuid
 from .checkpoint import CheckpointStore, run_with_checkpoint
 from .compiler.plan import compile_document
 from .errors import SpecError
-from .runner import run_validation
+from .runner import sink_validation
 from .session import get_spark
 from .sources.iceberg import read_table
 
@@ -76,6 +84,7 @@ def main(argv=None) -> int:
 
 
 def _run(spark, df, plan, args) -> int:
+    summary = {"spec": plan.spec_name, "spec_hash": plan.spec_hash}
     if args.checkpoint:
         store = CheckpointStore(args.checkpoint)
         run_id = args.run_id or uuid.uuid4().hex[:12]
@@ -83,59 +92,32 @@ def _run(spark, df, plan, args) -> int:
             spark, df, plan, store, run_id, args.out,
             part_key_col=args.part_key_col,
         )
-        summary = {
-            "spec": plan.spec_name,
-            "spec_hash": plan.spec_hash,
+        summary.update({
             "run_id": r.run_id,
             "partitions_total": r.n_partitions_total,
             "partitions_resumed": r.n_partitions_resumed,
             "partitions_processed": r.n_partitions_processed,
-            "unchecked_paths": plan.unchecked_paths,
-        }
+        })
     else:
-        from .runner import partition_verdicts, verdicts_from_violations
-
-        res = run_validation(spark, df, plan)
-        res.violations.write.mode("overwrite").parquet(f"{args.out}/violations")
-        # one full compute scan: verdicts derive from the written violations
-        # (unless the spec carries warn-severity checks, whose failures
-        # never reach the violations sink — then the second scan is the
-        # price of truthful verdict lines)
-        viol = spark.read.schema(res.violations.schema).parquet(
-            f"{args.out}/violations"
+        res = sink_validation(
+            spark, df, plan, args.out, part_key_col=args.part_key_col
         )
-        bound = plan.bind_schema(df.schema)
-        if any(c.severity != "enforce" for c in bound.row_checks):
-            checked = res.checked
-            if args.part_key_col != "part_key":
-                checked = checked.withColumnRenamed(
-                    args.part_key_col, "part_key"
-                )
-            verdicts = partition_verdicts(checked, bound)
-        else:
-            verdicts = verdicts_from_violations(
-                df, viol, bound, part_key_col=args.part_key_col
-            )
-        verdicts.write.mode("overwrite").parquet(f"{args.out}/verdicts")
         verd = spark.read.parquet(f"{args.out}/verdicts")
         n_fail = verd.agg({"n_fail": "sum"}).collect()[0][0] or 0
-        summary = {
-            "spec": plan.spec_name,
-            "spec_hash": plan.spec_hash,
+        summary.update({
             "n_checks": len(plan.row_checks),
             "n_fail": int(n_fail),
             "schema_problems": res.schema_problems,
-            "unchecked_paths": plan.unchecked_paths,
-        }
-    if plan.unique_checks or plan.ref_checks or plan.drift_checks or plan.stats_columns:
-        from .sources.iceberg import read_table as _read
+        })
+    summary["unchecked_paths"] = plan.unchecked_paths
+    if plan.has_table_checks():
         from .table_checks import run_table_checks
 
         def _parse_kv(pairs):
             out = {}
             for kv in pairs:
                 name, _, path = kv.partition("=")
-                out[name] = _read(spark, path)
+                out[name] = read_table(spark, path)
             return out
 
         tv = run_table_checks(

@@ -18,11 +18,15 @@ with the lineage row, so corpus-wide quantiles after any number of
 crash/resume cycles come from :func:`merged_state_digest` — merging the
 stored partials, never rescanning completed partitions' data.
 
+Sinks and verdict rule are the plain CLI run's (``runner.sink_validation``;
+verdicts from the written violations unless a check is ``x-severity:
+warn``), in the hive-partitioned layout instead of the flat one.
+
 Atomicity & idempotence:
   * violation/verdict sinks are written with *dynamic partition overwrite*
-    (``partitionOverwriteMode=dynamic`` + ``mode('overwrite')``), so a retried
-    partition replaces exactly its own output directory — re-running a
-    half-finished partition cannot duplicate rows;
+    (a per-write ``partitionOverwriteMode`` option; the session conf is
+    untouched), so a retried partition replaces exactly its own output
+    directory — re-running a half-finished partition cannot duplicate rows;
   * the state row is appended only after both sinks return, giving
     write-then-commit ordering (an Iceberg snapshot commit would make this a
     single atomic operation; Iceberg jars aren't in this image, so the store
@@ -42,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .compiler.plan import CompiledPlan
-from .runner import ValidationResult, run_validation
+from .runner import ValidationResult, sink_validation
 
 STATE_SCHEMA = (
     "run_id string, part_key string, spec_name string, spec_hash string, "
@@ -111,58 +115,26 @@ def run_with_checkpoint(
     sketch_delta: float = 100.0,
 ) -> CheckpointedRun:
     """Validate only the partitions not yet completed for (run_id, spec_hash);
-    sink violations + verdicts partitioned by part_key; then commit state.
+    sink violations + verdicts partitioned by part_key_col; then commit state.
 
     ``sketch_col``: numeric column to sketch per partition (t-digest). The
     serialized digest rides the state row (``state_json``), so resumed runs
     keep completed partitions' sketches without rescanning them — merge
     them all with :func:`merged_state_digest`. One extra pass over the
     PENDING rows only (grouped by the partition key)."""
-    # dynamic overwrite is what makes a retried partition replace exactly
-    # its own sink directory — but it must not leak into the session (a
-    # later plain mode('overwrite') write, e.g. write_packed_shards, would
-    # silently keep stale partition dirs). Set it for this run's sink
-    # writes only and restore the caller's value on every exit path.
-    _MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(_MODE_KEY, None)
-    spark.conf.set(_MODE_KEY, "dynamic")
-    try:
-        return _run_with_checkpoint(
-            spark, df, plan, store, run_id, out_dir,
-            part_key_col=part_key_col, sketch_col=sketch_col,
-            sketch_delta=sketch_delta,
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset(_MODE_KEY)
-        else:
-            spark.conf.set(_MODE_KEY, prev_mode)
-
-
-def _run_with_checkpoint(
-    spark: SparkSession,
-    df: DataFrame,
-    plan: CompiledPlan,
-    store: CheckpointStore,
-    run_id: str,
-    out_dir: str,
-    *,
-    part_key_col: str,
-    sketch_col: Optional[str],
-    sketch_delta: float,
-) -> CheckpointedRun:
     all_parts = df.select(part_key_col).distinct()
-    # the state table's key column is always named part_key; align it to
-    # the caller's column so a custom part_key_col resolves in the joins
+    # the state table's key column is always named part_key
     done = store.completed_partitions(spark, run_id, plan.spec_hash)
-    if part_key_col != "part_key":
-        done = done.withColumnRenamed("part_key", part_key_col)
     # pending stays a DataFrame end-to-end: at 10^5-10^6 partitions a
     # collect + isin(literal list) would embed one literal per partition in
     # every downstream plan. localCheckpoint materializes the (tiny) key
     # set once so the three reuses below don't re-scan the input.
     pending = (
-        all_parts.join(F.broadcast(done), part_key_col, "left_anti")
+        all_parts.join(
+            F.broadcast(done),
+            all_parts[part_key_col] == done["part_key"],
+            "left_anti",
+        )
         .localCheckpoint(eager=True)
     )
 
@@ -175,49 +147,10 @@ def _run_with_checkpoint(
     # source this triggers dynamic partition pruning (whole directories /
     # manifests skipped at scan time), without a driver-side literal plan
     sub = df.join(F.broadcast(pending), part_key_col, "left_semi")
-    res = run_validation(spark, sub, plan)
-
-    viol_path = os.path.join(out_dir, "violations")
+    res = sink_validation(
+        spark, sub, plan, out_dir, part_key_col=part_key_col, pending=pending
+    )
     verd_path = os.path.join(out_dir, "verdicts")
-    res.violations.write.mode("overwrite").partitionBy(part_key_col).parquet(viol_path)
-    # verdicts from the materialized violations + a column-pruned row count —
-    # ONE full compute scan total instead of two (runner.verdicts_from_violations)
-    try:
-        viol_written = spark.read.parquet(viol_path).join(
-            F.broadcast(pending), part_key_col, "left_semi"
-        )
-    except Exception:  # zero violations ⇒ no files to infer from
-        viol_written = spark.createDataFrame([], res.violations.schema)
-    from .runner import partition_verdicts, verdicts_from_violations
-
-    # the verdict helpers need the same check list run_validation built:
-    # bind the schema here too (schema-bound additionalProperties checks
-    # otherwise get no verdict lines)
-    bound = plan.bind_schema(sub.schema)
-    if any(c.severity != "enforce" for c in bound.row_checks):
-        # warn-severity failures never reach the violations sink, so the
-        # fused derivation cannot count them — pay the second compute
-        # scan to keep their verdict lines truthful
-        checked = res.checked
-        if part_key_col != "part_key":
-            if "part_key" in checked.columns:
-                # a pre-existing literal part_key DATA column would make
-                # the rename produce duplicate names and the groupBy
-                # ambiguous; the check-result columns are separate, so
-                # dropping the data column is safe here
-                checked = checked.drop("part_key")
-            checked = checked.withColumnRenamed(part_key_col, "part_key")
-        verdicts = partition_verdicts(checked, bound)
-        if part_key_col != "part_key":
-            verdicts = verdicts.withColumnRenamed("part_key", part_key_col)
-    else:
-        verdicts = verdicts_from_violations(
-            sub, viol_written, bound, part_key_col=part_key_col
-        )
-        if part_key_col != "part_key":
-            # the helper's output key column is always named part_key
-            verdicts = verdicts.withColumnRenamed("part_key", part_key_col)
-    verdicts.write.mode("overwrite").partitionBy(part_key_col).parquet(verd_path)
 
     # state rows AFTER both sinks committed (per-partition metrics = lineage)
     base = (

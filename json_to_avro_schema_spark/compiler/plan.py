@@ -34,7 +34,8 @@ from __future__ import annotations
 import hashlib
 import json
 import re
-from dataclasses import dataclass, field as dc_field, replace as dc_replace
+from dataclasses import dataclass, field as dc_field, fields as dc_fields
+from dataclasses import replace as dc_replace
 from typing import Any, Dict, List, Optional, Tuple
 
 from pyspark.sql import types as T
@@ -186,6 +187,18 @@ class CompiledPlan:
 
     def check_names(self) -> List[str]:
         return [c.name for c in self.row_checks]
+
+    def has_table_checks(self) -> bool:
+        """Whether the spec declares any table-level check family (what
+        ``table_checks.run_table_checks`` executes): every ``*_checks``
+        list besides ``row_checks``, plus the ``x-stats`` columns. Derived
+        from the fields, so a family added as a new ``*_checks`` list is
+        gated in without editing this method."""
+        return bool(self.stats_columns) or any(
+            getattr(self, f.name)
+            for f in dc_fields(self)
+            if f.name.endswith("_checks") and f.name != "row_checks"
+        )
 
     def bind_schema(self, schema: T.StructType) -> "CompiledPlan":
         """Materialize checks that need the ACTUAL data schema: root-level

@@ -29,6 +29,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .outliers import attach_group_stats
+
 
 def quantile_bin_edges(
     df: DataFrame,
@@ -122,7 +124,8 @@ def standardize(
     decimals: int = 6,
     out_col: Optional[str] = None,
 ) -> DataFrame:
-    """Scale a numeric column per ``by`` group (or globally):
+    """Scale a numeric column per ``by`` group (or globally; a null ``by``
+    key is its own group, so every input row comes back):
     ``zscore`` → ``(x − mean)/stddev_samp`` or ``minmax`` → ``(x − min)/
     (max − min)`` — the feature-normalization step next to binning.
     Returns ``df`` plus the scaled column (default ``<col>_scaled``,
@@ -155,10 +158,8 @@ def standardize(
                 decimals,
             ),
         )
-    joined = (
-        df.join(F.broadcast(stats), on=by) if by
-        else df.join(F.broadcast(stats), how="cross")
-    )
-    return joined.withColumn(out_col or f"{col}_scaled", scaled).drop(
-        "__m", "__s"
+    return (
+        attach_group_stats(df, stats, by)
+        .withColumn(out_col or f"{col}_scaled", scaled)
+        .drop("__m", "__s")
     )

@@ -54,6 +54,25 @@ def _grouped(df: DataFrame, by: Optional[Sequence[str]]):
     return df.groupBy(*by) if by else df.groupBy()
 
 
+def attach_group_stats(
+    df: DataFrame, stats: DataFrame, by: Optional[Sequence[str]]
+) -> DataFrame:
+    """``df``'s columns plus its group's columns from ``stats`` (one row
+    per ``by`` group, built by a groupBy over ``df``; a single row when
+    ``by`` is empty) — a broadcast join-back, group-scale by construction.
+
+    Keys match null-safely (``<=>``): the groupBy that built ``stats``
+    puts every null key in one group, and its rows get that group's
+    stats instead of dropping out of an inner equi-join. With ``by``
+    None or empty it is a cross join against the single global row."""
+    if not by:
+        return df.join(F.broadcast(stats), how="cross")
+    keys = [f"__by{i}" for i in range(len(by))]
+    renamed = stats.withColumnsRenamed(dict(zip(by, keys)))
+    cond = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(by, keys)]
+    return df.join(F.broadcast(renamed), on=cond).drop(*keys)
+
+
 def mad_outliers(
     df: DataFrame,
     value_col: str,
@@ -65,26 +84,20 @@ def mad_outliers(
 ) -> DataFrame:
     """Rows whose modified z-score ``0.6745·(x − median)/MAD`` exceeds
     ``k`` in magnitude (Iglewicz & Hoaglin's 3.5 default), per ``by``
-    group (or globally).  Returns the input columns plus ``med``,
-    ``mad``, ``robust_z`` (all rounded) — only the flagged rows.
+    group (or globally; a null ``by`` key is its own group).  Returns the
+    input columns plus ``med``, ``mad``, ``robust_z`` (all rounded) —
+    only the flagged rows.
 
     Two group-scale aggregate passes (median, then median |dev|), two
     broadcast join-backs, one codegen'd flag projection.  Null values
     and zero-MAD groups are never flagged."""
     by = list(by) if by else []
     med = _grouped(df, by).agg(_pctl(value_col, 0.5, approx).alias("__med"))
-    with_med = (
-        df.join(F.broadcast(med), on=by) if by
-        else df.join(F.broadcast(med), how="cross")
-    )
-    dev = with_med.withColumn(
+    dev = attach_group_stats(df, med, by).withColumn(
         "__adev", F.abs(F.col(value_col) - F.col("__med"))
     )
     mad = _grouped(dev, by).agg(_pctl("__adev", 0.5, approx).alias("__mad"))
-    scored = (
-        dev.join(F.broadcast(mad), on=by) if by
-        else dev.join(F.broadcast(mad), how="cross")
-    )
+    scored = attach_group_stats(dev, mad, by)
     z = F.when(
         F.col("__mad") > 0,
         F.round(
@@ -111,7 +124,8 @@ def iqr_outliers(
     decimals: int = 6,
 ) -> DataFrame:
     """Rows outside the Tukey fences ``[q1 − factor·IQR, q3 + factor·IQR]``
-    per ``by`` group (or globally): the box-plot outlier rule
+    per ``by`` group (or globally; a null ``by`` key is its own group):
+    the box-plot outlier rule
     (factor 1.5 = outliers, 3.0 = far out).  Returns the input columns
     plus ``lo_fence``/``hi_fence`` (rounded) — only the flagged rows.
 
@@ -126,12 +140,8 @@ def iqr_outliers(
     iqr = F.col("__q3") - F.col("__q1")
     lo = F.round(F.col("__q1") - F.lit(factor) * iqr, decimals)
     hi = F.round(F.col("__q3") + F.lit(factor) * iqr, decimals)
-    joined = (
-        df.join(F.broadcast(q), on=by) if by
-        else df.join(F.broadcast(q), how="cross")
-    )
     return (
-        joined.withColumn("lo_fence", lo)
+        attach_group_stats(df, q, by).withColumn("lo_fence", lo)
         .withColumn("hi_fence", hi)
         .filter(
             (F.col(value_col) < F.col("lo_fence"))

@@ -261,27 +261,18 @@ def write_packed_shards(
         df, token_col, order_col, budget, num_partitions=num_partitions
     )
     spark = df.sparkSession
-    # partitionOverwriteMode=dynamic left set session-wide (e.g. by a
-    # checkpointed validation run) would make mode='overwrite' replace
-    # only the shard_id dirs THIS run produces, leaving a previous larger
-    # run's extra shards interleaved in the output — the same corruption
-    # the append rejection above guards against, and it breaks the
-    # read-back shard count. Pin static for this write, restore after.
-    _MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(_MODE_KEY, None)
-    spark.conf.set(_MODE_KEY, "static")
-    try:
-        (
-            shards.repartition(F.col("shard_id"))
-            .write.mode(mode)
-            .partitionBy("shard_id")
-            .parquet(out_path)
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset(_MODE_KEY)
-        else:
-            spark.conf.set(_MODE_KEY, prev_mode)
+    # static for this write, whatever the session says: under a
+    # session-wide partitionOverwriteMode=dynamic, mode='overwrite' would
+    # replace only the shard_id dirs THIS run produces, leaving a previous
+    # larger run's extra shards interleaved in the output — the same
+    # corruption the append rejection above guards against
+    (
+        shards.repartition(F.col("shard_id"))
+        .write.mode(mode)
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("shard_id")
+        .parquet(out_path)
+    )
     return (
         spark.read.parquet(out_path)
         .select("shard_id").distinct().count()

@@ -22,10 +22,11 @@ Scale notes (the parts that matter at 10^12 rows):
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field as dc_field
 from typing import Dict, List, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -76,11 +77,10 @@ class ValidationResult:
                                 # sink: valid ∪ violations = input, disjoint)
     schema_problems: List[str] = dc_field(default_factory=list)
     unchecked_paths: List[str] = dc_field(default_factory=list)
+    plan: Optional[CompiledPlan] = None  # the schema-bound plan checked
 
 
-def apply_row_checks(
-    df: DataFrame, plan: CompiledPlan, part_key: Optional[Column] = None
-) -> DataFrame:
+def apply_row_checks(df: DataFrame, plan: CompiledPlan) -> DataFrame:
     """One projection: original columns + a boolean column per check.
 
     Check columns are fail-closed: a null predicate result (indeterminate)
@@ -91,8 +91,6 @@ def apply_row_checks(
         f"{coalesce_false(chk.sql)} AS {ident(CHECK_PREFIX + chk.name)}"
         for chk in plan.row_checks
     ])
-    if part_key is not None and "part_key" not in df.columns:
-        out = out.withColumn("part_key", part_key)
     # only enforce-severity checks gate the row; warn-severity checks
     # (x-severity: warn) still get their column + verdict line but a
     # failing row stays valid (DLT's plain `expect` level)
@@ -121,14 +119,20 @@ def extract_violations(checked: DataFrame, original_columns: List[str]) -> DataF
     )
 
 
-def partition_verdicts(checked: DataFrame, plan: CompiledPlan) -> DataFrame:
-    """Per-(part_key, check) verdicts in long form — ONE fused aggregation.
+def partition_verdicts(
+    checked: DataFrame, plan: CompiledPlan, *, part_key_col: str = "part_key"
+) -> DataFrame:
+    """Per-(partition, check) verdicts in long form — ONE fused aggregation.
 
-    groupBy(part_key).agg(count, sum(fail_i)…) then unpivot driver-side via
-    ``stack`` so the shuffle carries one compact row per partition.
+    groupBy(part_key_col).agg(count, sum(fail_i)…) then unpivot driver-side
+    via ``stack`` so the shuffle carries one compact row per partition. The
+    key column keeps the name ``part_key_col`` (the constant ``'__all__'``
+    partition when ``checked`` has no such column).
     """
-    key = _part_key_sql(checked, "part_key")
-    wide = checked.groupBy(F.expr(f"{key} AS part_key")).agg(
+    key = ident(part_key_col)
+    wide = checked.groupBy(
+        F.expr(f"{_part_key_sql(checked, part_key_col)} AS {key}")
+    ).agg(
         F.expr("count(1) AS n_rows"),
         *[
             F.expr(f"sum(CAST(NOT {ident(CHECK_PREFIX + c.name)} AS BIGINT)) AS fail_{i}")
@@ -138,19 +142,19 @@ def partition_verdicts(checked: DataFrame, plan: CompiledPlan) -> DataFrame:
     k = len(plan.row_checks)
     if k == 0:
         return wide.selectExpr(
-            "part_key", "CAST(NULL AS STRING) AS check_name",
+            key, "CAST(NULL AS STRING) AS check_name",
             "n_rows", "0 AS n_fail", "true AS pass",
         )
     stack_args = ", ".join(
         f"{string(c.name)}, fail_{i}" for i, c in enumerate(plan.row_checks)
     )
     long = wide.selectExpr(
-        "part_key",
+        key,
         "n_rows",
         f"stack({k}, {stack_args}) as (check_name, n_fail)",
     )
     return long.selectExpr(
-        "part_key", "check_name", "n_rows", "n_fail", "n_fail = 0 AS pass"
+        key, "check_name", "n_rows", "n_fail", "n_fail = 0 AS pass"
     )
 
 
@@ -180,12 +184,7 @@ def sample_violations(
     )
 
 
-def verdicts_with_violation_count(
-    df: DataFrame,
-    plan: CompiledPlan,
-    *,
-    part_key: Optional[Column] = None,
-):
+def verdicts_with_violation_count(df: DataFrame, plan: CompiledPlan):
     """ONE-scan verdict aggregation + total failing-row count.
 
     ``Observation`` metrics ride the same job that feeds the verdict
@@ -196,7 +195,7 @@ def verdicts_with_violation_count(
     """
     from pyspark.sql import Observation
 
-    checked = apply_row_checks(df, plan, part_key=part_key)
+    checked = apply_row_checks(df, plan)
     obs = Observation()
     observed = checked.observe(
         obs,
@@ -213,7 +212,7 @@ def verdicts_from_violations(
     *,
     part_key_col: str = "part_key",
 ) -> DataFrame:
-    """Per-(part_key, check) verdicts WITHOUT re-scanning the checked table.
+    """Per-(partition, check) verdicts WITHOUT re-scanning the checked table.
 
     Sink-path optimization: after ``violations`` is materialized, every
     failing (row, check) is already in it, so
@@ -221,8 +220,9 @@ def verdicts_from_violations(
     ``n_rows`` needs the source — a column-pruned scan of the partition-key
     column (parquet never decodes ``spans``). One full compute pass over
     the data instead of two; at 100 TB the verdict agg becomes ~free.
-    Output is identical to :func:`partition_verdicts` (zero-filled for
-    checks with no failures).
+    Output is identical to :func:`partition_verdicts` with the same
+    ``part_key_col`` (zero-filled for checks with no failures; a null key
+    is its own partition).
 
     Requires an all-enforce plan: warn-severity failures on rows that
     pass every enforce check never enter ``violations``, so their counts
@@ -238,25 +238,29 @@ def verdicts_from_violations(
             f"{warn} (their failures are not violations) — use "
             f"partition_verdicts for this plan"
         )
+    key = ident(part_key_col)
     rows_per_part = df.groupBy(
-        F.expr(f"{_part_key_sql(df, part_key_col)} AS part_key")
+        F.expr(f"{_part_key_sql(df, part_key_col)} AS {key}")
     ).agg(F.expr("count(1) AS n_rows"))
     fails = (
         violations.selectExpr(
-            f"{_part_key_sql(violations, part_key_col)} AS part_key",
-            "explode(failed_checks) AS check_name",
+            f"{_part_key_sql(violations, part_key_col)} AS __fail_key",
+            "explode(failed_checks) AS __fail_check",
         )
-        .groupBy("part_key", "check_name")
+        .groupBy("__fail_key", "__fail_check")
         .agg(F.expr("count(1) AS n_fail"))
     )
     names = call("array", *[string(c.name) for c in plan.row_checks])
     grid = rows_per_part.selectExpr(
-        "part_key", "n_rows", f"explode({names}) AS check_name"
+        key, "n_rows", f"explode({names}) AS check_name"
     )
+    # null-safe on the key: a null partition key is its own partition (as
+    # in partition_verdicts), and its failures must not drop out of the join
+    on = F.expr(f"{key} <=> __fail_key AND check_name = __fail_check")
     return (
-        grid.join(F.broadcast(fails), ["part_key", "check_name"], "left")
+        grid.join(F.broadcast(fails), on, "left")
         .selectExpr(
-            "part_key",
+            key,
             "check_name",
             "n_rows",
             "coalesce(n_fail, 0) AS n_fail",
@@ -270,7 +274,6 @@ def run_validation(
     df: DataFrame,
     plan: CompiledPlan,
     *,
-    part_key: Optional[Column] = None,
     enforce_schema: bool = True,
 ) -> ValidationResult:
     """Build the full lazy validation plan. No action is triggered here —
@@ -288,7 +291,7 @@ def run_validation(
     # columns get their own checks, materialized against the actual schema
     plan = plan.bind_schema(df.schema)
     original_columns = list(df.columns)
-    checked = apply_row_checks(df, plan, part_key=part_key)
+    checked = apply_row_checks(df, plan)
     return ValidationResult(
         checked=checked,
         violations=extract_violations(checked, original_columns),
@@ -298,7 +301,66 @@ def run_validation(
         ),
         schema_problems=problems,
         unchecked_paths=list(plan.unchecked_paths),
+        plan=plan,
     )
+
+
+def sink_validation(
+    spark: SparkSession,
+    df: DataFrame,
+    plan: CompiledPlan,
+    out_dir: str,
+    *,
+    part_key_col: str = "part_key",
+    pending: Optional[DataFrame] = None,
+) -> ValidationResult:
+    """The sink step of both CLI modes: validate ``df`` once, then write
+    its violations and its verdicts, keyed by ``part_key_col``, under
+    ``out_dir``.
+
+    Verdicts come from the WRITTEN violations plus a column-pruned row
+    count when every check enforces (:func:`verdicts_from_violations`, one
+    compute scan); a warn-severity check's failures never reach the
+    violations, so then the checked rows are aggregated
+    (:func:`partition_verdicts`, a second scan).
+
+    ``pending=None`` writes both sinks flat. A resume run passes its
+    pending partition keys (``df`` holds only those): both sinks are
+    hive-partitioned with dynamic overwrite, so a retried partition
+    replaces exactly its own directory, and the violation read-back is
+    pruned to those partitions.
+    """
+    res = run_validation(spark, df, plan)
+    viol_path = os.path.join(out_dir, "violations")
+    verd_path = os.path.join(out_dir, "verdicts")
+
+    def write(frame: DataFrame, path: str) -> None:
+        w = frame.write.mode("overwrite")
+        if pending is not None:
+            # per-write: a session-wide dynamic mode would leak into
+            # later plain overwrites (they would keep stale partitions)
+            w = w.partitionBy(part_key_col).option(
+                "partitionOverwriteMode", "dynamic"
+            )
+        w.parquet(path)
+
+    write(res.violations, viol_path)
+    if any(c.severity != "enforce" for c in res.plan.row_checks):
+        verdicts = partition_verdicts(
+            res.checked, res.plan, part_key_col=part_key_col
+        )
+    else:
+        # the explicit schema also reads zero violations (no data files)
+        written = spark.read.schema(res.violations.schema).parquet(viol_path)
+        if pending is not None:
+            written = written.join(
+                F.broadcast(pending), part_key_col, "left_semi"
+            )
+        verdicts = verdicts_from_violations(
+            df, written, res.plan, part_key_col=part_key_col
+        )
+    write(verdicts, verd_path)
+    return res
 
 
 def fail_on_violations(

@@ -230,3 +230,18 @@ def test_standardize_zscore_and_minmax(spark):
     assert mm[100] is None
     with pytest.raises(ValueError):
         standardize(df, "v", method="robust")
+
+
+def test_standardize_null_key_is_its_own_group(spark):
+    from json_to_avro_schema_spark.operators.binning import standardize
+
+    df = spark.createDataFrame(
+        [(1, "A", 1.0), (2, "A", 3.0), (3, None, 10.0), (4, None, 20.0),
+         (5, "B", 7.0)],
+        "id long, g string, v double",
+    )
+    out = {r["id"]: r["v_scaled"] for r in standardize(df, "v", by=["g"]).collect()}
+    assert len(out) == 5  # the null-key rows are not dropped by the join-back
+    # (x - mean) / stddev_samp over the null group {10, 20}
+    assert out[3] == -round(1 / 2 ** 0.5, 6) and out[4] == round(1 / 2 ** 0.5, 6)
+    assert out[5] is None  # single-row group: stddev_samp is null

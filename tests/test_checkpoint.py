@@ -209,8 +209,8 @@ def test_checkpoint_warn_severity_verdicts_truthful(spark, tmp_path):
 
 def test_checkpoint_custom_part_key_col(spark, tmp_path):
     """A non-default part_key_col must work end-to-end: the state table's
-    fixed 'part_key' column is aliased at the joins, and both verdict
-    branches rename their output to the caller's column."""
+    fixed 'part_key' column is matched at the anti-join, and both verdict
+    branches key their output by the caller's column."""
     plan = compile_document(documents_iv_spec())
     df = generate_documents_iv(spark, 1000, violation_pct=5).withColumnRenamed(
         "part_key", "shard"
@@ -255,10 +255,9 @@ def test_checkpoint_restores_overwrite_mode_conf(spark, tmp_path):
 
 
 def test_checkpoint_custom_key_with_literal_part_key_column(spark, tmp_path):
-    """The warn-severity fallback renames the caller's part_key_col to the
-    helpers' fixed 'part_key' name; an unrelated pre-existing literal
-    'part_key' DATA column must be dropped first, not left to produce an
-    ambiguous duplicate (ADVICE r4, low)."""
+    """The warn-severity fallback keys its verdicts by the caller's
+    part_key_col; an unrelated pre-existing literal 'part_key' DATA column
+    must not produce an ambiguous duplicate (ADVICE r4, low)."""
     spec = documents_iv_spec()
     spec["properties"]["doc_id"]["x-severity"] = "warn"
     spec["properties"]["doc_id"]["pattern"] = "^[1-9a-f]"

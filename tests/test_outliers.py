@@ -170,3 +170,28 @@ def test_x_outlier_table_check(spark, df):
             "properties": {"v": {"type": "number"}},
             "x-outlier": [{"name": "no_col", "method": "iqr"}],
         })
+
+
+@pytest.fixture(scope="module")
+def null_key_df(spark):
+    # group A plus the same values under a NULL key: the null key is its
+    # own group, so its spike must flag exactly like A's
+    rows = [(i, "A", v) for i, v in enumerate(A)] + [
+        (400 + i, None, v) for i, v in enumerate(A)
+    ]
+    return spark.createDataFrame(rows, "id long, grp string, val double")
+
+
+def test_mad_flags_row_in_null_group(null_key_df):
+    got = sorted(
+        r["id"] for r in mad_outliers(null_key_df, "val", by=["grp"]).collect()
+    )
+    assert got == [9, 409]
+
+
+def test_iqr_flags_row_in_null_group(null_key_df):
+    got = sorted(
+        r["id"] for r in iqr_outliers(null_key_df, "val", by=["grp"]).collect()
+    )
+    want = [i for i, *_ in _iqr_brute(A)]
+    assert got == want + [400 + i for i in want] and 409 in got
