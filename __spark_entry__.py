@@ -5588,7 +5588,7 @@ def _q_quantile_bins_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     edges = quantile_bin_edges(li, "l_extendedprice", 8)
     return (
         li.select(
-            assign_bins(F.col("l_extendedprice"), edges).alias("bin"),
+            assign_bins("l_extendedprice", edges).alias("bin"),
             F.col("l_extendedprice").alias("v"),
         )
         .groupBy("bin")

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .compiler.plan import CompiledPlan
-from .runner import ValidationResult, sink_validation
+from .runner import ValidationResult, partitions_in, sink_validation
 
 STATE_SCHEMA = (
     "run_id string, part_key string, spec_name string, spec_hash string, "
@@ -129,24 +129,19 @@ def run_with_checkpoint(
     # collect + isin(literal list) would embed one literal per partition in
     # every downstream plan. localCheckpoint materializes the (tiny) key
     # set once so the three reuses below don't re-scan the input.
-    pending = (
-        all_parts.join(
-            F.broadcast(done),
-            all_parts[part_key_col] == done["part_key"],
-            "left_anti",
-        )
-        .localCheckpoint(eager=True)
-    )
+    pending = partitions_in(
+        all_parts, done, part_key_col, "left_anti", keys_col="part_key"
+    ).localCheckpoint(eager=True)
 
     n_total = all_parts.count()
     n_pending = pending.count()
     if n_pending == 0:
         return CheckpointedRun(run_id, n_total, n_total, 0, None)
 
-    # broadcast semi-join on the partition column: with a partitioned
-    # source this triggers dynamic partition pruning (whole directories /
-    # manifests skipped at scan time), without a driver-side literal plan
-    sub = df.join(F.broadcast(pending), part_key_col, "left_semi")
+    # broadcast semi-join on the partition column, null-safe so rows with
+    # a null key are validated as their own partition; no driver-side
+    # literal plan
+    sub = partitions_in(df, pending, part_key_col)
     res = sink_validation(
         spark, sub, plan, out_dir, part_key_col=part_key_col, pending=pending
     )
@@ -154,8 +149,7 @@ def run_with_checkpoint(
 
     # state rows AFTER both sinks committed (per-partition metrics = lineage)
     base = (
-        spark.read.parquet(verd_path)
-        .join(F.broadcast(pending), part_key_col, "left_semi")
+        partitions_in(spark.read.parquet(verd_path), pending, part_key_col)
         .groupBy(part_key_col)
         .agg(F.max("n_rows").alias("n_rows"), F.sum("n_fail").alias("n_fail"))
     )

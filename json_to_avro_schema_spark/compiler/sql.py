@@ -11,7 +11,8 @@ Three rules keep the text correct and cheap to parse:
   ``F.lit`` gives them — an ``int`` stays an integer literal (Spark picks
   INT or BIGINT by magnitude, as py4j does), a ``float`` becomes a ``D``
   double literal (a bare ``0.5`` parses as a decimal), infinities and NaN
-  are cast from strings, and strings escape ``\\`` and ``'``;
+  are cast from strings, a ``Decimal`` keeps its digits as a ``BD``
+  literal, and strings escape ``\\`` and ``'``;
 * every fragment is a :class:`Sql` that carries the precedence of its top
   operator, and composition adds only the parentheses needed for Spark to
   parse exactly the operator nesting the compiler built: a right operand
@@ -27,6 +28,7 @@ from __future__ import annotations
 
 import contextvars
 import math
+from decimal import Decimal
 from typing import Any, Callable, Optional
 
 # operator precedence, loosest first (Spark's SqlBase grammar)
@@ -73,6 +75,8 @@ def lit(v: Any) -> Sql:
         return Sql(repr(v) + "D")
     if isinstance(v, str):
         return string(v)
+    if isinstance(v, Decimal):
+        return Sql(f"{v}BD")
     raise TypeError(f"no SQL literal for {v!r}")
 
 

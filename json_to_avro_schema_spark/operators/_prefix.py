@@ -21,9 +21,17 @@ scale. The distributed shape instead:
    Bounds are monotonic in the order column, so ascending pid ==
    ascending value, and equal values always share a pid.
 3. the caller's own driver fold over those rows (an exclusive prefix, a
-   boundary stitch), broadcast back as a join on the pid, plus a
-   *within-pid* window whose own shuffle is the ONLY wide exchange —
-   every pid bucket computes in parallel.
+   boundary stitch), returned to the plan as a literal indexed by pid
+   (:func:`pid_lookup`: ``element_at(array(v_0 … v_maxpid), pid + 1)``),
+   plus a *within-pid* window whose own shuffle is the ONLY wide exchange
+   — every pid bucket computes in parallel. The array is dense by pid, so
+   the lookup is O(1) per row; a map literal would not do: ``element_at``
+   on a map scans its keys, O(P) per row at 4,096 buckets. A literal
+   needs no driver job, where a ``createDataFrame`` of the rows ships a
+   pickled Python RDD and broadcasts it through a join. Only
+   ``cumulative_tokens(by=…)`` still joins its offsets back: they are
+   O(P × groups) rows, and its documented contract drops rows whose
+   ``by`` key is null, which the equi-join does.
 
 Global result = pid offset + within-pid result; bit-identical to the
 single-partition window at any bucket count, which is exactly what the
@@ -33,10 +41,12 @@ DuckDB oracles check.
 from __future__ import annotations
 
 import math
-from typing import Optional
+from typing import Any, Dict, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..compiler.sql import Sql, call, cast, ident, lam, lit, when
 
 # Upper bound on pid buckets, independent of cluster parallelism. The P-1
 # quantile bounds are embedded in the plan as literals (a multi-MB plan at
@@ -79,8 +89,9 @@ def _order_bounds(
     return list(row["b"] or [])
 
 
-def _pid_from_bounds(order_col: str, bounds: list) -> Column:
-    """pid(x) = #{b in bounds : b <= x} over the SORTED bound list.
+def _pid_sql(order_col: str, bounds: list) -> Sql:
+    """pid(x) = #{b in bounds : b <= x} over the SORTED bound list, as SQL
+    text.
 
     Small bound counts use one literal-array filter scan. Past
     ``_TWO_LEVEL_MIN`` the scan goes two-level (sqrt-blocked): count the
@@ -93,31 +104,39 @@ def _pid_from_bounds(order_col: str, bounds: list) -> Column:
     can only live in fully-counted blocks or the single straddling block.
     """
     if not bounds:
-        return F.lit(0)
-    x = F.col(order_col)
+        return lit(0)
+    x = ident(order_col)
+
+    def count_le(arr: str) -> Sql:
+        le_x = lam(lambda b: f"{b} <= {x}", "b")
+        return call("size", call("filter", arr, le_x))
+
+    def array(items) -> Sql:
+        return call("array", *items)
+
     if len(bounds) <= _TWO_LEVEL_MIN:
-        barr = F.array(*[F.lit(b) for b in bounds])
-        return F.size(F.filter(barr, lambda b: b <= x))
+        return count_le(array(lit(b) for b in bounds))
     bs = int(math.isqrt(len(bounds) - 1)) + 1
     blocks = [bounds[i:i + bs] for i in range(0, len(bounds), bs)]
-    coarse = F.array(*[F.lit(b[-1]) for b in blocks])
     # element counts of blocks 0..i-1, so count_full = psize[full]
     psizes, acc = [0], 0
     for b in blocks:
         acc += len(b)
         psizes.append(acc)
-    psize_arr = F.array(*[F.lit(p) for p in psizes])
-    blocks_arr = F.array(*[F.array(*[F.lit(v) for v in b]) for b in blocks])
-    full = F.size(F.filter(coarse, lambda b: b <= x))
-    count_full = F.element_at(psize_arr, full + 1)
-    straddle = F.element_at(
-        blocks_arr, F.least(full, F.lit(len(blocks) - 1)) + 1
+    full = count_le(array(lit(b[-1]) for b in blocks))
+    count_full = call("element_at", array(lit(p) for p in psizes), f"{full} + 1")
+    straddle = call(
+        "element_at",
+        array(array(lit(v) for v in b) for b in blocks),
+        f"least({full}, {len(blocks) - 1}) + 1",
     )
-    partial = F.when(
-        full < len(blocks),
-        F.size(F.filter(straddle, lambda b: b <= x)),
-    ).otherwise(F.lit(0))
-    return count_full + partial
+    partial = when(f"{full} < {len(blocks)}", count_le(straddle), "0")
+    return Sql(f"{count_full} + {partial}")
+
+
+def _pid_from_bounds(order_col: str, bounds: list) -> Column:
+    """:func:`_pid_sql` as a Column."""
+    return F.expr(_pid_sql(order_col, bounds))
 
 
 def with_pid(
@@ -130,28 +149,47 @@ def with_pid(
     if bounds is None:
         return None
     # The `+ 0 * monotonically_increasing_id()` is a value-neutral
-    # NONDETERMINISM BARRIER, not dead code: the pid expression holds a
-    # HOF lambda with an outer reference, and Catalyst's
-    # InferFiltersFromConstraints mis-computes that lambda's reference set
-    # — it derives `pid_expr <=> pid` from the offset join and pushes it
-    # to the offset side, where the order column does not exist,
-    # producing an unresolvable `!Filter` that fails task binding
-    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND; reproduced with an int order
-    # column, pinned in test_packing.py). Constraints are only inferred
-    # from deterministic expressions, so the no-op nondeterministic term
-    # suppresses exactly this inference; the value is unchanged (x*0)
-    # under any retry.
-    pid = (
-        _pid_from_bounds(order_col, bounds).cast("long")
-        + F.lit(0) * F.monotonically_increasing_id()
-    ).cast("int")
-    return df.withColumn(pid_col, pid)
+    # NONDETERMINISM BARRIER for the offset join of
+    # `cumulative_tokens(by=…)`, the one caller that still joins on the
+    # pid: the pid expression holds a HOF lambda with an outer reference,
+    # and Catalyst's InferFiltersFromConstraints mis-computes that
+    # lambda's reference set — it derives `pid_expr <=> pid` from the
+    # join and pushes it to the offset side, where the order column does
+    # not exist, producing an unresolvable `!Filter` that fails task
+    # binding (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND; reproduced with an int
+    # order column, pinned in test_packing.py). Constraints are only
+    # inferred from deterministic expressions, so the no-op
+    # nondeterministic term suppresses exactly this inference; the value
+    # is unchanged (x*0) under any retry.
+    pid = cast(
+        f"{cast(_pid_sql(order_col, bounds), 'BIGINT')} "
+        "+ 0 * monotonically_increasing_id()",
+        "INT",
+    )
+    return df.withColumn(pid_col, F.expr(pid))
 
 
 def pid_totals(
-    part: DataFrame, pid_col: str, *aggs: Column, by: Optional[str] = None
+    part: DataFrame, pid_col: str, *aggs: str, by: Optional[str] = None
 ) -> list:
-    """The per-pid (per-(pid, ``by``)) aggregate ``aggs`` collected in pid
-    order — O(P × #groups) rows, the input of the caller's driver fold."""
+    """The per-pid (per-(pid, ``by``)) aggregates ``aggs`` (SQL text)
+    collected in pid order — O(P × #groups) rows, the input of the
+    caller's driver fold. The rows are sorted on the driver: a Spark
+    ``orderBy`` would add a range-partition sampling job and an exchange
+    for a few thousand rows."""
     keys = [pid_col] + ([by] if by else [])
-    return part.groupBy(*keys).agg(*aggs).orderBy(*keys).collect()
+    rows = part.groupBy(*keys).agg(*[F.expr(a) for a in aggs]).collect()
+    return sorted(rows, key=lambda r: r[pid_col])
+
+
+def pid_lookup(pid_col: str, values: Dict[int, Any], sql_type: str) -> Sql:
+    """The driver fold's per-pid ``values`` as a plan literal indexed by
+    pid: ``element_at(array(v_0 … v_maxpid), pid + 1)`` of ``sql_type``.
+    The array is dense by pid; a pid with no rows (duplicate bounds leave
+    some empty) holds a typed NULL that no row reads."""
+    if not values:
+        return cast("NULL", sql_type)
+    arr = call("array", *(lit(values.get(p)) for p in range(max(values) + 1)))
+    return call(
+        "element_at", cast(arr, f"ARRAY<{sql_type}>"), f"{ident(pid_col)} + 1"
+    )

@@ -29,6 +29,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler.sql import ident, lit, when
 from .outliers import attach_group_stats
 
 
@@ -60,14 +61,13 @@ def quantile_bin_edges(
     return [round(float(v), decimals) for v in row["e"]]
 
 
-def assign_bins(col: Column, edges: Sequence[float]) -> Column:
-    """Codegen'd bin assignment against literal ``edges`` (must be
-    sorted): ``bin = Σ (x >= edge)`` — int in [0, len(edges)], null in →
-    null out."""
-    b: Column = F.lit(0)
-    for e in edges:
-        b = b + (col >= F.lit(float(e))).cast("int")
-    return F.when(col.isNotNull(), b)
+def assign_bins(col: str, edges: Sequence[float]) -> Column:
+    """Codegen'd bin assignment of column ``col`` against literal ``edges``
+    (must be sorted): ``bin = Σ (x >= edge)`` — int in [0, len(edges)],
+    null in → null out. One SQL expression, one parse on the JVM."""
+    x = ident(col)
+    b = "0" + "".join(f" + CAST({x} >= {lit(float(e))} AS INT)" for e in edges)
+    return F.expr(when(f"{x} IS NOT NULL", b))
 
 
 def quantile_bins(
@@ -90,7 +90,7 @@ def quantile_bins(
             df, col, n_bins, approx=approx, decimals=decimals
         )
     return df.withColumn(
-        out_col or f"{col}_bin", assign_bins(F.col(col), list(edges))
+        out_col or f"{col}_bin", assign_bins(col, list(edges))
     )
 
 

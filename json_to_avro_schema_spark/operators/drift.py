@@ -32,6 +32,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler.sql import ident, lit
 from . import _prefix
 
 
@@ -392,9 +393,10 @@ def _cdf_scaffold(
        value (for gap integration across pid boundaries) from the same
        ≤4096 rows — no extra pass.
 
-    Returns ``(part, rows, tc, tb, vmin, vmax, merged)`` where ``part``
-    is the pid-annotated merged frame and ``rows`` is the driver-side
-    list of ``(pid, off_c, off_b, next_start)``.
+    Returns ``(part, lookups, tc, tb, vmin, vmax, merged)`` where ``part``
+    is the pid-annotated merged frame and ``lookups`` maps ``off_c``,
+    ``off_b`` and ``next_start`` to their pid-indexed plan literals
+    (:func:`._prefix.pid_lookup`).
     """
     from pyspark.sql.types import NumericType
 
@@ -405,19 +407,19 @@ def _cdf_scaffold(
             "categorical_drift_report for label columns"
         )
     spark = current.sparkSession
+    x = ident(column)
 
     def _side(df: DataFrame, c: int, b: int) -> DataFrame:
-        col = F.col(column)
-        return df.filter(col.isNotNull()).select(
-            col.alias("v"), F.lit(c).cast("long").alias("__c"),
-            F.lit(b).cast("long").alias("__b"),
+        return df.where(f"{x} IS NOT NULL").selectExpr(
+            f"{x} AS v", f"CAST({c} AS BIGINT) AS __c",
+            f"CAST({b} AS BIGINT) AS __b",
         )
 
     merged = (
         _side(current, 1, 0)
         .unionByName(_side(baseline, 0, 1))
         .groupBy("v")
-        .agg(F.sum("__c").alias("nc"), F.sum("__b").alias("nb"))
+        .agg(F.expr("sum(__c) AS nc"), F.expr("sum(__b) AS nb"))
         .persist()
     )
     part = _prefix.with_pid(
@@ -425,35 +427,45 @@ def _cdf_scaffold(
     )
     totals = _prefix.pid_totals(
         part, _KS_PID,
-        F.sum("nc").alias("tc"), F.sum("nb").alias("tb"),
-        F.min("v").alias("v_lo"), F.max("v").alias("v_hi"),
+        "sum(nc) AS tc", "sum(nb) AS tb", "min(v) AS v_lo", "max(v) AS v_hi",
     )
     acc_c = acc_b = 0
-    rows = []
+    off_c, off_b, next_start = {}, {}, {}
     for i, r in enumerate(totals):  # ascending pid == ascending v
-        nxt = float(totals[i + 1]["v_lo"]) if i + 1 < len(totals) else None
-        rows.append((r[_KS_PID], acc_c, acc_b, nxt))
+        pid = r[_KS_PID]
+        off_c[pid], off_b[pid] = acc_c, acc_b
+        next_start[pid] = (
+            float(totals[i + 1]["v_lo"]) if i + 1 < len(totals) else None
+        )
         acc_c += r["tc"] or 0
         acc_b += r["tb"] or 0
     tc, tb = acc_c, acc_b
     vmin = float(totals[0]["v_lo"]) if totals else None
     vmax = float(totals[-1]["v_hi"]) if totals else None
-    return part, rows, tc, tb, vmin, vmax, merged
+    lookups = {
+        "off_c": _prefix.pid_lookup(_KS_PID, off_c, "BIGINT"),
+        "off_b": _prefix.pid_lookup(_KS_PID, off_b, "BIGINT"),
+        "next_start": _prefix.pid_lookup(_KS_PID, next_start, "DOUBLE"),
+    }
+    return part, lookups, tc, tb, vmin, vmax, merged
 
 
-def _inclusive_cdfs(tc: int, tb: int):
-    """(window, cdf_cur, cdf_base) over a scaffold frame joined to its
-    offsets: exact integer within-pid cumsum + broadcast prefix."""
-    from pyspark.sql import Window
+# the within-pid window both statistics order by
+_PID_WINDOW = f"PARTITION BY {_KS_PID} ORDER BY v"
 
-    w = (
-        Window.partitionBy(_KS_PID)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cdf_c = (F.col("__off_c") + F.sum("nc").over(w)) / F.lit(float(tc))
-    cdf_b = (F.col("__off_b") + F.sum("nb").over(w)) / F.lit(float(tb))
-    return w, cdf_c, cdf_b
+
+def _abs_cdf_gap(lookups: dict, tc: int, tb: int) -> str:
+    """``|F_cur(v) - F_base(v)|`` over a scaffold frame: exact integer
+    within-pid inclusive cumsums plus the pid-literal prefixes."""
+
+    def cdf(off: str, n: str, total: int) -> str:
+        cum = (
+            f"sum({n}) OVER ({_PID_WINDOW} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        )
+        return f"({lookups[off]} + {cum}) / {lit(float(total))}"
+
+    return f"abs({cdf('off_c', 'nc', tc)} - {cdf('off_b', 'nb', tb)})"
 
 
 def ks_drift(
@@ -475,10 +487,10 @@ def ks_drift(
 
     Plan shape (each input scanned once; wide exchanges at DISTINCT-VALUE
     scale only, never a single-partition global window): the shared
-    :func:`_cdf_scaffold` steps, then prefixes broadcast back as a pid
-    equi-join, a *within-pid* inclusive window cumsum completing the
-    exact integer CDF counts, and ``max |cc/tc - cb/tb|`` reducing to
-    ONE output row.
+    :func:`_cdf_scaffold` steps, then each row reads its pid's prefixes
+    from a pid-indexed plan literal (no join, no driver-built frame), a
+    *within-pid* inclusive window cumsum completing the exact integer CDF
+    counts, and ``max |cc/tc - cb/tb|`` reducing to ONE output row.
 
     Returns a single-row DataFrame ``(ks double, n_current long,
     n_baseline long, pass boolean)``. Nulls are dropped on both sides
@@ -489,7 +501,7 @@ def ks_drift(
     a statistic on ordered samples; use the categorical PSI for labels).
     """
     spark = current.sparkSession
-    part, rows, tc, tb, _, _, merged = _cdf_scaffold(
+    part, lookups, tc, tb, _, _, merged = _cdf_scaffold(
         current, baseline, column, num_partitions, "ks_drift"
     )
     if tc == 0 or tb == 0:
@@ -499,20 +511,11 @@ def ks_drift(
             [(ks0, tc, tb, ks0 < ks_threshold)],
             "ks double, n_current long, n_baseline long, pass boolean",
         )
-    offsets = spark.createDataFrame(
-        [(p, oc, ob) for p, oc, ob, _ in rows],
-        f"{_KS_PID} int, __off_c long, __off_b long",
-    )
-    _, cdf_c, cdf_b = _inclusive_cdfs(tc, tb)
-    out = (
-        part.join(F.broadcast(offsets), _KS_PID)
-        .select(F.abs(cdf_c - cdf_b).alias("__d"))
-        .agg(
-            F.max("__d").alias("ks"),
-            F.lit(tc).alias("n_current"),
-            F.lit(tb).alias("n_baseline"),
-            (F.max("__d") < F.lit(float(ks_threshold))).alias("pass"),
-        )
+    out = part.selectExpr(f"{_abs_cdf_gap(lookups, tc, tb)} AS __d").selectExpr(
+        "max(__d) AS ks",
+        f"{lit(tc)} AS n_current",
+        f"{lit(tb)} AS n_baseline",
+        f"max(__d) < {lit(float(ks_threshold))} AS pass",
     )
     # the persisted merged frame outlives this call (the result is lazy);
     # hand the caller a release handle so long-running services can bound
@@ -581,8 +584,9 @@ def emd_drift(
     ``v_{i+1} - v_i`` needs each value's successor: within a pid that is
     ``lead(v)`` over the SAME within-pid window the cumsum uses; for the
     pid's last value the successor is the next pid's first value, which
-    the scaffold's O(P) driver rows already carry — broadcast back as
-    ``__next_start``, so pid boundaries cost nothing extra. The global
+    the scaffold's O(P) driver rows already carry — read from the same
+    pid-indexed plan literal as the prefixes, so pid boundaries cost
+    nothing extra. The global
     last value has no successor and contributes 0 (both CDFs are 1 at
     and above it).
 
@@ -596,7 +600,7 @@ def emd_drift(
     non-numeric columns raise ``TypeError``, as in :func:`ks_drift`.
     """
     spark = current.sparkSession
-    part, rows, tc, tb, vmin, vmax, merged = _cdf_scaffold(
+    part, lookups, tc, tb, vmin, vmax, merged = _cdf_scaffold(
         current, baseline, column, num_partitions, "emd_drift"
     )
     schema = (
@@ -612,31 +616,22 @@ def emd_drift(
         return spark.createDataFrame(
             [(None, 1.0, tc, tb, False)], schema
         )
-    offsets = spark.createDataFrame(
-        rows, f"{_KS_PID} int, __off_c long, __off_b long, __next_start double"
-    )
-    from pyspark.sql import Window
-
-    _, cdf_c, cdf_b = _inclusive_cdfs(tc, tb)
     # successor value: within-pid lead (its own frameless window — lead
     # carries a fixed 1-FOLLOWING frame), falling back to the next pid's
     # first value at the boundary; NULL (global last value) → gap 0
-    w_lead = Window.partitionBy(_KS_PID).orderBy("v")
-    nxt = F.coalesce(F.lead("v").over(w_lead), F.col("__next_start"))
-    gap = F.coalesce(nxt.cast("double") - F.col("v").cast("double"), F.lit(0.0))
+    nxt = f"coalesce(lead(v) OVER ({_PID_WINDOW}), {lookups['next_start']})"
+    gap = f"coalesce(CAST({nxt} AS DOUBLE) - CAST(v AS DOUBLE), 0.0D)"
     span = (vmax - vmin) if (vmax is not None and vmax > vmin) else None
-    w1 = F.sum(F.col("__gap") * F.col("__d"))
-    w1_norm = (w1 / F.lit(span)) if span else F.lit(0.0)
-    out = (
-        part.join(F.broadcast(offsets), _KS_PID)
-        .select(gap.alias("__gap"), F.abs(cdf_c - cdf_b).alias("__d"))
-        .agg(
-            w1.alias("w1"),
-            w1_norm.alias("w1_norm"),
-            F.lit(tc).alias("n_current"),
-            F.lit(tb).alias("n_baseline"),
-            (w1_norm < F.lit(float(emd_threshold))).alias("pass"),
-        )
+    w1 = "sum(__gap * __d)"
+    w1_norm = f"{w1} / {lit(span)}" if span else "0.0D"
+    out = part.selectExpr(
+        f"{gap} AS __gap", f"{_abs_cdf_gap(lookups, tc, tb)} AS __d"
+    ).selectExpr(
+        f"{w1} AS w1",
+        f"{w1_norm} AS w1_norm",
+        f"{lit(tc)} AS n_current",
+        f"{lit(tb)} AS n_baseline",
+        f"{w1_norm} < {lit(float(emd_threshold))} AS pass",
     )
     # release handle for the persisted merged frame — see ks_drift
     out._drift_cached_input = merged

@@ -24,9 +24,10 @@ from __future__ import annotations
 import logging
 from typing import Dict, Mapping, Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler.sql import ident
 from . import _prefix
 
 _LOG = logging.getLogger(__name__)
@@ -85,34 +86,37 @@ def cumulative_tokens(
         part = part.localCheckpoint(eager=False)
 
     group_cols = [_PID] + ([by] if by else [])
-    totals = _prefix.pid_totals(part, _PID, F.sum(token_col).alias("t"), by=by)
-    acc: Dict[object, int] = {}
-    rows = []
-    for row in totals:  # ordered by (pid) within each group's pid sequence
-        g = row[by] if by else None
-        rows.append((row[_PID], g, acc.get(g, 0)))
-        acc[g] = acc.get(g, 0) + (row["t"] or 0)
-    if by:
-        by_type = dict(df.dtypes)[by]
-        offset_df = spark.createDataFrame(
-            rows, f"{_PID} int, {by} {by_type}, {_BEFORE} long"
-        )
-        join_on = [_PID, by]
-    else:
-        offset_df = spark.createDataFrame(
-            [(pid, off) for pid, _, off in rows], f"{_PID} int, {_BEFORE} long"
-        )
-        join_on = [_PID]
-
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    totals = _prefix.pid_totals(
+        part, _PID, f"sum({ident(token_col)}) AS t", by=by
     )
-    within = F.coalesce(F.sum(token_col).over(w), F.lit(0))
+    acc: Dict[object, int] = {}
+    offsets = []
+    for row in totals:  # ordered by pid within each group's pid sequence
+        g = row[by] if by else None
+        offsets.append((row[_PID], g, acc.get(g, 0)))
+        acc[g] = acc.get(g, 0) + (row["t"] or 0)
+
+    within = (
+        f"coalesce(sum({ident(token_col)}) OVER ("
+        f"PARTITION BY {', '.join(map(ident, group_cols))} "
+        f"ORDER BY {ident(order_col)} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
+    )
+    if not by:
+        before = _prefix.pid_lookup(
+            _PID, {pid: off for pid, _, off in offsets}, "BIGINT"
+        )
+        return part.withColumn(
+            "cum_tokens_before", F.expr(f"{before} + {within}")
+        ).drop(_PID)
+    # O(P × groups) offsets stay a broadcast equi-join, which also drops
+    # the rows whose `by` key is null (the documented contract)
+    offset_df = spark.createDataFrame(
+        offsets, f"{_PID} int, {by} {dict(df.dtypes)[by]}, {_BEFORE} long"
+    )
     return (
-        part.join(F.broadcast(offset_df), join_on)
-        .withColumn("cum_tokens_before", F.col(_BEFORE) + within)
+        part.join(F.broadcast(offset_df), [_PID, by])
+        .withColumn("cum_tokens_before", F.expr(f"{_BEFORE} + {within}"))
         .drop(_PID, _BEFORE)
     )
 

@@ -33,9 +33,9 @@ terms".  This module adds the two classic shapes, Spark-first:
 
 Determinism contract (the DuckDB-oracle float rules used across this
 repo): scores are rounded to ``decimals`` before the >0 filter and the
-rank, term contributions are summed in fixed query-term order in
-:func:`bm25_search`, and every tie breaks on (score desc, doc_id asc) /
-(score desc, term asc).
+rank, term contributions are summed in fixed query-term order by
+:func:`bm25_search` and :func:`bm25_search_indexed` alike, and every tie
+breaks on (score desc, doc_id asc) / (score desc, term asc).
 
 Reference analog: none — the reference is a single-document schema
 transpiler (``/root/reference/README.md:100-104``); this extends
@@ -50,6 +50,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..compiler.sql import call, lit
 from .text import tokens
 
 
@@ -255,11 +256,18 @@ def bm25_search_indexed(
         F.col("tf").cast("double"), F.col("df").cast("double"), F.lit(n),
         F.col("dl").cast("double"), avgdl, k1, b,
     )
+    # fold the contributions in query-term order from 0.0, not with a sum
+    # in posting order: the score is then bit-identical to bm25_search's
+    # fixed-order sum under any postings layout
+    order = call("array_position", call("array", *map(lit, terms)), "term")
     scored = (
         postings.join(F.broadcast(tdf), "term")
-        .select("doc_id", contrib.alias("__c"))
+        .select("doc_id", F.expr(order).alias("__i"), contrib.alias("__c"))
         .groupBy("doc_id")
-        .agg(F.round(F.sum("__c"), decimals).alias("score"))
+        .agg(F.expr(
+            "round(aggregate(sort_array(collect_list(struct(__i, __c))), "
+            f"0.0D, (acc, t) -> acc + t.__c), {int(decimals)}) AS score"
+        ))
         .filter(F.col("score") > 0)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)

@@ -222,15 +222,19 @@ def sequence_gaps(
     # boundary holes between adjacent non-empty pids: O(P) rows to the
     # driver, never the data
     spans = _prefix.pid_totals(
-        part, "__pid", F.min("__seq").alias("lo"), F.max("__seq").alias("hi")
+        part, "__pid", "min(__seq) AS lo", "max(__seq) AS hi"
     )
     edge_rows = [
-        (int(prev["hi"]) + 1, int(cur["lo"]) - 1, int(cur["lo"] - prev["hi"] - 1))
+        f"({int(prev['hi']) + 1}L, {int(cur['lo']) - 1}L, "
+        f"{int(cur['lo'] - prev['hi'] - 1)}L)"
         for prev, cur in zip(spans, spans[1:])
         if cur["lo"] - prev["hi"] > 1
     ]
-    edges = spark.createDataFrame(
-        edge_rows, "gap_start long, gap_end long, n_missing long"
+    # inline literal rows, not a driver-built Python RDD; with no hole
+    # the placeholder row keeps the VALUES typed and LIMIT 0 drops it
+    edges = spark.sql(
+        f"SELECT * FROM VALUES {', '.join(edge_rows) or '(0L, 0L, 0L)'} "
+        f"AS t(gap_start, gap_end, n_missing) LIMIT {len(edge_rows)}"
     )
     return within.unionByName(edges)
 

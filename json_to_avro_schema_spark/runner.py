@@ -163,6 +163,23 @@ def _part_key_sql(df: DataFrame, part_key_col: str) -> str:
     return ident(part_key_col) if part_key_col in df.columns else string("__all__")
 
 
+def partitions_in(
+    df: DataFrame,
+    keys: DataFrame,
+    part_key_col: str,
+    how: str = "left_semi",
+    *,
+    keys_col: Optional[str] = None,
+) -> DataFrame:
+    """The rows of ``df`` whose partition key is (``left_semi``) or is not
+    (``left_anti``) among the ``keys_col`` values of the small ``keys``
+    frame, broadcast. Null-safe: a null key is its own partition and
+    matches a null in ``keys``, as in :func:`partition_verdicts`."""
+    k = keys.selectExpr(f"{ident(keys_col or part_key_col)} AS __key")
+    on = F.expr(f"{ident(part_key_col)} <=> __key")
+    return df.join(F.broadcast(k), on, how)
+
+
 def sample_violations(
     violations: DataFrame,
     *,
@@ -328,7 +345,7 @@ def sink_validation(
     pending partition keys (``df`` holds only those): both sinks are
     hive-partitioned with dynamic overwrite, so a retried partition
     replaces exactly its own directory, and the violation read-back is
-    pruned to those partitions.
+    restricted to those partitions (:func:`partitions_in`).
     """
     res = run_validation(spark, df, plan)
     viol_path = os.path.join(out_dir, "violations")
@@ -353,9 +370,7 @@ def sink_validation(
         # the explicit schema also reads zero violations (no data files)
         written = spark.read.schema(res.violations.schema).parquet(viol_path)
         if pending is not None:
-            written = written.join(
-                F.broadcast(pending), part_key_col, "left_semi"
-            )
+            written = partitions_in(written, pending, part_key_col)
         verdicts = verdicts_from_violations(
             df, written, res.plan, part_key_col=part_key_col
         )

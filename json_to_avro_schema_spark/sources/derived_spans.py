@@ -8,8 +8,9 @@ every span-level operator becomes DuckDB-oracle-able: the same derivation
 is re-expressed in SQL and both engines must agree byte-for-byte on the
 span sequences (the north rule's (kind, text, media_ref, order) invariant).
 
-All construction is HOF Column expressions (codegen'd, zero Python): at
-100 TB this is a projection, not a shuffle.
+All construction is one SQL text projection of HOF expressions (one
+parse on the JVM, codegen'd, zero Python): at 100 TB this is a
+projection, not a shuffle.
 """
 
 from __future__ import annotations
@@ -18,6 +19,8 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..compiler.sql import call, field, ident, lam, lit, when
 
 
 #: media_ref value planted by ``bad_ref_every`` — fails ``^m-[0-9]{8}$``.
@@ -50,51 +53,44 @@ def spans_from_documents(
     - ``null_spans_every``: every N-th doc's spans column is NULL — a
       ``required`` violation (applied last, overriding the other two).
     """
-    did = F.col(id_col)
-    txt = F.col(text_col)
-    n = F.greatest(
-        F.ceil(F.length(txt) / F.lit(chunk)).cast("int"), F.lit(1)
-    )
-    text_spans = F.transform(
-        F.sequence(F.lit(0), n - F.lit(1)),
-        lambda i: F.struct(
-            F.lit("text").alias("kind"),
-            txt.substr(i * chunk + 1, F.lit(chunk)).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    ref = F.concat(
-        F.lit("m-"), F.lpad((did % 100_000_000).cast("string"), 8, "0")
-    )
+    did, txt = ident(id_col), ident(text_col)
+    n = f"greatest(CAST(ceil(length({txt}) / {chunk}) AS INT), 1)"
+
+    def every(k: int) -> str:
+        return f"{did} % {k} = 0"
+
+    def span(kind: str, text: str, media_ref: str, offset: str) -> str:
+        return (
+            f"struct({kind} AS kind, {text} AS text, "
+            f"{media_ref} AS media_ref, CAST({offset} AS INT) AS offset)"
+        )
+
+    no_str = "CAST(NULL AS STRING)"
+    text_spans = call("transform", f"sequence(0, {n} - 1)", lam(
+        lambda i: span(
+            lit("text"), f"substr({txt}, {i} * {chunk} + 1, {chunk})",
+            no_str, i,
+        ), "i",
+    ))
+    ref = f"concat('m-', lpad(CAST({did} % 100000000 AS STRING), 8, '0'))"
     if bad_ref_every is not None:
-        ref = F.when(did % bad_ref_every == 0, F.lit(BAD_REF)).otherwise(ref)
-    media_span = F.struct(
-        F.lit("media").alias("kind"),
-        F.lit(None).cast("string").alias("text"),
-        ref.alias("media_ref"),
-        n.cast("int").alias("offset"),
+        ref = when(every(bad_ref_every), lit(BAD_REF), ref)
+    media_span = span(lit("media"), no_str, ref, n)
+    spans = when(
+        every(media_every), f"concat({text_spans}, array({media_span}))",
+        text_spans,
     )
-    spans = F.when(
-        did % media_every == 0, F.concat(text_spans, F.array(media_span))
-    ).otherwise(text_spans)
     if corrupt_every is not None:
-        total = F.size(spans)
-        reversed_spans = F.transform(
-            spans,
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                (total - 1 - s["offset"]).cast("int").alias("offset"),
-            ),
-        )
-        spans = F.when(did % corrupt_every == 0, reversed_spans).otherwise(spans)
+        reversed_spans = call("transform", spans, lam(
+            lambda s: span(
+                field(s, "kind"), field(s, "text"), field(s, "media_ref"),
+                f"size({spans}) - 1 - {field(s, 'offset')}",
+            ), "s",
+        ))
+        spans = when(every(corrupt_every), reversed_spans, spans)
     if null_spans_every is not None:
-        spans = F.when(did % null_spans_every == 0, F.lit(None)).otherwise(
-            spans
-        )
-    return docs.select(did.alias("doc_id"), spans.alias("spans"))
+        spans = when(every(null_spans_every), "NULL", spans)
+    return docs.selectExpr(f"{did} AS doc_id", f"{spans} AS spans")
 
 
 def with_part_key(derived: DataFrame, *, n_parts: int = 64) -> DataFrame:

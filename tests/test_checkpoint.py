@@ -283,3 +283,46 @@ def test_checkpoint_custom_key_with_literal_part_key_column(spark, tmp_path):
     )
     n_warn_docs = df.filter(~F.col("doc_id").rlike("^[1-9a-f]")).count()
     assert n_warn_docs > 0 and warn_fail == n_warn_docs
+
+
+def test_checkpoint_resume_validates_null_partition_key(spark, tmp_path):
+    """Rows whose partition key is null form their own partition: a resume
+    validates it (its verdicts equal the plain run's), records a state row
+    for it, and a second resume finds nothing pending."""
+    from json_to_avro_schema_spark.runner import sink_validation
+
+    plan = compile_document(documents_iv_spec())
+    df = generate_documents_iv(spark, 400, violation_pct=20).withColumn(
+        "part_key",
+        F.when(F.crc32("doc_id") % 8 != 0, F.col("part_key")),
+    )
+    assert df.filter(F.col("part_key").isNull()).count() > 0
+
+    def null_verdicts(path):
+        return sorted(
+            (r["check_name"], r["n_rows"], r["n_fail"], r["pass"])
+            for r in spark.read.parquet(f"{path}/verdicts")
+            .filter(F.col("part_key").isNull())
+            .collect()
+        )
+
+    sink_validation(spark, df, plan, str(tmp_path / "plain"))
+    want = null_verdicts(tmp_path / "plain")
+    assert want and any(n_fail for _, _, n_fail, _ in want)
+
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    out = str(tmp_path / "out")
+    keys = sorted(
+        r["part_key"] for r in df.select("part_key").distinct().collect()
+        if r["part_key"] is not None
+    )
+    run_with_checkpoint(
+        spark, df.filter(F.col("part_key").isin(keys[: len(keys) // 2])),
+        plan, store, "nullkey", out,
+    )
+    r = run_with_checkpoint(spark, df, plan, store, "nullkey", out)
+    assert r.n_partitions_processed == len(keys) - len(keys) // 2 + 1
+    assert null_verdicts(out) == want
+
+    again = run_with_checkpoint(spark, df, plan, store, "nullkey", out)
+    assert again.n_partitions_processed == 0

@@ -305,6 +305,106 @@ def test_ks_drift_plan_has_no_global_window(spark):
             assert "__ks_pid" in spec  # every window spec is pid-partitioned
 
 
+def _ecdf_gaps(c, b):
+    """Sorted distinct values of both samples and |ΔECDF| at each."""
+    vals = sorted(set(c) | set(b))
+    return vals, [
+        abs(sum(x <= v for x in c) / len(c) - sum(x <= v for x in b) / len(b))
+        for v in vals
+    ]
+
+
+def test_prefix_sum_operators_bucket_count_invariant_with_empty_pids(spark):
+    """ks_drift, emd_drift, global cumulative_tokens and global
+    sequence_gaps return the same result at every pid-bucket count, equal
+    to the hand computation, on inputs whose duplicate quantile bounds
+    leave most pids empty (their slots in the offset literal are NULL)."""
+    from json_to_avro_schema_spark.operators.packing import cumulative_tokens
+    from json_to_avro_schema_spark.operators.temporal import sequence_gaps
+
+    c = [float(i % 7) for i in range(300) if i % 5]  # 7 distinct values
+    b = [float((i * i) % 7) for i in range(250)]
+    cur = spark.createDataFrame([(v,) for v in c], "v double")
+    base = spark.createDataFrame([(v,) for v in b], "v double")
+    vals, diffs = _ecdf_gaps(c, b)
+    ks_want = max(diffs)
+    w1_want = sum((vals[i + 1] - vals[i]) * diffs[i] for i in range(len(vals) - 1))
+
+    docs = spark.createDataFrame(
+        [(i * 1000 + (i % 3), (i * 37) % 11 + 1) for i in range(60)],
+        "doc_id long, n_tokens long",
+    ).repartition(3)
+    cum, cum_want = 0, {}
+    for i in range(60):
+        cum_want[i * 1000 + (i % 3)] = cum
+        cum += (i * 37) % 11 + 1
+
+    seq = [0, 0, 0, 1, 1, 5, 5, 5, 6, 9, 9, 30, 30, 31]
+    seq_df = spark.createDataFrame([(v,) for v in seq], "seq long")
+    gaps_want = [(2, 4, 3), (7, 8, 2), (10, 29, 20)]
+
+    results = set()
+    for n in (1, 4, 16, 200):
+        ks = ks_drift(cur, base, "v", num_partitions=n).collect()[0]
+        emd = emd_drift(cur, base, "v", num_partitions=n).collect()[0]
+        assert ks["ks"] == pytest.approx(ks_want)
+        assert emd["w1"] == pytest.approx(w1_want)
+        got_cum = {
+            r["doc_id"]: r["cum_tokens_before"]
+            for r in cumulative_tokens(
+                docs, "n_tokens", "doc_id", num_partitions=n
+            ).collect()
+        }
+        assert got_cum == cum_want
+        got_gaps = sorted(
+            tuple(r) for r in sequence_gaps(seq_df, "seq", num_partitions=n).collect()
+        )
+        assert got_gaps == gaps_want
+        results.add((ks["ks"], emd["w1"], emd["w1_norm"]))
+    assert len(results) == 1  # bit-identical at every bucket count
+    # a DECIMAL column's quantile bounds are Decimal plan literals
+    dec = "CAST(v AS DECIMAL(6, 2)) AS v"
+    ks_dec = ks_drift(
+        cur.selectExpr(dec), base.selectExpr(dec), "v", num_partitions=16
+    ).collect()[0]
+    assert ks_dec["ks"] == results.pop()[0]
+
+
+def _plan_nodes(node):
+    """Every node of a Catalyst plan, over py4j."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_prefix_sum_offsets_are_plan_literals(spark):
+    """The driver fold's offsets reach the plan as a pid-indexed literal:
+    no join and no driver-built (LogicalRDD) frame in the optimized plans
+    of ks_drift, emd_drift and global cumulative_tokens."""
+    from json_to_avro_schema_spark.operators.packing import cumulative_tokens
+
+    cur = spark.range(0, 3000).select((F.rand(seed=1) * 100).alias("v"))
+    base = spark.range(0, 3000).select((F.rand(seed=2) * 100).alias("v"))
+    docs = spark.range(2000).selectExpr("id AS doc_id", "id % 13 + 1 AS n_tokens")
+    frames = {
+        "ks_drift": ks_drift(cur, base, "v", num_partitions=8),
+        "emd_drift": emd_drift(cur, base, "v", num_partitions=8),
+        "cumulative_tokens": cumulative_tokens(
+            docs, "n_tokens", "doc_id", num_partitions=8
+        ),
+    }
+    for name, df in frames.items():
+        nodes = {
+            n.nodeName()
+            for n in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+        }
+        assert "Join" not in nodes and "LogicalRDD" not in nodes, (name, nodes)
+        cached = getattr(df, "_drift_cached_input", None)
+        if cached is not None:
+            cached.unpersist()
+
+
 def test_tdigest_pure_python_accuracy():
     rng = np.random.default_rng(42)
     vals = rng.normal(100.0, 15.0, 50_000)

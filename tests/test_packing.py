@@ -274,15 +274,15 @@ def test_non_numeric_order_fallback_warns(spark, caplog):
 
 
 def test_packing_plan_shapes(spark):
-    """The offset/target joins must broadcast (O(P)/O(groups) rows) — a
-    SortMergeJoin here would sort the full data side."""
+    """Global offsets are a plan literal (no join at all); the grouped
+    offset and target joins must broadcast (O(P × groups)/O(groups) rows)
+    — a SortMergeJoin there would sort the full data side."""
     from json_to_avro_schema_spark.operators.packing import select_mixture
 
     df = _input(spark, n=10_000)
     plan = packed_shards(df, "n_tokens", "doc_id", 1000)._jdf.queryExecution(
     ).executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan
     grouped = df.withColumn("grp", F.expr("concat('g', doc_id % 3)"))
     plan2 = select_mixture(
         grouped, "n_tokens", "doc_id", "grp", {"g0": 100, "g1": 100}

@@ -182,3 +182,36 @@ def test_tfidf_rank_window_prunes(corpus_df):
         .toString()
     )
     assert "WindowGroupLimit" in plan, plan
+
+
+def test_bm25_indexed_sum_is_order_stable(spark, tmp_path):
+    """Indexed scores fold term contributions in query-term order, so the
+    unrounded score equals bm25_search's fixed-order sum bit for bit,
+    whatever the postings layout."""
+    words = (
+        "array('hash', 'join', 'merge', 'sort', 'spill', 'disk', 'tree', "
+        "'scan', 'page', 'heap', 'lock', 'log')"
+    )
+    df = spark.range(1000).selectExpr(
+        "id AS doc_id",
+        "concat_ws(' ', transform(sequence(1, 4 + CAST(id % 13 AS INT)), "
+        f"j -> element_at({words}, "
+        "CAST((id * j * 31 + j * 7 + id) % 12 AS INT) + 1))) AS text",
+    )
+    query = "spill tree hash scan join lock heap"
+    # decimals=30 rounds a double to itself: the scores are unrounded
+    want = {
+        r["doc_id"]: r["score"]
+        for r in bm25_search(df, query, k=1000, decimals=30).collect()
+    }
+    assert len(want) > 500
+    for n in (1, 3, 7, 16):
+        path = str(tmp_path / f"idx{n}")
+        build_bm25_index(df.repartition(n, F.col("doc_id")), path, n_buckets=4)
+        got = {
+            r["doc_id"]: r["score"]
+            for r in bm25_search_indexed(
+                spark, path, query, k=1000, n_buckets=4, decimals=30
+            ).collect()
+        }
+        assert got == want, n

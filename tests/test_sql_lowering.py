@@ -114,12 +114,8 @@ def test_dotted_top_level_property_name(spark):
     assert failing == {2, 3}
 
 
-def test_verdict_build_py4j_budget(spark):
-    """Building the rich-spec verdict query costs a bounded number of py4j
-    round trips (GC detach commands excluded), independent of how many
-    keywords the spec carries."""
-    plan = compile_document(documents_iv_rich_spec())
-    df = spark.createDataFrame([], plan.expected_schema)
+def _py4j_calls(spark, build) -> int:
+    """py4j round trips (GC detach commands excluded) made by ``build()``."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
@@ -131,10 +127,32 @@ def test_verdict_build_py4j_budget(spark):
 
     client.send_command = counting
     try:
-        runner.verdicts_with_violation_count(df, plan)
+        build()
     finally:
         client.__dict__.pop("send_command", None)
-    assert len(calls) <= 150
+    return len(calls)
+
+
+def test_verdict_build_py4j_budget(spark):
+    """Building the rich-spec verdict query costs a bounded number of py4j
+    round trips (GC detach commands excluded), independent of how many
+    keywords the spec carries."""
+    plan = compile_document(documents_iv_rich_spec())
+    df = spark.createDataFrame([], plan.expected_schema)
+    n = _py4j_calls(spark, lambda: runner.verdicts_with_violation_count(df, plan))
+    assert n <= 150
+
+
+def test_spans_from_documents_build_py4j_budget(spark):
+    """The derived-spans table is one SQL projection: building it with all
+    three corruption families costs a handful of py4j round trips."""
+    from json_to_avro_schema_spark.sources.derived_spans import spans_from_documents
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    n = _py4j_calls(spark, lambda: spans_from_documents(
+        docs, corrupt_every=9, bad_ref_every=21, null_spans_every=11
+    ))
+    assert n <= 10
 
 
 def _tree(node):
