@@ -43,7 +43,7 @@ from __future__ import annotations
 import math
 from typing import Any, Dict, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compiler.sql import Sql, call, cast, ident, lam, lit, when
@@ -52,10 +52,10 @@ from ..compiler.sql import Sql, call, cast, ident, lam, lit, when
 # quantile bounds are embedded in the plan as literals (a multi-MB plan at
 # uncapped 10^5-core defaults); correctness only needs enough buckets to
 # parallelize the within-pid window. Per-row assignment cost is kept flat
-# by the two-level scan in _pid_from_bounds (O(2*sqrt(P)) comparisons).
+# by the two-level scan in _pid_sql (O(2*sqrt(P)) comparisons).
 _MAX_PID_BUCKETS = 4096
 
-# bound count above which _pid_from_bounds switches to the sqrt-blocked
+# bound count above which _pid_sql switches to the sqrt-blocked
 # two-level scan (below it the flat literal-array filter is cheaper)
 _TWO_LEVEL_MIN = 128
 
@@ -134,11 +134,6 @@ def _pid_sql(order_col: str, bounds: list) -> Sql:
     return Sql(f"{count_full} + {partial}")
 
 
-def _pid_from_bounds(order_col: str, bounds: list) -> Column:
-    """:func:`_pid_sql` as a Column."""
-    return F.expr(_pid_sql(order_col, bounds))
-
-
 def with_pid(
     df: DataFrame, order_col: str, pid_col: str, n_parts: int
 ) -> Optional[DataFrame]:
@@ -148,24 +143,7 @@ def with_pid(
     bounds = _order_bounds(df, order_col, n_parts)
     if bounds is None:
         return None
-    # The `+ 0 * monotonically_increasing_id()` is a value-neutral
-    # NONDETERMINISM BARRIER for the offset join of
-    # `cumulative_tokens(by=…)`, the one caller that still joins on the
-    # pid: the pid expression holds a HOF lambda with an outer reference,
-    # and Catalyst's InferFiltersFromConstraints mis-computes that
-    # lambda's reference set — it derives `pid_expr <=> pid` from the
-    # join and pushes it to the offset side, where the order column does
-    # not exist, producing an unresolvable `!Filter` that fails task
-    # binding (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND; reproduced with an int
-    # order column, pinned in test_packing.py). Constraints are only
-    # inferred from deterministic expressions, so the no-op
-    # nondeterministic term suppresses exactly this inference; the value
-    # is unchanged (x*0) under any retry.
-    pid = cast(
-        f"{cast(_pid_sql(order_col, bounds), 'BIGINT')} "
-        "+ 0 * monotonically_increasing_id()",
-        "INT",
-    )
+    pid = cast(_pid_sql(order_col, bounds), "INT")
     return df.withColumn(pid_col, F.expr(pid))
 
 

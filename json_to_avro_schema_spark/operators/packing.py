@@ -110,7 +110,21 @@ def cumulative_tokens(
             "cum_tokens_before", F.expr(f"{before} + {within}")
         ).drop(_PID)
     # O(P × groups) offsets stay a broadcast equi-join, which also drops
-    # the rows whose `by` key is null (the documented contract)
+    # the rows whose `by` key is null (the documented contract).
+    # The `+ 0 * monotonically_increasing_id()` is a value-neutral
+    # NONDETERMINISM BARRIER for that join: the pid expression holds a HOF
+    # lambda with an outer reference, and Catalyst's
+    # InferFiltersFromConstraints mis-computes that lambda's reference set
+    # — it derives `pid_expr <=> pid` from the join and pushes it to the
+    # offset side, where the order column does not exist, producing an
+    # unresolvable `!Filter` that fails task binding
+    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND; reproduced with an int order
+    # column, pinned in test_packing.py). Constraints are only inferred
+    # from deterministic expressions, so the no-op nondeterministic term
+    # suppresses exactly this inference; the value is unchanged (x*0)
+    # under any retry.
+    barrier = f"CAST({_PID} + 0 * monotonically_increasing_id() AS INT)"
+    part = part.withColumn(_PID, F.expr(barrier))
     offset_df = spark.createDataFrame(
         offsets, f"{_PID} int, {by} {dict(df.dtypes)[by]}, {_BEFORE} long"
     )

@@ -230,11 +230,12 @@ def sequence_gaps(
         for prev, cur in zip(spans, spans[1:])
         if cur["lo"] - prev["hi"] > 1
     ]
-    # inline literal rows, not a driver-built Python RDD; with no hole
-    # the placeholder row keeps the VALUES typed and LIMIT 0 drops it
+    if not edge_rows:
+        return within
+    # inline literal rows, not a driver-built Python RDD
     edges = spark.sql(
-        f"SELECT * FROM VALUES {', '.join(edge_rows) or '(0L, 0L, 0L)'} "
-        f"AS t(gap_start, gap_end, n_missing) LIMIT {len(edge_rows)}"
+        f"SELECT * FROM VALUES {', '.join(edge_rows)} "
+        "AS t(gap_start, gap_end, n_missing)"
     )
     return within.unionByName(edges)
 

@@ -175,8 +175,14 @@ def partitions_in(
     (``left_anti``) among the ``keys_col`` values of the small ``keys``
     frame, broadcast. Null-safe: a null key is its own partition and
     matches a null in ``keys``, as in :func:`partition_verdicts`."""
-    k = keys.selectExpr(f"{ident(keys_col or part_key_col)} AS __key")
-    on = F.expr(f"{ident(part_key_col)} <=> __key")
+    # the keys' column gets a name no column of ``df`` has (Spark resolves
+    # names case-insensitively), so the join condition is never ambiguous
+    taken = {c.lower() for c in df.columns}
+    key = "__key"
+    while key in taken:
+        key = "_" + key
+    k = keys.selectExpr(f"{ident(keys_col or part_key_col)} AS {key}")
+    on = F.expr(f"{ident(part_key_col)} <=> {key}")
     return df.join(F.broadcast(k), on, how)
 
 

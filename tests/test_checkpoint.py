@@ -326,3 +326,21 @@ def test_checkpoint_resume_validates_null_partition_key(spark, tmp_path):
 
     again = run_with_checkpoint(spark, df, plan, store, "nullkey", out)
     assert again.n_partitions_processed == 0
+
+
+def test_checkpoint_input_with_key_working_column_name(spark, tmp_path):
+    """The partition-key selections join the input against a one-column
+    key frame; an input column named like that frame's column (here
+    ``__key``, in two cases) must not make the join ambiguous."""
+    plan = compile_document(documents_iv_spec())
+    df = (
+        generate_documents_iv(spark, 300, violation_pct=10)
+        .withColumn("__key", F.lit("data"))
+        .withColumn("___KEY", F.lit(1))
+    )
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    out = str(tmp_path / "out")
+    r1 = run_with_checkpoint(spark, df, plan, store, "keycol", out)
+    assert r1.n_partitions_processed == r1.n_partitions_total > 0
+    r2 = run_with_checkpoint(spark, df, plan, store, "keycol", out)
+    assert r2.n_partitions_processed == 0

@@ -222,7 +222,7 @@ def test_two_level_pid_scan_matches_flat(spark):
     got = {
         r["x"]: r["pid"]
         for r in df.select(
-            "x", _prefix._pid_from_bounds("x", bounds).alias("pid")
+            "x", F.expr(_prefix._pid_sql("x", bounds)).alias("pid")
         ).collect()
     }
     for v in vals:
