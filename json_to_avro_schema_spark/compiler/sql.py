@@ -135,6 +135,19 @@ def call(fn: str, *args: str) -> Sql:
     return Sql(f"{fn}({', '.join(args)})")
 
 
+def percentile(e: str, probs, approx: bool) -> Sql:
+    """Exact ``percentile`` of ``e``, or the GK sketch ``percentile_approx``
+    at accuracy 10000, at ``probs``: one probability, or a sequence of
+    them (rendered as an array, so the aggregate returns an array)."""
+    if isinstance(probs, (int, float)):
+        p = lit(float(probs))
+    else:
+        p = call("array", *[lit(float(x)) for x in probs])
+    if approx:
+        return call("percentile_approx", e, p, "10000")
+    return call("percentile", e, p)
+
+
 def coalesce_false(e: str) -> Sql:
     """Fail-closed boolean: an indeterminate (null) predicate is False."""
     return call("coalesce", e, "false")

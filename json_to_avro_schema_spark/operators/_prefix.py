@@ -46,7 +46,7 @@ from typing import Any, Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..compiler.sql import Sql, call, cast, ident, lam, lit, when
+from ..compiler.sql import Sql, call, cast, ident, lam, lit, percentile, when
 
 # Upper bound on pid buckets, independent of cluster parallelism. The P-1
 # quantile bounds are embedded in the plan as literals (a multi-MB plan at
@@ -84,7 +84,7 @@ def _order_bounds(
         return []
     probs = [i / n_parts for i in range(1, n_parts)]
     row = df.agg(
-        F.percentile_approx(order_col, probs, 10_000).alias("b")
+        F.expr(percentile(ident(order_col), probs, True)).alias("b")
     ).collect()[0]
     return list(row["b"] or [])
 

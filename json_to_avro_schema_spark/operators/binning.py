@@ -29,8 +29,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..compiler.sql import ident, lit, when
-from .outliers import attach_group_stats
+from ..compiler.sql import ident, lit, percentile, when
+from ._joins import attach_group_stats
 
 
 def quantile_bin_edges(
@@ -48,12 +48,7 @@ def quantile_bin_edges(
     if n_bins < 2:
         raise ValueError(f"n_bins must be >= 2, got {n_bins}")
     ps = [i / n_bins for i in range(1, n_bins)]
-    fn = "percentile_approx({c}, array({p}), 10000)" if approx else (
-        "percentile({c}, array({p}))"
-    )
-    row = df.agg(
-        F.expr(fn.format(c=col, p=",".join(repr(p) for p in ps))).alias("e")
-    ).head()
+    row = df.agg(F.expr(percentile(ident(col), ps, approx)).alias("e")).head()
     if row is None or row["e"] is None:
         raise ValueError(
             f"quantile_bin_edges({col!r}): no non-null values to bin"

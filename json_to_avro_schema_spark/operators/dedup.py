@@ -436,18 +436,17 @@ def contamination_pairs(
     k: int = 5,
     num_hashes: int = 32,
     bands: int = 4,
-    broadcast_candidate_limit: int = 200_000,
 ) -> DataFrame:
     """Train-test contamination pairs: (corpus_id, bench_id, jaccard) for
     corpus docs whose shingle-Jaccard with ANY benchmark doc reaches
     ``threshold`` — the decontamination step a pretraining pipeline runs
     against evaluation sets before training.
 
-    ``broadcast_candidate_limit`` guards the candidate-pair broadcast: the
-    benchmark is small by contract, but |candidates| is proportional to the
-    CORPUS when the benchmark leaked wholesale into a crawl — an unbounded
-    broadcast. Past the limit the verify join falls back to a plain shuffle
-    join (AQE may still re-plan it); results are identical either way.
+    The candidate pairs carry no hint: the benchmark is small by contract,
+    but |candidates| is proportional to the CORPUS when the benchmark
+    leaked wholesale into a crawl, so the planner and AQE size the verify
+    join from the candidates' runtime size (a broadcast when they are few,
+    a shuffle join otherwise); results are identical either way.
 
     Cross-corpus banded minhash: band rows for both sides (the benchmark
     side is typically tiny — eval sets are thousands of docs, so its band
@@ -470,12 +469,10 @@ def contamination_pairs(
                 ["band", "bh"])
         .select(F.col("id").alias("id_a"), F.col("bench_id").alias("id_b"))
         .distinct()
-        .persist()
     )
-    n_cands = cands.count()
-    # exact verification over the two-sided shingle join; the candidate
-    # pair list is tiny (LSH hits only), so it broadcasts and the corpus
-    # shingle projection streams
+    # exact verification over the two-sided shingle join; a tiny candidate
+    # pair list (LSH hits only) broadcasts and the corpus shingle
+    # projection streams
     c_sh = _spread(corpus).select(
         F.col(id_col).alias("id_a"), _shingles(F.col(text_col), k).alias("sh_a")
     )
@@ -487,11 +484,8 @@ def contamination_pairs(
     # b_sh carries shingle arrays (an eval set can be ~GBs of shingles) —
     # NOT broadcast; after the candidate semi-join the left side is
     # |cands| rows, so this last join shuffles only candidates + benchmark
-    cands_side = (
-        F.broadcast(cands) if n_cands <= broadcast_candidate_limit else cands
-    )
     return (
-        c_sh.join(cands_side, "id_a")
+        c_sh.join(cands, "id_a")
         .join(b_sh, "id_b")
         .select(
             F.col("id_a").alias("corpus_id"),
@@ -512,7 +506,6 @@ def decontaminate(
     k: int = 5,
     num_hashes: int = 32,
     bands: int = 4,
-    broadcast_candidate_limit: int = 200_000,
 ) -> DataFrame:
     """Corpus minus contaminated docs (anti-join on the contamination
     pairs' corpus side)."""
@@ -520,7 +513,6 @@ def decontaminate(
         contamination_pairs(
             corpus, benchmark, text_col, id_col,
             threshold=threshold, k=k, num_hashes=num_hashes, bands=bands,
-            broadcast_candidate_limit=broadcast_candidate_limit,
         )
         .select(F.col("corpus_id").alias(id_col))
         .distinct()
@@ -558,14 +550,11 @@ def ngram_contamination(
     Returns (``id_col``, n_collisions, n_grams) for contaminated docs
     only; pass the result to :func:`decontaminate_ngrams` for the
     filtered corpus."""
-    from .referential import _maybe_broadcast, AUTO_BROADCAST_BYTES
-
     bg = (
         _gram_frame(benchmark, text_col, id_col, k).persist()
         .select(F.explode("_ghs").alias("_gh"))
         .distinct()
     )
-    bg = _maybe_broadcast(bg, "auto", AUTO_BROADCAST_BYTES)
     # persist = plan barrier (same pattern as _dup_gram_positions): after
     # the explode, _ghs is referenced once, so CollapseProject would fold
     # the staged gram/token projections back into one expression tree and

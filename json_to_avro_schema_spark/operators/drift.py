@@ -133,6 +133,28 @@ class DriftReport:
     n_baseline: int
 
 
+def value_range(
+    current: DataFrame,
+    baseline: DataFrame,
+    column: str,
+    lo: Optional[float],
+    hi: Optional[float],
+) -> Tuple[float, float]:
+    """``(lo, hi)`` with each bound the caller left ``None`` filled from
+    the union min/max of ``column`` over both sides — one aggregate job,
+    skipped when both are declared."""
+    if lo is None or hi is None:
+        row = (
+            current.select(F.col(column).alias("v"))
+            .union(baseline.select(F.col(column).alias("v")))
+            .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+            .collect()[0]
+        )
+        lo = float(row["lo"]) if lo is None else lo
+        hi = float(row["hi"]) if hi is None else hi
+    return lo, hi
+
+
 def drift_report(
     current: DataFrame,
     baseline: DataFrame,
@@ -146,15 +168,7 @@ def drift_report(
 ) -> DriftReport:
     """:func:`drift_verdict` plus the histogram row totals (for verdict
     tables that report ``n_rows``) — same two aggregations, no extra scan."""
-    if lo is None or hi is None:
-        row = (
-            current.select(F.col(column).alias("v"))
-            .union(baseline.select(F.col(column).alias("v")))
-            .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-            .collect()[0]
-        )
-        lo = float(row["lo"]) if lo is None else lo
-        hi = float(row["hi"]) if hi is None else hi
+    lo, hi = value_range(current, baseline, column, lo, hi)
     # the two sides are independent jobs — submit them concurrently so
     # drift wall-time is one histogram, not two in sequence
     from concurrent.futures import ThreadPoolExecutor

@@ -50,9 +50,9 @@ consume it, and without the barrier each consumer re-runs the
 canonicalize/fingerprint projection over the full corpus text (A/B'd
 ~1.5× at 10 M rows, BENCH/BASELINE.md §1d); it is per-doc and key-only,
 so the cache stays bounded at 10^12 docs, and ``FunnelResult.unpersist``
-releases it. The blocklist joins under
-web.domain_filter's broadcast contract (whose count guard runs one tiny
-job at plan-construction time — the only eager work here). No driver
+releases it. The blocklist joins as in web.domain_filter, through
+``_joins.broadcast_if_fits`` (whose bounded count runs one tiny job at
+plan-construction time — the only eager work here). No driver
 state; everything else stays lazy until the caller triggers an action.
 """
 
@@ -64,9 +64,10 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._joins import broadcast_if_fits
 from .text import fingerprint
 from .topk import grouped_topk
-from .web import maybe_broadcast, normalize_url, url_domain
+from .web import normalize_url, url_domain
 
 DROP_STAGE = "drop_stage"
 STAGES = ("domain_blocked", "url_duplicate", "text_duplicate", "low_quality")
@@ -118,7 +119,6 @@ def corpus_funnel(
     dedup_urls: bool = True,
     dedup_text: bool = True,
     keep_if: Optional[Column] = None,
-    max_broadcast_rows: int = 1_000_000,
     persist_pruned: bool = True,
 ) -> FunnelResult:
     """Run the funnel; see module docstring for stages and semantics."""
@@ -150,13 +150,11 @@ def corpus_funnel(
 
         if blocked_domains is not None:
             b_col = blocked_domains.columns[0]
-            # same count-guarded broadcast contract as web.domain_filter:
-            # past the cap the hint is dropped and Spark plans the join
-            b = maybe_broadcast(
+            # a blocklist Catalyst cannot size, as in web.domain_filter
+            b = broadcast_if_fits(
                 blocked_domains.select(
                     F.col(b_col).alias("__blocked_domain")
-                ).distinct(),
-                max_broadcast_rows,
+                ).distinct()
             )
             skinny = (
                 skinny.join(

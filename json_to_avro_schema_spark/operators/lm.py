@@ -17,12 +17,12 @@ Distributed shape (the part that must survive 100 TB):
   NOT a global top-V sort, so no single-task ranking step exists at any
   scale.  Totals (N tokens, V kept, OOV mass) are two scalar aggregates.
 - ``score_documents``: explode tokens -> join the vocab -> re-aggregate
-  per doc.  The vocab side is broadcast only below
-  ``spark.sql.autoBroadcastJoinThreshold`` worth of rows (count-guarded
-  here, same policy as dedup.contamination_pairs); past that it falls
-  back to a shuffle join and AQE picks the strategy.  Because a document
-  explodes inside one input partition, the map-side partial aggregate
-  already collapses to one row per (partition, doc) before the shuffle.
+  per doc.  The vocab side is broadcast through
+  ``_joins.broadcast_if_fits`` with the vocab size the fit already
+  counted (no extra job); past its row cap the join is left to the
+  planner and AQE.  Because a document explodes inside one input
+  partition, the map-side partial aggregate already collapses to one
+  row per (partition, doc) before the shuffle.
 
 The reference has no LM surface; this extends the engine's quality-check
 family (SURVEY.md §2 training-data ops) the way `format`/`if-then-else`
@@ -38,11 +38,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._joins import broadcast_if_fits
 from .text import tokens
-
-# Rows above which the vocab side of the scoring join is NOT broadcast.
-# ~32 B/row -> 2M rows ~ 64 MB, past any sane autoBroadcast threshold.
-BROADCAST_VOCAB_MAX_ROWS = 2_000_000
 
 
 @dataclass(frozen=True)
@@ -108,12 +105,12 @@ def unigram_lm(
 
 
 def _vocab_join_side(lm: UnigramLM, out_col: str) -> DataFrame:
-    """Vocab renamed for a scoring join, broadcast only when small
-    (count-guarded, same policy as dedup.contamination_pairs)."""
-    side = lm.vocab.select("token", F.col("logprob").alias(out_col))
-    if lm.vocab_size <= BROADCAST_VOCAB_MAX_ROWS:
-        side = F.broadcast(side)
-    return side
+    """Vocab renamed for a scoring join, broadcast when its known size
+    fits the shared row cap."""
+    return broadcast_if_fits(
+        lm.vocab.select("token", F.col("logprob").alias(out_col)),
+        lm.vocab_size,
+    )
 
 
 def score_documents(
@@ -191,8 +188,8 @@ def importance_weights(
     hashing becomes unnecessary when the feature space is unigrams).
 
     One explode feeds BOTH lookups (two joins on the same exploded
-    frame, each side independently broadcast-guarded), then one per-doc
-    re-aggregate — the corpus is scanned once."""
+    frame, each side broadcast when it fits the shared row cap), then one
+    per-doc re-aggregate — the corpus is scanned once."""
     exploded = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
     )

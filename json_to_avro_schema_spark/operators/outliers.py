@@ -39,6 +39,9 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler.sql import ident, percentile
+from ._joins import attach_group_stats
+
 # scale factor making MAD consistent with the stddev of a normal
 # distribution: 1/Phi^-1(3/4).  The classic robust-z convention
 # (Iglewicz & Hoaglin use its inverse 0.6745 on the numerator).
@@ -46,31 +49,11 @@ _MAD_Z = 0.6745
 
 
 def _pctl(col: str, p: float, approx: bool) -> F.Column:
-    fn = "percentile_approx({c}, {p}, 10000)" if approx else "percentile({c}, {p})"
-    return F.expr(fn.format(c=col, p=p)).cast("double")
+    return F.expr(percentile(ident(col), p, approx)).cast("double")
 
 
 def _grouped(df: DataFrame, by: Optional[Sequence[str]]):
     return df.groupBy(*by) if by else df.groupBy()
-
-
-def attach_group_stats(
-    df: DataFrame, stats: DataFrame, by: Optional[Sequence[str]]
-) -> DataFrame:
-    """``df``'s columns plus its group's columns from ``stats`` (one row
-    per ``by`` group, built by a groupBy over ``df``; a single row when
-    ``by`` is empty) — a broadcast join-back, group-scale by construction.
-
-    Keys match null-safely (``<=>``): the groupBy that built ``stats``
-    puts every null key in one group, and its rows get that group's
-    stats instead of dropping out of an inner equi-join. With ``by``
-    None or empty it is a cross join against the single global row."""
-    if not by:
-        return df.join(F.broadcast(stats), how="cross")
-    keys = [f"__by{i}" for i in range(len(by))]
-    renamed = stats.withColumnsRenamed(dict(zip(by, keys)))
-    cond = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(by, keys)]
-    return df.join(F.broadcast(renamed), on=cond).drop(*keys)
 
 
 def mad_outliers(

@@ -299,8 +299,6 @@ def ref_containment(
     child: DataFrame,
     parent: DataFrame,
     pairs: Sequence[tuple],
-    *,
-    broadcast_parent="auto",
 ) -> List[RefCandidate]:
     """Measure key containment for candidate FK ``pairs`` of
     ``(child_key, parent_key)`` — each side a column name or a list of
@@ -318,8 +316,6 @@ def ref_containment(
     row-level materialization. The candidate list is bounded (schema-
     sized), so driver state is O(pairs).
     """
-    from .referential import _maybe_broadcast, AUTO_BROADCAST_BYTES
-
     norm = [(_as_cols(cc), _as_cols(pc)) for cc, pc in pairs]
     for cc, pc in norm:
         if len(cc) != len(pc):
@@ -353,10 +349,7 @@ def ref_containment(
         for k in knames:
             pk = pk.filter(F.col(k).isNotNull())
             ck = ck.filter(F.col(k).isNotNull())
-        pk = _maybe_broadcast(
-            pk.distinct().withColumn("__hit", F.lit(True)),
-            broadcast_parent, AUTO_BROADCAST_BYTES,
-        )
+        pk = pk.distinct().withColumn("__hit", F.lit(True))
         row = ck.distinct().join(pk, knames, "left").agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(

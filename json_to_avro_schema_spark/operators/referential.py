@@ -4,41 +4,23 @@ The spec-language counterpart is a cross-table ``$ref`` (reference analog:
 $ref resolution, Transpiler.scala:334-345 — retargeted from intra-document
 name reuse to inter-table key containment).
 
-Spark shape: ``left_anti`` join child→parent for violations, ``left_semi``
-for passes.  The parent side is usually a dimension — broadcast it when it
-fits; when the parent itself is huge (validating FKs against a 10^12-row
-table), the anti-join becomes a shuffle join on the key, which AQE converts
-back to broadcast at runtime if the deduped key set turns out small, and
-splits skewed partitions otherwise.  ``broadcast_parent="auto"`` (default)
-picks per Catalyst's size estimate — never force-broadcasting an unbounded
-parent.  Only the key columns of the parent are shuffled/broadcast (column
-pruning by construction).
+Spark shape: ``left_anti`` join child→parent for violations, ``left``
+join plus one aggregate for the verdict.  Only the parent's deduped key
+columns enter the join (column pruning by construction), and Spark's
+planner picks the strategy: the key set broadcasts when its size estimate
+fits ``spark.sql.autoBroadcastJoinThreshold``, and otherwise the join
+shuffles on the key, which AQE converts back to broadcast at runtime if
+the deduped key set turns out small, and splits skewed partitions
+otherwise.  A huge parent (validating FKs against a 10^12-row table) is
+therefore never force-broadcast.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Union
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# broadcast_parent modes: True forces F.broadcast (caller knows the dim is
-# small), False never broadcasts (shuffle anti-join, AQE may still convert at
-# runtime), "auto" — the scale-safe default — broadcasts only when Catalyst's
-# optimized-plan size estimate for the deduped key projection fits the
-# threshold. Forcing broadcast of a 10^12-row parent OOMs the driver; "auto"
-# keeps the small-dim fast path without that failure mode.
-#
-# "auto" caveats (behavior change from the round-1 force-broadcast default):
-# the estimate comes from a full Catalyst analyze+optimize of the keys plan
-# (one driver-side planning pass per call — cheap next to the job, but not
-# free), and NON-FILE-BACKED parents (in-memory DataFrames, views without
-# stats) estimate at defaultSizeInBytes — effectively huge — so they take the
-# shuffle path pre-AQE. Callers with known-small in-memory dims should pass
-# broadcast_parent=True to keep the deterministic broadcast plan.
-AUTO_BROADCAST_BYTES = 64 * 1024 * 1024
-
-BroadcastMode = Union[bool, str]
 
 
 def _keys_only(parent: DataFrame, ref_columns: Sequence[str], columns: Sequence[str]) -> DataFrame:
@@ -46,34 +28,11 @@ def _keys_only(parent: DataFrame, ref_columns: Sequence[str], columns: Sequence[
     return parent.select(*sel).dropDuplicates(list(columns))
 
 
-def _maybe_broadcast(
-    keys: DataFrame, mode: BroadcastMode, threshold_bytes: int
-) -> DataFrame:
-    if mode is True:
-        return F.broadcast(keys)
-    if mode is False:
-        return keys
-    if mode != "auto":
-        raise ValueError(f"broadcast_parent must be True/False/'auto', got {mode!r}")
-    try:
-        # Catalyst's own pre-execution size estimate (column-pruned, deduped
-        # key projection). BigInt via py4j; falls back to the shuffle path
-        # (AQE can still convert to broadcast at runtime from ACTUAL sizes).
-        stats = keys._jdf.queryExecution().optimizedPlan().stats()
-        size = int(stats.sizeInBytes().toString())
-    except Exception:
-        return keys
-    return F.broadcast(keys) if size <= threshold_bytes else keys
-
-
 def ri_violations(
     child: DataFrame,
     parent: DataFrame,
     columns: Sequence[str],
     ref_columns: Optional[Sequence[str]] = None,
-    *,
-    broadcast_parent: BroadcastMode = "auto",
-    broadcast_threshold_bytes: int = AUTO_BROADCAST_BYTES,
 ) -> DataFrame:
     """Child rows whose key has no match in the parent (dangling refs).
 
@@ -82,11 +41,7 @@ def ri_violations(
     only reads the parent's keys.
     """
     ref_columns = list(ref_columns or columns)
-    keys = _maybe_broadcast(
-        _keys_only(parent, ref_columns, columns),
-        broadcast_parent,
-        broadcast_threshold_bytes,
-    )
+    keys = _keys_only(parent, ref_columns, columns)
     non_null = child
     for c in columns:
         non_null = non_null.filter(F.col(c).isNotNull())
@@ -100,15 +55,11 @@ def ri_verdict(
     ref_columns: Optional[Sequence[str]] = None,
     *,
     by: Optional[str] = None,
-    broadcast_parent: BroadcastMode = "auto",
-    broadcast_threshold_bytes: int = AUTO_BROADCAST_BYTES,
 ) -> DataFrame:
     """(part_key, n_rows, n_dangling, pass) — one anti-join + one agg."""
     ref_columns = list(ref_columns or columns)
-    keys = _maybe_broadcast(
-        _keys_only(parent, ref_columns, columns).withColumn("__hit", F.lit(True)),
-        broadcast_parent,
-        broadcast_threshold_bytes,
+    keys = _keys_only(parent, ref_columns, columns).withColumn(
+        "__hit", F.lit(True)
     )
     joined = child.join(keys, list(columns), "left")
     key_col = F.col(by) if by else F.lit("__all__")

@@ -23,6 +23,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..compiler.sql import percentile
+
 
 def key_counts(df: DataFrame, key_col: str) -> DataFrame:
     """Per-key row counts — the input to every diagnostic below."""
@@ -54,14 +56,17 @@ def skew_report(
     ``approx=True`` there for the bounded-memory GK sketch
     (``percentile_approx``)."""
     per_key = key_counts(df, key_col)
-    pctl = "percentile_approx(cnt, {p}, 10000)" if approx else "percentile(cnt, {p})"
+
+    def pctl(p: float):
+        return F.expr(percentile("cnt", p, approx)).cast("double")
+
     stats = per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("cnt").alias("n_rows"),
         F.max("cnt").alias("max_cnt"),
         F.round(F.avg("cnt"), 4).alias("avg_cnt"),
-        F.round(F.expr(pctl.format(p=0.5)).cast("double"), 4).alias("p50_cnt"),
-        F.round(F.expr(pctl.format(p=0.99)).cast("double"), 4).alias("p99_cnt"),
+        F.round(pctl(0.5), 4).alias("p50_cnt"),
+        F.round(pctl(0.99), 4).alias("p99_cnt"),
     ).select(
         "*",
         F.round(F.col("max_cnt") / (F.col("n_rows") / F.col("n_keys")), 4).alias(

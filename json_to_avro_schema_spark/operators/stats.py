@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..compiler.sql import ident, percentile
+
 _NUMERIC = (T.LongType, T.IntegerType, T.DoubleType, T.FloatType, T.ShortType,
             T.ByteType, T.DecimalType)
 
@@ -70,7 +72,7 @@ def column_stats(
             aggs.append(F.avg(col).alias(f"{c}__mean"))
             if quantiles:
                 aggs.append(
-                    F.percentile_approx(col, list(quantiles), 10_000).alias(f"{c}__q")
+                    F.expr(percentile(ident(c), quantiles, True)).alias(f"{c}__q")
                 )
             else:
                 aggs.append(

@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 import math
 from dataclasses import dataclass
-from typing import Iterable, Iterator, List, Optional, Sequence
+from typing import Iterator, List, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -153,39 +153,30 @@ PARTIAL_SCHEMA = (
 
 
 def partial_digests(
-    df: DataFrame, column: str, *, by: Optional[str] = None, delta: float = 100.0
+    df: DataFrame, column: str, *, delta: float = 100.0
 ) -> DataFrame:
-    """One digest row per input partition (per key when ``by`` given) via
-    ``mapInPandas`` — Arrow batches in, a single tiny row out per partition."""
-    cols = [column] + ([by] if by else [])
-    src = df.select(*cols)
-    key_name = by
+    """One digest row per input partition via ``mapInPandas`` — Arrow
+    batches in, a single tiny row out per partition (per-key sketches are
+    :func:`keyed_digests`)."""
+    src = df.select(column)
 
     def build(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        acc: dict = {}
+        d = None
         for pdf in batches:
-            if key_name is None:
-                groups: Iterable = [("__all__", pdf)]
-            else:
-                groups = pdf.groupby(key_name, dropna=False)
-            for key, g in groups:
-                vals = g[column].to_numpy(dtype="float64", na_value=np.nan)
-                d = TDigest.of(vals, delta)
-                k = str(key)
-                acc[k] = acc[k].merge(d) if k in acc else d
-        rows = [
-            {
-                "key": k,
-                "means": list(map(float, d.means)),
-                "weights": list(map(float, d.weights)),
-                "n": d.n,
-                "vmin": d.vmin if d.n else None,
-                "vmax": d.vmax if d.n else None,
-            }
-            for k, d in acc.items()
-        ]
+            part = TDigest.of(
+                pdf[column].to_numpy(dtype="float64", na_value=np.nan), delta
+            )
+            d = part if d is None else d.merge(part)
+        rows = [] if d is None else [{
+            "key": "__all__",
+            "means": list(map(float, d.means)),
+            "weights": list(map(float, d.weights)),
+            "n": d.n,
+            "vmin": d.vmin if d.n else None,
+            "vmax": d.vmax if d.n else None,
+        }]
         yield pd.DataFrame(
             rows, columns=["key", "means", "weights", "n", "vmin", "vmax"]
         )

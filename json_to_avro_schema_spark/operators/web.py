@@ -66,6 +66,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._joins import broadcast_if_fits
 from .topk import grouped_topk
 
 # query params that never identify content (analytics/attribution noise);
@@ -187,16 +188,6 @@ def url_domain(col: Column) -> Column:
     return F.when(apex != "", apex).otherwise(host)
 
 
-def maybe_broadcast(df: DataFrame, max_rows: int) -> DataFrame:
-    """Count-guarded broadcast hint: force the broadcast when a cheap
-    bounded count says the frame fits, otherwise return it unhinted so
-    Spark/AQE pick the join strategy. NOTE: the guard count is an eager
-    (tiny) job at plan-construction time."""
-    if df.limit(max_rows + 1).count() <= max_rows:
-        return F.broadcast(df)
-    return df
-
-
 def _derive_domain_col(
     df: DataFrame,
     url_col: str,
@@ -296,24 +287,21 @@ def domain_filter(
     url_col: str = "url",
     domain_col: Optional[str] = None,
     out_domain_col: str = "domain",
-    max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
     """Drop rows whose registered domain appears in ``blocked`` (a
     one-column DataFrame of domains) — the RefinedWeb §3.1 blocklist stage
     (their production list is 4.6 M domains).
 
-    LEFT ANTI join on the domain. The blocklist is broadcast when a cheap
-    count says it fits (a 4.6 M-domain list is ~100 MB — still broadcast
-    territory); past ``max_broadcast_rows`` the hint is dropped and the
-    join shuffles, the same count-guard contract as
-    ``lm.score_documents``. ``domain_col`` names a precomputed domain
-    column; otherwise one is derived from ``url_col`` into
-    ``out_domain_col``.
+    LEFT ANTI join on the domain. A blocklist is often a
+    ``createDataFrame`` list, which Catalyst cannot size, so
+    ``_joins.broadcast_if_fits`` hints the broadcast when a bounded count
+    says it fits (a 4.6 M-domain list is past its cap, and the join
+    shuffles). ``domain_col`` names a precomputed domain column;
+    otherwise one is derived from ``url_col`` into ``out_domain_col``.
     """
     b_col = blocked.columns[0]
-    b = maybe_broadcast(
-        blocked.select(F.col(b_col).alias("__blocked_domain")).distinct(),
-        max_broadcast_rows,
+    b = broadcast_if_fits(
+        blocked.select(F.col(b_col).alias("__blocked_domain")).distinct()
     )
     dcol = _derive_domain_col(df, url_col, domain_col, out_domain_col)
     src = df if domain_col is not None else df.withColumn(

@@ -215,16 +215,7 @@ def run_table_checks(
             # distinct `by` value (bounded by partition count, never row
             # count). lo/hi default to the union min/max when the spec omits
             # them — declare them at scale to keep this single-scan.
-            lo, hi = dc.lo, dc.hi
-            if lo is None or hi is None:
-                r = (
-                    df.select(F.col(dc.column).alias("v"))
-                    .union(base.select(F.col(dc.column).alias("v")))
-                    .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-                    .collect()[0]
-                )
-                lo = float(r["lo"]) if lo is None else lo
-                hi = float(r["hi"]) if hi is None else hi
+            lo, hi = dr.value_range(df, base, dc.column, dc.lo, dc.hi)
             per = dr.partitioned_drift_verdicts(
                 df, base, dc.column,
                 by=dc.by, bins=dc.bins, lo=lo, hi=hi,

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
@@ -48,30 +47,19 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@contextmanager
-def _no_auto_broadcast(spark):
-    """At 10^12 rows neither side is broadcastable; pin the at-scale plan by
-    forcing the sort-merge path (auto-broadcast would otherwise kick in at
-    sandbox scale and bypass the bucketed scan entirely)."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_colocated_join_has_no_exchange(spark, bucketed_tables):
-    with _no_auto_broadcast(spark):
+def test_colocated_join_has_no_exchange(spark, bucketed_tables, auto_broadcast_off):
+    # at 10^12 rows neither side is broadcastable: pin the at-scale plan
+    # (auto-broadcast would bypass the bucketed scan at sandbox scale)
+    with auto_broadcast_off():
         joined = co_located_join(spark, "corpus_b", "index_b", ["fingerprint"])
         plan = _physical_plan(joined)
     assert "Exchange" not in plan, plan
     assert "Bucketed: true" in plan or "SelectedBucketsCount" in plan, plan
 
 
-def test_colocated_antijoin_matches_plain(spark, bucketed_tables):
+def test_colocated_antijoin_matches_plain(spark, bucketed_tables, auto_broadcast_off):
     docs, index = bucketed_tables
-    with _no_auto_broadcast(spark):
+    with auto_broadcast_off():
         fresh = dedup_exact_colocated(spark, "corpus_b", "index_b")
         assert "Exchange" not in _physical_plan(fresh)
     expected = docs.join(index, ["fingerprint"], "left_anti")

@@ -78,25 +78,28 @@ def test_importance_weights_directional(spark):
     assert by_text["a b c d"] > 1.0 > by_text["x y z w"]
 
 
-def test_vocab_broadcast_guard(spark, monkeypatch):
-    # The guard controls the explicit HINT only; Spark's stats-based
-    # auto-broadcast stays free to pick a broadcast for a genuinely tiny
-    # vocab (and does, now that the persisted token aggregate carries
-    # accurate sizeInBytes). Pin the hint by disabling auto-broadcast:
-    # over-cap vocab must then plan a non-broadcast join, under-cap must
-    # still force one.
+def test_vocab_broadcast_guard(spark, monkeypatch, auto_broadcast_off):
+    # The vocab goes through broadcast_if_fits with the size the fit
+    # counted. Spark's stats-based auto-broadcast stays free to broadcast a
+    # genuinely tiny vocab, so the hint is pinned with auto-broadcast off:
+    # under the cap the scoring join still broadcasts, past it the join
+    # plans no broadcast, and the scores agree either way (up to float
+    # summation order).
+    from json_to_avro_schema_spark.operators import _joins
+
     df = _docs(spark, ["a b c d e f"])
     m = LM.unigram_lm(df, min_count=1, alpha=0.5)
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan_bc = LM.score_documents(df, m)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan_bc  # hinted despite threshold -1
-        monkeypatch.setattr(LM, "BROADCAST_VOCAB_MAX_ROWS", 0)
-        plan_no = LM.score_documents(df, m)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan_no
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    with auto_broadcast_off():
+        scored = LM.score_documents(df, m)
+        assert "BroadcastHashJoin" in scored._jdf.queryExecution().executedPlan().toString()
+        rows_bc = {r["doc_id"]: (r["n_tokens"], r["log_ppl"]) for r in scored.collect()}
+        monkeypatch.setattr(_joins, "BROADCAST_MAX_ROWS", 0)
+        scored = LM.score_documents(df, m)
+        assert "BroadcastHashJoin" not in scored._jdf.queryExecution().executedPlan().toString()
+        rows_no = {r["doc_id"]: (r["n_tokens"], r["log_ppl"]) for r in scored.collect()}
+        assert rows_no.keys() == rows_bc.keys()
+        for k, (n, lp) in rows_no.items():
+            assert n == rows_bc[k][0] and lp == pytest.approx(rows_bc[k][1])
 
 
 # ------------------------------------------------- duplicated n-grams

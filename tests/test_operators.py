@@ -101,33 +101,61 @@ def test_referential_integrity_tpch(spark):
     assert v["pass"] and v["n_dangling"] == 0
 
 
-def test_ri_auto_broadcast_plan_shapes(spark):
-    """'auto' force-broadcasts a small parent (deterministic small-dim plan)
-    but falls back to a shuffle join — never a driver-side collect of the
-    parent — once the estimated key set exceeds the threshold (the
-    10^12-row-parent shape; AQE may still convert at runtime from actuals)."""
+def test_ri_auto_broadcast_plan_shapes(spark, auto_broadcast_off):
+    """Spark's planner picks the RI join: a small parent's deduped key set
+    plans a BroadcastHashJoin from its size estimate; with the session
+    threshold at -1 the same calls plan a shuffle join (the operators add
+    no hint — a 10^12-row parent is never force-broadcast); results are
+    identical either way."""
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 
-    small = ri_violations(li, orders, ["l_orderkey"], ["o_orderkey"])
-    plan_small = small._jdf.queryExecution().toString()
-    assert "ResolvedHint" in plan_small or "Broadcast" in plan_small
+    def run():
+        v = ri_violations(li, orders, ["l_orderkey"], ["o_orderkey"])
+        d = ri_verdict(li, orders, ["l_orderkey"], ["o_orderkey"])
+        plans = [x._jdf.queryExecution().executedPlan().toString() for x in (v, d)]
+        return plans, v.count(), d.collect()
 
-    big = ri_violations(
-        li, orders, ["l_orderkey"], ["o_orderkey"],
-        broadcast_threshold_bytes=0,
-    )
-    plan_big = big._jdf.queryExecution().toString()
-    # no broadcast HINT injected by us; the physical join on a
-    # 0-byte threshold estimate must be a shuffle join
-    assert "ResolvedHint" not in plan_big
+    plans, n_small, verdict_small = run()
+    assert all("BroadcastHashJoin" in p for p in plans), plans
+    with auto_broadcast_off():
+        plans, n_big, verdict_big = run()
+    assert not any("BroadcastHashJoin" in p for p in plans), plans
+    assert all("SortMergeJoin" in p for p in plans), plans
+    assert n_small == n_big == 0 and verdict_small == verdict_big
 
-    # both plans return identical results
-    assert small.count() == big.count() == 0
 
-    with pytest.raises(ValueError):
-        ri_violations(li, orders, ["l_orderkey"], ["o_orderkey"],
-                      broadcast_parent="sometimes")
+def test_ri_join_strategy_follows_session_threshold(
+    spark, auto_broadcast_off, monkeypatch
+):
+    """With the deployment's broadcast threshold at -1, ``ri_violations``,
+    ``ri_verdict`` and ``profile.ref_containment`` plan no
+    BroadcastHashJoin: no operator hints the parent's key set past the
+    session's own setting."""
+    from json_to_avro_schema_spark.operators.profile import ref_containment
+
+    refs = exploded_span_refs(generate_documents_iv(spark, 3000, violation_pct=10))
+    assets = generate_media_assets(spark)
+    plans = []
+    frame_cls = type(refs)
+    collect = frame_cls.collect
+
+    def recording_collect(self):
+        out = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(frame_cls, "collect", recording_collect)
+    with auto_broadcast_off():
+        n_viol = len(ri_violations(refs, assets, ["media_ref"]).collect())
+        verdict = ri_verdict(refs, assets, ["media_ref"]).collect()[0]
+        cands = ref_containment(refs, assets, [("media_ref", "media_ref")])
+    monkeypatch.undo()
+    assert n_viol > 0 and verdict["n_dangling"] == n_viol
+    assert cands[0].n_dangling_keys > 0
+    # the two RI frames, ref_containment's parent aggregate and its pair join
+    assert sum("SortMergeJoin" in p for p in plans) == 3, plans
+    assert not any("BroadcastHashJoin" in p for p in plans), plans
 
 
 def test_histogram_conserves_mass(spark):

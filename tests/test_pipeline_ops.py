@@ -592,10 +592,12 @@ def test_decontaminate(spark):
     assert 5 in kept and 6 in kept    # unrelated docs survive
 
 
-def test_contamination_broadcast_guard(spark):
-    """Wholesale-leak scenario: with the candidate list forced past the
-    broadcast limit the verify join must take the non-broadcast path and
-    return the same pairs (the limit only changes the physical plan)."""
+def test_contamination_broadcast_guard(spark, auto_broadcast_off, final_plan):
+    """The candidate pairs carry no broadcast hint: with few candidates the
+    planner and AQE broadcast every join; with the session threshold at -1
+    only the benchmark band table (hinted, small by contract) broadcasts and
+    the verify joins shuffle — a wholesale leak's candidate list is never
+    force-broadcast. The pairs are identical either way."""
     from json_to_avro_schema_spark.operators.dedup import contamination_pairs
 
     corpus = _docs(spark)
@@ -604,15 +606,20 @@ def test_contamination_broadcast_guard(spark):
         "doc_id long, text string",
     )
 
-    def run(limit):
-        df = contamination_pairs(
-            corpus, bench, threshold=0.9, broadcast_candidate_limit=limit
-        )
-        return sorted((r["corpus_id"], r["bench_id"]) for r in df.collect())
+    def run():
+        rows, plan = final_plan(contamination_pairs(corpus, bench, threshold=0.9))
+        return sorted((r["corpus_id"], r["bench_id"]) for r in rows), plan
 
-    rows_bc = run(200_000)
-    rows_shuffle = run(0)  # every candidate count exceeds 0
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rows_bc, plan_bc = run()
+    assert "BroadcastHashJoin" in plan_bc and "SortMergeJoin" not in plan_bc, plan_bc
+    with auto_broadcast_off():
+        rows_shuffle, plan_no = run()
+    assert plan_no.count("BroadcastHashJoin") == 1, plan_no
+    assert "SortMergeJoin" in plan_no, plan_no
     assert rows_bc == rows_shuffle and len(rows_bc) > 0
+    # no candidate cache is left behind
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
 
 
 def test_chunk_documents(spark):
@@ -1005,7 +1012,7 @@ def test_domain_caps_cap_order_determinism_and_plan(spark):
     assert "WindowGroupLimit" in plan and "Partial" in plan, plan
 
 
-def test_domain_filter_blocklist_and_broadcast_guard(spark):
+def test_domain_filter_blocklist_and_broadcast_guard(spark, auto_broadcast_off):
     from json_to_avro_schema_spark.operators.web import domain_filter
 
     df = spark.createDataFrame(
@@ -1030,20 +1037,22 @@ def test_domain_filter_blocklist_and_broadcast_guard(spark):
     with pytest.raises(ValueError):
         domain_filter(df, blocked, domain_col="nope")
 
-    # guard pins the HINT only (same contract as lm.score_documents):
-    # with auto-broadcast off, under-cap must still force a broadcast,
-    # over-cap (max_broadcast_rows=0) must plan a non-broadcast anti-join
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    # the blocklist is a createDataFrame list Catalyst cannot size, so
+    # broadcast_if_fits hints it: with auto-broadcast off, under the cap
+    # the anti-join still broadcasts; past the cap it plans a non-broadcast
+    # join; the kept rows are identical either way
+    from json_to_avro_schema_spark.operators import _joins
+
+    with auto_broadcast_off():
         p_bc = (domain_filter(df, blocked)
                 ._jdf.queryExecution().executedPlan().toString())
         assert "BroadcastHashJoin" in p_bc and "LeftAnti" in p_bc
-        p_no = (domain_filter(df, blocked, max_broadcast_rows=0)
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "BroadcastHashJoin" not in p_no
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(_joins, "BROADCAST_MAX_ROWS", 0)
+            over = domain_filter(df, blocked)
+            p_no = over._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in p_no
+            assert sorted(r["doc_id"] for r in over.collect()) == [3]
 
 
 def test_url_word_score_weighted_substrings(spark):
@@ -1187,7 +1196,7 @@ def test_url_dedup_incremental_against_stored_index(spark):
 # --------------------------------------------------------- corpus funnel
 
 
-def test_corpus_funnel_stage_attribution_and_order(spark):
+def test_corpus_funnel_stage_attribution_and_order(spark, auto_broadcast_off):
     """The funnel's load-bearing properties: each row is attributed to the
     FIRST stage that drops it; dedup winners are chosen among rows ALIVE
     after earlier stages (a blocked page cannot steal a canonical-URL
@@ -1239,19 +1248,28 @@ def test_corpus_funnel_stage_attribution_and_order(spark):
     with pytest.raises(ValueError):
         corpus_funnel(df.withColumn("__win_url", F.lit(True)))
 
-    # blocklist broadcast is count-guarded (domain_filter contract): with
-    # auto-broadcast off, over-cap must plan a non-broadcast join
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p_no = (
-            corpus_funnel(df, blocked_domains=blocked, dedup_urls=False,
-                          dedup_text=False, max_broadcast_rows=0)
-            .annotated._jdf.queryExecution().executedPlan().toString()
-        )
+    # the blocklist joins through broadcast_if_fits (domain_filter's
+    # contract): with auto-broadcast off, under the cap it still
+    # broadcasts, past the cap it plans a non-broadcast join, and the
+    # attribution is identical either way
+    from json_to_avro_schema_spark.operators import _joins
+
+    def blocklist_only():
+        res = corpus_funnel(df, blocked_domains=blocked, dedup_urls=False,
+                            dedup_text=False)
+        plan = res.annotated._jdf.queryExecution().executedPlan().toString()
+        got = sorted((r["doc_id"], r["drop_stage"]) for r in res.annotated.collect())
+        res.unpersist()
+        return plan, got
+
+    with auto_broadcast_off():
+        p_bc, got_bc = blocklist_only()
+        assert "BroadcastHashJoin" in p_bc
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(_joins, "BROADCAST_MAX_ROWS", 0)
+            p_no, got_no = blocklist_only()
         assert "BroadcastHashJoin" not in p_no
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    assert got_bc == got_no and (1, "domain_blocked") in got_bc
 
 
 def test_corpus_funnel_persist_contract(spark):
