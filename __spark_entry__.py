@@ -13,8 +13,13 @@ identically on both sides.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import os
+import shutil
 import sys
+import tempfile
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +52,7 @@ from json_to_avro_schema_spark.sources.synthetic import (
     generate_documents_iv,
 )
 from json_to_avro_schema_spark.sources.tables import load_table, spread_to_cores
+from json_to_avro_schema_spark.streaming import drain, start_available_now
 
 N_DOCS_ENTRY = 20_000
 
@@ -58,6 +64,62 @@ def entry(spark: SparkSession) -> DataFrame:
     df = generate_documents_iv(spark, N_DOCS_ENTRY, violation_pct=5)
     res = run_validation(spark, df, plan)
     return res.verdicts.orderBy("part_key", "check_name")
+
+
+# ------------------------------------------------- scratch-disk helpers
+
+def _in_scratch(
+    spark: SparkSession, build: Callable[[str], DataFrame]
+) -> DataFrame:
+    """``build(scratch)`` in a fresh scratch directory, collected into a
+    local frame with the same schema. The directory is removed on every
+    exit path; the returned frame never reads it."""
+    scratch = tempfile.mkdtemp(prefix="gate_scratch_")
+    try:
+        out = build(scratch)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def _ordered_feed(
+    spark: SparkSession, scratch: str, batches: list[DataFrame]
+) -> DataFrame:
+    """File-stream source replaying ``batches`` in list order: one parquet
+    file per batch, mtimes pinned in that order (the file source reads
+    oldest first), one file per micro-batch."""
+    feed = os.path.join(scratch, "feed")
+    os.makedirs(feed)
+    now = time.time()
+    for i, batch in enumerate(batches):
+        staged = os.path.join(scratch, f"batch{i}")
+        batch.coalesce(1).write.parquet(staged)
+        [part] = glob.glob(os.path.join(staged, "part-*.parquet"))
+        path = os.path.join(feed, f"batch{i}.parquet")
+        os.rename(part, path)
+        os.utime(path, (now + 60 * i, now + 60 * i))
+    schema = spark.read.parquet(feed).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+
+
+@contextlib.contextmanager
+def _state_partitions(spark: SparkSession):
+    """Eight shuffle partitions inside the block, restored after. A stream
+    fixes its state-store count from this conf when it starts; 8 stores
+    instead of one per shuffle partition cut per-micro-batch state
+    overhead on these small corpora (a deployment sizes it to the
+    corpus)."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 # --------------------------------------------------------------- queries
@@ -1691,57 +1753,31 @@ def _o_profile_drift_lineitem() -> str:
 def _q_streaming_profile_drift(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming profile history + drift (streaming/profile.py): the
     documents table is split into two DETERMINISTIC micro-batches
-    (doc_id parity, file mtimes pinned so FileStreamSource's mtime order
-    is the parity order), each micro-batch is profiled inside
+    (doc_id parity, an ordered feed), each micro-batch is profiled inside
     foreachBatch into a vocab-scale (epoch, column) history, and the
     drift between the two epochs is the result — re-derived column by
     column in the DuckDB oracle over the same parity split.
     exact_distinct=True for SQL parity (streaming default is approx)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from json_to_avro_schema_spark.streaming import drain
     from json_to_avro_schema_spark.streaming.profile import (
         profile_history_drift,
         profile_stream_to_history,
     )
 
     docs = load_table(spark, sf, "documents")
-    base = tempfile.mkdtemp(prefix="stream_profile_gate_")
-    try:
-        src = os.path.join(base, "src")
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        first = {f for f in os.listdir(src) if f.endswith(".parquet")}
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        now = time.time()
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                bump = 0 if f in first else 600
-                os.utime(os.path.join(src, f), (now + bump, now + bump))
+    parity = F.col("doc_id") % 2
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    def build(scratch: str) -> DataFrame:
+        feed = _ordered_feed(
+            spark, scratch, [docs.filter(parity == 0), docs.filter(parity == 1)]
         )
-        q = profile_stream_to_history(
-            stream, os.path.join(base, "hist"), os.path.join(base, "ckpt"),
+        hist = os.path.join(scratch, "hist")
+        drain(profile_stream_to_history(
+            feed, hist, os.path.join(scratch, "ckpt"),
             ["doc_id", "n_chars", "lang"], exact_distinct=True,
-        )
-        drain(q, 180)
-        out = profile_history_drift(
-            spark, os.path.join(base, "hist")
-        ).orderBy("column")
-        out = out.localCheckpoint()  # materialize before the tmp dir dies
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
+        ), 180)
+        return profile_history_drift(spark, hist).orderBy("column")
+
+    return _in_scratch(spark, build)
 
 
 def _o_streaming_profile_drift() -> str:
@@ -2871,15 +2907,17 @@ def _q_ivf_indexed_topk_cosine(spark: SparkSession, sf: str) -> DataFrame:
     ⇒ every cell read ⇒ ≡ brute force, so the exact-top-k oracle applies;
     the pruning itself is pinned in
     tests/test_pipeline_ops.py::test_ivf_indexed_prunes_partitions."""
-    import tempfile
-
     emb = load_table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
     cents = sim.ivf_train_centroids(emb, k=8, iters=2)
-    path = tempfile.mkdtemp(prefix="ivf_index_") + "/index"
-    sim.ivf_write_index(emb, path, cents)
-    out = sim.ivf_topk_indexed(spark, path, list(q), cents, k=10, nprobe=8)
-    return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
+
+    def build(scratch: str) -> DataFrame:
+        path = os.path.join(scratch, "index")
+        sim.ivf_write_index(emb, path, cents)
+        out = sim.ivf_topk_indexed(spark, path, list(q), cents, k=10, nprobe=8)
+        return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
+
+    return _in_scratch(spark, build)
 
 
 def _q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
@@ -2989,9 +3027,6 @@ def _q_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
     crash+resume state rows is IDENTICAL (quantiles at q25/50/75/99) to one
     built directly in a single shot — no completed partition was
     re-sketched, none was lost."""
-    import shutil
-    import tempfile
-
     from json_to_avro_schema_spark.checkpoint import (
         CheckpointStore,
         merged_state_digest,
@@ -3016,10 +3051,9 @@ def _q_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
     ).withColumn(
         "n_spans", F.coalesce(F.size("spans"), F.lit(0)).cast("double")
     )
-    tmp = tempfile.mkdtemp(prefix="ckpt_resume_")
-    try:
-        store = CheckpointStore(os.path.join(tmp, "state"))
-        out_dir = os.path.join(tmp, "out")
+    def build(scratch: str) -> DataFrame:
+        store = CheckpointStore(os.path.join(scratch, "state"))
+        out_dir = os.path.join(scratch, "out")
         first = run_with_checkpoint(
             spark, df.filter(F.col("part_key") < "08"), plan, store,
             "run-1", out_dir, sketch_col="n_spans",
@@ -3067,8 +3101,8 @@ def _q_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
             "second_processed long, third_resumed long, verdict_parts long, "
             "state_rows long, sketch_ok boolean",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _in_scratch(spark, build)
 
 
 _O_CHECKPOINT_RESUME = """
@@ -3108,38 +3142,27 @@ def _q_streaming_validation(spark: SparkSession, sf: str) -> DataFrame:
     and the checks are plain column predicates, the whole-table totals are
     SQL-derivable — the stream≡batch invariant is additionally pinned in
     tests/test_streaming.py."""
-    import shutil
-    import tempfile
-
-    from json_to_avro_schema_spark.streaming import drain
     from json_to_avro_schema_spark.streaming.validate_stream import stream_to_sinks
 
     plan = compile_document(_STREAM_EVENTS_SPEC)
-    src_file = os.path.join(sf, "events.parquet")
-    schema = spark.read.parquet(src_file).schema
-    tmp = tempfile.mkdtemp(prefix="stream_q_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        shutil.copy(src_file, os.path.join(src, "events.parquet"))
-        q = stream_to_sinks(
-            spark.readStream.schema(schema).parquet(src),
-            plan,
-            verdicts_path=os.path.join(tmp, "verdicts"),
-            checkpoint_location=os.path.join(tmp, "ckpt"),
-        )
-        drain(q, 120)
-        out = (
-            spark.read.parquet(os.path.join(tmp, "verdicts"))
+    events = load_table(spark, sf, "events")
+
+    def build(scratch: str) -> DataFrame:
+        verdicts = os.path.join(scratch, "verdicts")
+        drain(stream_to_sinks(
+            _ordered_feed(spark, scratch, [events]), plan,
+            checkpoint_location=os.path.join(scratch, "ckpt"),
+            verdicts_path=verdicts,
+        ), 120)
+        return (
+            spark.read.parquet(verdicts)
             .groupBy("check_name")
             .agg(F.sum("n_rows").alias("n_rows"), F.sum("n_fail").alias("n_fail"))
             .withColumn("pass", F.col("n_fail") == 0)
             .orderBy("check_name")
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _in_scratch(spark, build)
 
 
 _O_STREAMING_VALIDATION = """
@@ -3238,54 +3261,39 @@ def _q_streaming_windowed_metrics(spark: SparkSession, sf: str) -> DataFrame:
     10-minute watermark. availableNow's final flush closes every window
     whose end ≤ max(ts) − 10min, so the emitted set is exactly SQL-derivable
     — the one window still inside the watermark horizon must be absent."""
-    import shutil
-    import tempfile
-
-    from json_to_avro_schema_spark.streaming import drain
     from json_to_avro_schema_spark.streaming.stateful import windowed_metrics
 
-    src = os.path.join(sf, "events.parquet")
-    schema = spark.read.parquet(src).schema
-    import uuid
+    events = load_table(spark, sf, "events")
 
-    name = "wm_q_" + uuid.uuid4().hex[:12]  # unique sink table
-    # the file-stream source needs a directory; the table is a single file
-    tmp = tempfile.mkdtemp(prefix="wm_src_")
-    shutil.copy(src, os.path.join(tmp, "events.parquet"))
-    stream = (
-        spark.readStream.schema(schema).parquet(tmp)
-        # watermarks require TIMESTAMP_LTZ; session tz is pinned UTC so the
-        # NTZ→LTZ cast preserves wall-clock values
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    out = windowed_metrics(
-        stream, ts_col="ts", window_duration="1 hour",
-        watermark_delay="10 minutes", group_col="event_type", value_col="value",
-    )
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    try:
-        drain(q, 180)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    res = (
-        spark.table(name)
-        .select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            F.date_format("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-            "event_type",
-            "n_rows",
-            "n_null",
-            F.round("min_v", 4).alias("min_v"),
-            F.round("max_v", 4).alias("max_v"),
-            F.round("mean_v", 4).alias("mean_v"),
+    def build(scratch: str) -> DataFrame:
+        stream = _ordered_feed(spark, scratch, [events]).withColumn(
+            # watermarks require TIMESTAMP_LTZ; session tz is pinned UTC so
+            # the NTZ→LTZ cast preserves wall-clock values
+            "ts", F.col("ts").cast("timestamp")
         )
-        .orderBy("window_start", "event_type")
-    )
-    rows = res.collect()
-    return spark.createDataFrame(rows, res.schema)
+        out = windowed_metrics(
+            stream, ts_col="ts", window_duration="1 hour",
+            watermark_delay="10 minutes", group_col="event_type",
+            value_col="value",
+        )
+        path = os.path.join(scratch, "out")
+        drain(start_available_now(out, os.path.join(scratch, "ckpt"), path), 180)
+        return (
+            spark.read.parquet(path)
+            .select(
+                F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+                F.date_format("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
+                "event_type",
+                "n_rows",
+                "n_null",
+                F.round("min_v", 4).alias("min_v"),
+                F.round("max_v", 4).alias("max_v"),
+                F.round("mean_v", 4).alias("mean_v"),
+            )
+            .orderBy("window_start", "event_type")
+        )
+
+    return _in_scratch(spark, build)
 
 
 _O_STREAMING_WINDOWED_METRICS = """
@@ -3316,39 +3324,25 @@ def _q_streaming_session_stats(spark: SparkSession, sf: str) -> DataFrame:
     gap boundary matches the batch operator exactly (a gap EQUAL to the
     threshold stays in the session — pinned by the unit test), so the
     oracle is session_stats' own derivation plus the watermark cut."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from json_to_avro_schema_spark.streaming import drain
     from json_to_avro_schema_spark.streaming.stateful import session_metrics
 
-    src = os.path.join(sf, "events.parquet")
-    schema = spark.read.parquet(src).schema
-    name = "ss_q_" + uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix="ss_src_")
-    shutil.copy(src, os.path.join(tmp, "events.parquet"))
-    stream = (
-        spark.readStream.schema(schema).parquet(tmp)
-        # watermarks require TIMESTAMP_LTZ; session tz is pinned UTC so the
-        # NTZ→LTZ cast preserves wall-clock values
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    out = session_metrics(
-        stream, ts_col="ts", gap_duration="1 hour",
-        watermark_delay="10 minutes",
-    )
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    try:
-        drain(q, 180)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    res = spark.table(name).orderBy("user_id", "start_us")
-    rows = res.collect()
-    return spark.createDataFrame(rows, res.schema)
+    events = load_table(spark, sf, "events")
+
+    def build(scratch: str) -> DataFrame:
+        stream = _ordered_feed(spark, scratch, [events]).withColumn(
+            # watermarks require TIMESTAMP_LTZ; session tz is pinned UTC so
+            # the NTZ→LTZ cast preserves wall-clock values
+            "ts", F.col("ts").cast("timestamp")
+        )
+        out = session_metrics(
+            stream, ts_col="ts", gap_duration="1 hour",
+            watermark_delay="10 minutes",
+        )
+        path = os.path.join(scratch, "out")
+        drain(start_available_now(out, os.path.join(scratch, "ckpt"), path), 180)
+        return spark.read.parquet(path).orderBy("user_id", "start_us")
+
+    return _in_scratch(spark, build)
 
 
 _O_STREAMING_SESSION_STATS = """
@@ -3387,54 +3381,26 @@ def _q_streaming_dedup(spark: SparkSession, sf: str) -> DataFrame:
     ONE corpus — an arrival-order-independent fact the oracle re-derives.
     The survivor identities are arrival-order; the deterministic output is
     the kept-fingerprint set and counts."""
-    import shutil
-    import tempfile
+    from json_to_avro_schema_spark.streaming.dedup import dedup_stream
 
-    from json_to_avro_schema_spark.streaming import drain
-    from json_to_avro_schema_spark.streaming.dedup import (
-        dedup_stream_to_parquet,
-    )
+    docs = load_table(spark, sf, "documents")
 
-    src_file = os.path.join(sf, "documents.parquet")
-    schema = spark.read.parquet(src_file).schema
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        shutil.copy(src_file, os.path.join(src, "pass1.parquet"))
-        shutil.copy(src_file, os.path.join(src, "pass2.parquet"))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        # streaming state partitioning is fixed at query start from
-        # spark.sql.shuffle.partitions; 8 state stores instead of 32 cuts
-        # per-micro-batch state overhead 4x on this tiny corpus (a real
-        # deployment sizes this to the corpus, not the query)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = dedup_stream_to_parquet(
-                stream,
-                os.path.join(tmp, "kept"),
-                os.path.join(tmp, "ckpt"),
-            )
-            drain(q, 120)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        kept = spark.read.parquet(os.path.join(tmp, "kept"))
-        out = kept.agg(
+    def build(scratch: str) -> DataFrame:
+        stream = _ordered_feed(spark, scratch, [docs, docs])
+        kept = os.path.join(scratch, "kept")
+        with _state_partitions(spark):
+            drain(start_available_now(
+                dedup_stream(stream), os.path.join(scratch, "ckpt"), kept
+            ), 120)
+        return spark.read.parquet(kept).agg(
             F.count(F.lit(1)).alias("n_kept"),
             F.count_distinct("fingerprint").alias("n_distinct"),
         ).select(
             "n_kept", "n_distinct",
             (F.col("n_kept") == F.col("n_distinct")).alias("no_dup_survived"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _in_scratch(spark, build)
 
 
 # streaming over pass1+pass2 keeps exactly one row per distinct
@@ -3459,67 +3425,35 @@ def _q_streaming_dedup_watermarked(spark: SparkSession, sf: str) -> DataFrame:
     oracle pins the timing-independent invariant: every fingerprint is
     kept exactly TWICE, total 2 × distinct). Late-duplicate semantics are
     pinned batch-by-batch in tests/test_streaming.py."""
-    import shutil
-    import tempfile
-    import time
+    from json_to_avro_schema_spark.streaming.dedup import dedup_stream
 
-    from json_to_avro_schema_spark.streaming import drain
-    from json_to_avro_schema_spark.streaming.dedup import (
-        dedup_stream_to_parquet,
-    )
+    docs = load_table(spark, sf, "documents").select("doc_id", "text")
+    passes = [
+        docs.withColumn("ts", F.lit(ts).cast("timestamp"))
+        for ts in ["2024-01-01 00:00:00", "2024-01-01 03:00:00",
+                   "2024-01-01 03:30:00", "2024-01-01 04:00:00"]
+    ]
 
-    docs = spark.read.parquet(os.path.join(sf, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_wm_dedup_")
-    try:
-        src = os.path.join(tmp, "src")
-        file_pass = {}
-        for i, ts in enumerate(
-            ["2024-01-01 00:00:00", "2024-01-01 03:00:00",
-             "2024-01-01 03:30:00", "2024-01-01 04:00:00"]
-        ):
-            before = set(os.listdir(src)) if os.path.isdir(src) else set()
-            docs.withColumn("ts", F.lit(ts).cast("timestamp")).coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            for f in set(os.listdir(src)) - before:
-                if f.endswith(".parquet"):
-                    file_pass[f] = i
-        # the file source orders micro-batches by mtime: stagger explicitly
-        now = time.time()
-        for f, i in file_pass.items():
-            os.utime(os.path.join(src, f), (now + 60 * i, now + 60 * i))
-        schema = spark.read.parquet(src).schema
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .withWatermark("ts", "1 hour")
-            )
-            q = dedup_stream_to_parquet(
-                stream,
-                os.path.join(tmp, "kept"),
-                os.path.join(tmp, "ckpt"),
-                within_watermark_col="ts",
-            )
-            drain(q, 180)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        kept = spark.read.parquet(os.path.join(tmp, "kept"))
-        per = kept.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("c"))
-        out = per.agg(
+    def build(scratch: str) -> DataFrame:
+        stream = _ordered_feed(spark, scratch, passes).withWatermark(
+            "ts", "1 hour"
+        )
+        kept = os.path.join(scratch, "kept")
+        with _state_partitions(spark):
+            drain(start_available_now(
+                dedup_stream(stream, within_watermark_col="ts"),
+                os.path.join(scratch, "ckpt"), kept,
+            ), 180)
+        per = spark.read.parquet(kept).groupBy("fingerprint").agg(
+            F.count(F.lit(1)).alias("c")
+        )
+        return per.agg(
             F.sum("c").cast("long").alias("n_kept"),
             F.count(F.lit(1)).alias("n_distinct"),
             F.expr("bool_and(c = 2)").alias("kept_twice"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _in_scratch(spark, build)
 
 
 # retention-bounded dedup over four passes: pass 1 admitted, pass 2 in-state
@@ -3543,50 +3477,39 @@ def _q_streaming_running_verdicts(spark: SparkSession, sf: str) -> DataFrame:
     through one at a time; the final emitted state per (part_key, check)
     must equal the batch verdict totals over the full input (pinned in
     tests/test_streaming_stateful.py)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
-    from json_to_avro_schema_spark.streaming import drain
     from json_to_avro_schema_spark.streaming.stateful import (
         running_partition_verdicts,
     )
 
     plan = compile_document(_DERIVED_SPANS_SPEC)
     docs = _derived_corrupted(spark, sf)
-    tmp = tempfile.mkdtemp(prefix="stateful_q_")
-    try:
-        src = os.path.join(tmp, "src")
-        seq = F.col("doc_id")
-        docs.filter(seq % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-        docs.filter(seq % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    parity = F.col("doc_id") % 2
+
+    def build(scratch: str) -> DataFrame:
+        stream = _ordered_feed(
+            spark, scratch, [docs.filter(parity == 0), docs.filter(parity == 1)]
         )
-        q = (
-            running_partition_verdicts(stream, plan)
-            .writeStream.format("memory").queryName("rpv_q")
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        drain(q, 180)
+        emitted = os.path.join(scratch, "emitted")
+        drain(start_available_now(
+            running_partition_verdicts(stream, plan),
+            os.path.join(scratch, "ckpt"),
+            lambda batch, _: batch.write.mode("append").parquet(emitted),
+            "update",
+        ), 180)
         w = Window.partitionBy("part_key", "check_name").orderBy(
             F.col("n_rows").desc(), F.col("n_fail").desc()
         )
-        final = (
-            spark.sql("SELECT * FROM rpv_q")
+        return (
+            spark.read.parquet(emitted)
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
             .drop("rk")
             .orderBy("part_key", "check_name")
         )
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _in_scratch(spark, build)
 
 
 def _q_minhash_incremental_dups(spark: SparkSession, sf: str) -> DataFrame:
@@ -3599,20 +3522,23 @@ def _q_minhash_incremental_dups(spark: SparkSession, sf: str) -> DataFrame:
     by DuckDB brute force over the same split; the stored-index ≡ one-shot
     equivalence is pinned in
     tests/test_pipeline_ops.py::test_minhash_incremental_index_equivalence."""
-    import tempfile
-
     docs = load_table(spark, sf, "documents")
     batch = docs.filter(F.col("doc_id") % 100 == 0).withColumn(
         "doc_id", F.col("doc_id") + 10_000_000
     )
-    path = tempfile.mkdtemp(prefix="mh_index_") + "/index"
-    dd.minhash_write_index(docs, path, bands=4)
-    cands = dd.minhash_incremental_candidates(spark, path, batch, bands=4)
-    both = docs.unionAll(batch)
-    pairs = dd.ngram_jaccard(cands, both).filter(F.col("jaccard") >= 0.9)
-    return pairs.select(
-        "id_a", "id_b", F.round("jaccard", 5).alias("jaccard")
-    ).orderBy("id_a", "id_b")
+
+    def build(scratch: str) -> DataFrame:
+        path = os.path.join(scratch, "index")
+        dd.minhash_write_index(docs, path, bands=4)
+        cands = dd.minhash_incremental_candidates(spark, path, batch, bands=4)
+        pairs = dd.ngram_jaccard(cands, docs.unionAll(batch)).filter(
+            F.col("jaccard") >= 0.9
+        )
+        return pairs.select(
+            "id_a", "id_b", F.round("jaccard", 5).alias("jaccard")
+        ).orderBy("id_a", "id_b")
+
+    return _in_scratch(spark, build)
 
 
 _O_MINHASH_INCREMENTAL_DUPS = """
@@ -4642,13 +4568,7 @@ def _q_streaming_url_dedup(spark: SparkSession, sf: str) -> DataFrame:
     per page group and drop the whole second pass — the kept-hash set
     and counts are arrival-order-independent facts the oracle re-derives
     from the planting (pages = distinct doc_id//2 groups)."""
-    import shutil
-    import tempfile
-
-    from json_to_avro_schema_spark.streaming import drain
-    from json_to_avro_schema_spark.streaming.dedup import (
-        url_dedup_stream_to_parquet,
-    )
+    from json_to_avro_schema_spark.streaming.dedup import url_dedup_stream
 
     docs = load_table(spark, sf, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -4669,49 +4589,23 @@ def _q_streaming_url_dedup(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(".net:443/p/?a=1&b=2&utm_source=f"),
         ).alias("url"),
     )
-    tmp = tempfile.mkdtemp(prefix="stream_urldedup_")
-    try:
-        src = os.path.join(tmp, "src")
-        b1.coalesce(1).write.parquet(os.path.join(src, "b1"))
-        b2.coalesce(1).write.parquet(os.path.join(src, "b2"))
-        # one dir of part-files ordered by mtime: copy b2's file after b1's
-        feed = os.path.join(tmp, "feed")
-        os.makedirs(feed)
-        import glob as _glob
-        import time as _time
-        for i, d_ in enumerate(("b1", "b2")):
-            for f in _glob.glob(os.path.join(src, d_, "part-*.parquet")):
-                dst = os.path.join(feed, f"pass{i}.parquet")
-                shutil.copy(f, dst)
-                t = _time.time() + (0 if i else -60)
-                os.utime(dst, (t, t))
-        schema = spark.read.parquet(feed).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = url_dedup_stream_to_parquet(
-                stream, os.path.join(tmp, "kept"), os.path.join(tmp, "ckpt")
-            )
-            drain(q, 120)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        kept = spark.read.parquet(os.path.join(tmp, "kept"))
-        out = kept.agg(
+
+    def build(scratch: str) -> DataFrame:
+        stream = _ordered_feed(spark, scratch, [b1, b2])
+        kept = os.path.join(scratch, "kept")
+        with _state_partitions(spark):
+            drain(start_available_now(
+                url_dedup_stream(stream), os.path.join(scratch, "ckpt"), kept
+            ), 120)
+        return spark.read.parquet(kept).agg(
             F.count(F.lit(1)).alias("n_kept"),
             F.count_distinct("url_hash").alias("n_distinct"),
         ).select(
             "n_kept", "n_distinct",
             (F.col("n_kept") == F.col("n_distinct")).alias("no_dup_survived"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _in_scratch(spark, build)
 
 
 # one survivor per planted page group (doc_id // 2), second pass dropped
@@ -5384,17 +5278,18 @@ def _q_bm25_indexed_docs(spark: SparkSession, sf: str) -> DataFrame:
     query terms' bucket partitions (PartitionFilters pruning, pinned in
     tests).  Oracled by the SAME SQL as the ad-hoc path — the indexed
     search must be result-identical to index-free scoring."""
-    import tempfile
-
     from json_to_avro_schema_spark.operators.search import (
         bm25_search_indexed,
         build_bm25_index,
     )
 
     docs = load_table(spark, sf, "documents")
-    path = tempfile.mkdtemp(prefix="bm25_idx_")
-    build_bm25_index(docs, path)
-    return bm25_search_indexed(spark, path, _BM25_QUERY, k=_BM25_K)
+
+    def build(scratch: str) -> DataFrame:
+        build_bm25_index(docs, scratch)
+        return bm25_search_indexed(spark, scratch, _BM25_QUERY, k=_BM25_K)
+
+    return _in_scratch(spark, build)
 
 
 def _q_tfidf_top_terms_docs(spark: SparkSession, sf: str) -> DataFrame:

@@ -52,7 +52,8 @@ def histogram(
 
     When lo/hi are omitted they are computed with one extra (cheap) agg pass —
     at scale pass them explicitly from the spec (DriftCheckCfg.lo/hi) to keep
-    drift single-scan.
+    drift single-scan. An all-null column gives a finite range (see
+    :func:`value_range`) and no rows.
 
     ``include_total`` (requires ``by``) additionally emits the GLOBAL
     histogram as ``part_key = total_key`` rows from the SAME single scan —
@@ -63,10 +64,7 @@ def histogram(
     the total level, so genuine NULL group values stay their own partition.
     """
     col = F.col(column)
-    if lo is None or hi is None:
-        row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-        lo = float(row["lo"]) if lo is None else lo
-        hi = float(row["hi"]) if hi is None else hi
+    lo, hi = _fill_range(df, column, lo, hi)
     if hi <= lo:
         hi = lo + 1.0
     width = (hi - lo) / bins
@@ -133,6 +131,23 @@ class DriftReport:
     n_baseline: int
 
 
+def _fill_range(
+    df: DataFrame, column: str, lo: Optional[float], hi: Optional[float]
+) -> Tuple[float, float]:
+    """Fill the bounds left ``None`` from the min/max of ``column`` over
+    ``df`` (one aggregate job, skipped when both are declared). A column
+    with no non-null value fills 0.0, so the range stays finite."""
+    if lo is None or hi is None:
+        row = df.agg(
+            F.min(column).alias("lo"), F.max(column).alias("hi")
+        ).collect()[0]
+        if lo is None:
+            lo = 0.0 if row["lo"] is None else float(row["lo"])
+        if hi is None:
+            hi = 0.0 if row["hi"] is None else float(row["hi"])
+    return lo, hi
+
+
 def value_range(
     current: DataFrame,
     baseline: DataFrame,
@@ -142,17 +157,12 @@ def value_range(
 ) -> Tuple[float, float]:
     """``(lo, hi)`` with each bound the caller left ``None`` filled from
     the union min/max of ``column`` over both sides — one aggregate job,
-    skipped when both are declared."""
-    if lo is None or hi is None:
-        row = (
-            current.select(F.col(column).alias("v"))
-            .union(baseline.select(F.col(column).alias("v")))
-            .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-            .collect()[0]
-        )
-        lo = float(row["lo"]) if lo is None else lo
-        hi = float(row["hi"]) if hi is None else hi
-    return lo, hi
+    skipped when both are declared. When neither side has a non-null
+    value the filled bound is 0.0: histograms over that range are empty,
+    and :func:`drift_report` reports ``n_current = n_baseline = 0``,
+    ``psi = 0`` and a pass."""
+    v = F.col(column).alias("v")
+    return _fill_range(current.select(v).union(baseline.select(v)), "v", lo, hi)
 
 
 def drift_report(
@@ -167,7 +177,9 @@ def drift_report(
     eps: float = 1e-6,
 ) -> DriftReport:
     """:func:`drift_verdict` plus the histogram row totals (for verdict
-    tables that report ``n_rows``) — same two aggregations, no extra scan."""
+    tables that report ``n_rows``) — same two aggregations, no extra scan.
+    Two sides without a non-null value (both all-null or empty) report
+    ``n_current = n_baseline = 0``, ``kl = psi = 0`` and pass."""
     lo, hi = value_range(current, baseline, column, lo, hi)
     # the two sides are independent jobs — submit them concurrently so
     # drift wall-time is one histogram, not two in sequence

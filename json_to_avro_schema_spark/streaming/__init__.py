@@ -2,6 +2,35 @@
 
 from __future__ import annotations
 
+from typing import Callable, Union
+
+from pyspark.sql import DataFrame
+
+
+def start_available_now(
+    stream_df: DataFrame,
+    checkpoint_location: str,
+    sink: Union[str, Callable[[DataFrame, int], None]],
+    output_mode: str = "append",
+):
+    """Start ``stream_df``'s ``availableNow`` writer: process everything
+    the source holds now, then stop. Returns the StreamingQuery; callers
+    ``drain`` it.
+
+    ``sink`` is a parquet output path or a ``foreachBatch`` function
+    ``(batch_df, epoch_id)``. ``checkpoint_location`` has no default: a
+    checkpoint resumes whatever run last used it, so a location shared by
+    unrelated runs would share their offsets and state.
+    """
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_location)
+        .trigger(availableNow=True)
+    )
+    if callable(sink):
+        return writer.foreachBatch(sink).start()
+    return writer.format("parquet").start(sink)
+
 
 def drain(query, timeout_sec: int) -> None:
     """``awaitTermination`` with the timeout treated as an ERROR.

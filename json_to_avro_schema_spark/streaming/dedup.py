@@ -41,7 +41,13 @@ def dedup_stream(
     within_watermark_col: Optional[str] = None,
 ) -> DataFrame:
     """Streaming DataFrame → streaming DataFrame with ``fingerprint_col``
-    added and cross-batch duplicate fingerprints dropped."""
+    added and cross-batch duplicate fingerprints dropped. Run it into a
+    parquet sink with ``streaming.start_available_now``.
+
+    ``within_watermark_col`` switches to the bounded-retention
+    ``dropDuplicatesWithinWatermark`` variant: state for a fingerprint
+    expires once the watermark passes its first-seen event time + delay,
+    so duplicates arriving LATER than that are kept."""
     with_fp = stream_df.withColumn(
         fingerprint_col, fingerprint(F.col(text_col))
     )
@@ -49,39 +55,6 @@ def dedup_stream(
         # caller must have applied .withWatermark(within_watermark_col, ...)
         return with_fp.dropDuplicatesWithinWatermark([fingerprint_col])
     return with_fp.dropDuplicates([fingerprint_col])
-
-
-def dedup_stream_to_parquet(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_location: str,
-    text_col: str = "text",
-    *,
-    fingerprint_col: str = "fingerprint",
-    within_watermark_col: Optional[str] = None,
-):
-    """Run the dedup stream into an append parquet sink with
-    ``availableNow`` (drain-everything-then-stop). Returns the
-    StreamingQuery; callers ``drain``/``awaitTermination``.
-
-    ``within_watermark_col`` switches to the bounded-retention
-    ``dropDuplicatesWithinWatermark`` variant (the caller must already
-    have applied ``withWatermark`` on that column): state for a
-    fingerprint expires once the watermark passes its first-seen event
-    time + delay, so duplicates arriving LATER than that are kept — the
-    accepted trade for state that stops growing with the distinct corpus."""
-    deduped = dedup_stream(
-        stream_df, text_col, fingerprint_col=fingerprint_col,
-        within_watermark_col=within_watermark_col,
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def url_dedup_stream(
@@ -114,32 +87,3 @@ def url_dedup_stream(
     if within_watermark_col is not None:
         return with_h.dropDuplicatesWithinWatermark([hash_col])
     return with_h.dropDuplicates([hash_col])
-
-
-def url_dedup_stream_to_parquet(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_location: str,
-    url_col: str = "url",
-    *,
-    canon_col: str = "canonical_url",
-    hash_col: str = "url_hash",
-    within_watermark_col: Optional[str] = None,
-    tracking_params: Optional[Sequence[str]] = None,
-):
-    """:func:`url_dedup_stream` into an append parquet sink with
-    ``availableNow`` (drain-everything-then-stop). Returns the
-    StreamingQuery; callers ``drain``/``awaitTermination``."""
-    deduped = url_dedup_stream(
-        stream_df, url_col, canon_col=canon_col, hash_col=hash_col,
-        within_watermark_col=within_watermark_col,
-        tracking_params=tracking_params,
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

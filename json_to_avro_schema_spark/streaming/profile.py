@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.profile import profile_drift, profile_frame, profile_table
+from . import start_available_now
 
 
 def profile_stream_to_history(
@@ -43,11 +44,10 @@ def profile_stream_to_history(
     *,
     exact_distinct: bool = False,
     enum_max: int = 16,
-    trigger_once: bool = True,
 ):
-    """writeStream via foreachBatch: profile every micro-batch and append
-    one (epoch, column)-row block to ``history_path``. Returns the
-    StreamingQuery (callers ``drain``/``awaitTermination``).
+    """``availableNow`` stream whose ``foreachBatch`` profiles every
+    micro-batch and appends one (epoch, column)-row block to
+    ``history_path``. Returns the StreamingQuery (callers ``drain`` it).
 
     ``exact_distinct`` defaults to False here (unlike the gate queries):
     a stream profile runs forever, so the approx/HLL path is the right
@@ -65,13 +65,7 @@ def profile_stream_to_history(
         )
         pf.write.mode("append").parquet(history_path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_available_now(stream_df, checkpoint_location, handle)
 
 
 def profile_history_drift(

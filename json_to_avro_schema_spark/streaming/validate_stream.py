@@ -3,7 +3,7 @@
 The engine is batch-first (checkpoint/resume gives incremental semantics —
 SURVEY.md §2.3 'Streaming-only'), but the same CompiledPlan applies directly
 to a streaming DataFrame: check columns are stateless projections, so
-``readStream → apply_row_checks → writeStream`` needs no watermark; the
+``readStream → apply_row_checks → sink`` needs no watermark; the
 per-partition verdict aggregation runs inside ``foreachBatch`` where each
 micro-batch behaves like a bounded batch run (and can reuse the checkpoint
 store for exactly-once partition commits).
@@ -11,13 +11,14 @@ store for exactly-once partition commits).
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compiler.plan import CompiledPlan
-from ..runner import ROW_PASS, apply_row_checks, extract_violations, partition_verdicts
+from ..runner import apply_row_checks, extract_violations, partition_verdicts
+from . import start_available_now
 
 
 def validate_stream(
@@ -33,40 +34,29 @@ def stream_to_sinks(
     stream_df: DataFrame,
     plan: CompiledPlan,
     *,
-    on_batch: Optional[Callable[[DataFrame, DataFrame, int], None]] = None,
+    checkpoint_location: str,
     violations_path: Optional[str] = None,
     verdicts_path: Optional[str] = None,
-    checkpoint_location: str = "/tmp/engine-stream-ckpt",
-    trigger_once: bool = True,
 ):
-    """writeStream via foreachBatch: per micro-batch, split violations and
-    verdicts exactly as the batch runner does. Returns the StreamingQuery."""
-    original_columns = [
-        c for c in stream_df.columns
-    ]
+    """``availableNow`` stream whose ``foreachBatch`` splits violations and
+    verdicts per micro-batch exactly as the batch runner does. Returns the
+    StreamingQuery (callers ``drain`` it)."""
+    original_columns = stream_df.columns
     plan = plan.bind_schema(stream_df.schema)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         checked = apply_row_checks(batch_df, plan)
         checked = checked.persist()
         try:
-            viol = extract_violations(checked, original_columns)
-            verd = partition_verdicts(checked, plan)
-            if on_batch is not None:
-                on_batch(viol, verd, epoch_id)
             if violations_path:
-                viol.write.mode("append").parquet(violations_path)
-            if verdicts_path:
-                verd.withColumn("epoch", F.lit(epoch_id)).write.mode(
+                extract_violations(checked, original_columns).write.mode(
                     "append"
-                ).parquet(verdicts_path)
+                ).parquet(violations_path)
+            if verdicts_path:
+                partition_verdicts(checked, plan).withColumn(
+                    "epoch", F.lit(epoch_id)
+                ).write.mode("append").parquet(verdicts_path)
         finally:
             checked.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_available_now(stream_df, checkpoint_location, handle)

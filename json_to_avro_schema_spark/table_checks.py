@@ -67,8 +67,6 @@ def run_table_checks(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import functions as F
-
     from .operators import similarity as sim
     from .operators.stats import _is_atomic
 
@@ -196,11 +194,10 @@ def run_table_checks(
         return [(bc.name, "benford", n, 0 if ok else 1, ok)]
 
     def _run_drift(dc, base):
-        method = getattr(dc, "method", "psi")
-        if method in ("ks", "emd"):
+        if dc.method in ("ks", "emd"):
             # exact binning-free ECDF statistics (parser guarantees
             # numeric/global: no by=, no categorical)
-            if method == "ks":
+            if dc.method == "ks":
                 rep = dr.ks_drift_report(
                     df, base, dc.column, ks_threshold=ks_threshold
                 )
@@ -220,7 +217,7 @@ def run_table_checks(
                 df, base, dc.column,
                 by=dc.by, bins=dc.bins, lo=lo, hi=hi,
                 psi_threshold=psi_threshold,
-                include_total=getattr(dc, "include_total", False),
+                include_total=dc.include_total,
             ).collect()
             return [
                 (f"{dc.name}[{p['part_key']}]", "drift",

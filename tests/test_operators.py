@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from json_to_avro_schema_spark.operators.drift import (
+    drift_report,
     drift_verdict,
     emd_drift,
     emd_drift_report,
@@ -173,6 +174,16 @@ def test_drift_detects_shift(spark):
     kl1, psi1, ok1 = drift_verdict(shifted, base, "v", lo=0.0, hi=150.0)
     assert ok0 and psi0 < 0.05
     assert not ok1 and psi1 > 0.5 and kl1 > kl0
+
+
+def test_drift_all_null_column_passes_empty(spark):
+    """No non-null value on either side: a finite range, empty histograms,
+    zero counts, psi 0 and a pass — not a TypeError from ``float(None)``."""
+    df = spark.createDataFrame([(None,), (None,)], "v double")
+    assert histogram(df, "v").count() == 0
+    rep = drift_report(df, df, "v")
+    assert (rep.n_current, rep.n_baseline, rep.psi, rep.ok) == (0, 0, 0.0, True)
+    assert drift_verdict(df, df, "v")[1:] == (0.0, True)
 
 
 def test_ks_drift_matches_numpy_ecdf(spark):

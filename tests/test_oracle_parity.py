@@ -1,12 +1,14 @@
 """Mirror of the driver's correctness gate: every queries() entry with an
 oracle_sql() entry must match DuckDB on the same parquet tables at sf0.01 —
-row count, column names, and order-insensitive values."""
+row count, column names, and order-insensitive values — and must leave
+nothing behind in the shared session or on disk."""
 
 from __future__ import annotations
 
 import math
 import os
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -64,8 +66,23 @@ def _normalize(rows, colnames):
 ORACLED = sorted(entrymod.oracle_sql().keys())
 
 
+def _held(spark):
+    """What a query could leave behind: directories under the temp dir,
+    temp views (a memory sink's table stays registered after ``stop()``)
+    and the shuffle-partition conf."""
+    return (
+        {e.name for e in os.scandir(tempfile.gettempdir()) if e.is_dir()},
+        {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+
+
 @pytest.mark.parametrize("name", ORACLED)
-def test_query_matches_oracle(spark, ddb, name):
+def test_query_matches_oracle(spark, ddb, name, tmp_path, monkeypatch):
+    # the query's temp directories land in tmp_path, so entries other
+    # processes make in the shared temp dir cannot show up as its leftovers
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    dirs0, views0, parts0 = _held(spark)
     q = entrymod.queries()[name]
     spark_df = q(spark, SF_DIR)
     spark_cols = spark_df.columns
@@ -94,6 +111,15 @@ def test_query_matches_oracle(spark, ddb, name):
         (a, b) for a, b in zip(s_rows, d_rows) if a != b
     ]
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+
+    # postcondition: the query released what it took; colocated_dedup's
+    # per-process directory backs the bucketed catalog tables it registers
+    dirs, views, parts = _held(spark)
+    kept = {f"colocated_sf0_01_{os.getpid()}"}
+    assert not dirs - dirs0 - kept, f"{name}: left {sorted(dirs - dirs0)}"
+    assert views == views0, f"{name}: left temp views {sorted(views - views0)}"
+    assert not spark.streams.active, f"{name}: streams still active"
+    assert parts == parts0, f"{name}: shuffle partitions {parts0} -> {parts}"
 
 
 def test_entry_smoke(spark):

@@ -13,7 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from json_to_avro_schema_spark.streaming import drain
+from json_to_avro_schema_spark.streaming import drain, start_available_now
 from json_to_avro_schema_spark.compiler.plan import compile_document  # noqa: E402
 from json_to_avro_schema_spark.runner import ROW_PASS, run_validation  # noqa: E402
 from json_to_avro_schema_spark.sources.synthetic import (  # noqa: E402
@@ -89,9 +89,7 @@ def test_validate_stream_is_streaming_projection(spark, stream_setup):
 def test_streaming_dedup_cross_batch_state(spark, tmp_path):
     """Duplicates arriving in a LATER micro-batch must be dropped by the
     state store, not just within-batch dropDuplicates."""
-    from json_to_avro_schema_spark.streaming.dedup import (
-        dedup_stream_to_parquet,
-    )
+    from json_to_avro_schema_spark.streaming.dedup import dedup_stream
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -124,8 +122,8 @@ def test_streaming_dedup_cross_batch_state(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = dedup_stream_to_parquet(
-        stream, str(tmp_path / "kept"), str(tmp_path / "ckpt")
+    q = start_available_now(
+        dedup_stream(stream), str(tmp_path / "ckpt"), str(tmp_path / "kept")
     )
     drain(q, 120)
     kept = spark.read.parquet(str(tmp_path / "kept"))
@@ -155,9 +153,7 @@ def test_streaming_dedup_within_watermark_expires_state(spark, tmp_path):
     """
     import time
 
-    from json_to_avro_schema_spark.streaming.dedup import (
-        dedup_stream_to_parquet,
-    )
+    from json_to_avro_schema_spark.streaming.dedup import dedup_stream
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -189,9 +185,9 @@ def test_streaming_dedup_within_watermark_expires_state(spark, tmp_path):
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "1 hour")
     )
-    q = dedup_stream_to_parquet(
-        stream, str(tmp_path / "kept"), str(tmp_path / "ckpt"),
-        within_watermark_col="ts",
+    q = start_available_now(
+        dedup_stream(stream, within_watermark_col="ts"),
+        str(tmp_path / "ckpt"), str(tmp_path / "kept"),
     )
     drain(q, 180)
     kept = {
@@ -278,9 +274,7 @@ def test_streaming_url_dedup_cross_batch_state(spark, tmp_path):
     """A refetch arriving in a LATER micro-batch under a different surface
     form (www/case/port/param-order) must be dropped by the state store
     keyed on the canonical-URL hash."""
-    from json_to_avro_schema_spark.streaming.dedup import (
-        url_dedup_stream_to_parquet,
-    )
+    from json_to_avro_schema_spark.streaming.dedup import url_dedup_stream
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -308,8 +302,8 @@ def test_streaming_url_dedup_cross_batch_state(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = url_dedup_stream_to_parquet(
-        stream, str(tmp_path / "kept"), str(tmp_path / "ckpt")
+    q = start_available_now(
+        url_dedup_stream(stream), str(tmp_path / "ckpt"), str(tmp_path / "kept")
     )
     drain(q, 120)
     kept = spark.read.parquet(str(tmp_path / "kept"))

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from json_to_avro_schema_spark.streaming import drain
+from json_to_avro_schema_spark.streaming import drain, start_available_now
 from json_to_avro_schema_spark.compiler.plan import compile_document  # noqa: E402
 from json_to_avro_schema_spark.runner import run_validation  # noqa: E402
 from json_to_avro_schema_spark.sources.synthetic import (  # noqa: E402
@@ -114,14 +114,7 @@ def test_stateful_running_verdicts_recover_state_on_restart(spark, tmp_path):
                 "append"
             ).parquet(out_path)
 
-        q = (
-            out.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q, 180)
+        drain(start_available_now(out, ckpt, sink, "update"), 180)
 
     run_once(1)                                  # folds batch A into state
     b.coalesce(2).write.mode("append").parquet(src)
