@@ -479,16 +479,10 @@ def _q_colocated_dedup(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_bucketed.py). Docs with doc_id < 250 form the index; output
     aggregates the not-yet-indexed set.
 
-    The bucketed WRITE happens here at build time on purpose: bucketing is
-    a one-time storage layout whose payoff is every SUBSEQUENT join, so the
-    timed action measures the recurring Exchange-free join, not the layout
-    cost. Table names and paths are suffixed with the sf tag so builders
-    for different scale factors can coexist in one session (each sf gets
-    its own catalog entries — no overwrite-under-a-lazy-DataFrame); paths
-    also carry the process id, so concurrent replays never share files."""
-    import os
-    import tempfile
-
+    The bucketed tables live in the query's scratch directory under
+    catalog names derived from it, so concurrent replays never share
+    files or tables; both are dropped once the result is collected,
+    before the directory goes."""
     from json_to_avro_schema_spark.sources.bucketed import (
         dedup_exact_colocated,
         write_bucketed,
@@ -498,20 +492,23 @@ def _q_colocated_dedup(spark: SparkSession, sf: str) -> DataFrame:
         "fingerprint", tx.fingerprint(F.col("text"))
     )
     index = docs.filter(F.col("doc_id") < 250).select("fingerprint").distinct()
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_").replace("-", "_")
-    base = os.path.join(tempfile.gettempdir(), f"colocated_{tag}_{os.getpid()}")
-    corpus_t, index_t = f"colocated_corpus_{tag}", f"colocated_index_{tag}"
-    write_bucketed(
-        docs, corpus_t, base + "/corpus", ["fingerprint"], n_buckets=8
-    )
-    write_bucketed(
-        index, index_t, base + "/index", ["fingerprint"], n_buckets=8
-    )
-    fresh = dedup_exact_colocated(spark, corpus_t, index_t)
-    return fresh.agg(
-        F.count(F.lit(1)).alias("n_fresh"),
-        F.sum("doc_id").alias("sum_fresh_ids"),
-    )
+
+    def build(scratch: str) -> DataFrame:
+        tag = os.path.basename(scratch)
+        corpus_t, index_t = f"colocated_corpus_{tag}", f"colocated_index_{tag}"
+        try:
+            for t, df in ((corpus_t, docs), (index_t, index)):
+                write_bucketed(df, t, f"{scratch}/{t}", ["fingerprint"], n_buckets=8)
+            fresh = dedup_exact_colocated(spark, corpus_t, index_t).agg(
+                F.count(F.lit(1)).alias("n_fresh"),
+                F.sum("doc_id").alias("sum_fresh_ids"),
+            )
+            return spark.createDataFrame(fresh.collect(), fresh.schema)
+        finally:
+            for t in (corpus_t, index_t):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    return _in_scratch(spark, build)
 
 
 _O_COLOCATED_DEDUP = r"""

@@ -99,7 +99,7 @@ def _run(spark, df, plan, args) -> int:
             "partitions_processed": r.n_partitions_processed,
         })
     else:
-        res = sink_validation(
+        sink_validation(
             spark, df, plan, args.out, part_key_col=args.part_key_col
         )
         verd = spark.read.parquet(f"{args.out}/verdicts")
@@ -107,7 +107,6 @@ def _run(spark, df, plan, args) -> int:
         summary.update({
             "n_checks": len(plan.row_checks),
             "n_fail": int(n_fail),
-            "schema_problems": res.schema_problems,
         })
     summary["unchecked_paths"] = plan.unchecked_paths
     if plan.has_table_checks():

@@ -1,16 +1,17 @@
-"""Join helpers shared by the operators: the one broadcast hint and the
-null-safe group-stats join-back.
+"""Join shapes shared by the operators and the runner. Three rules decide
+every broadcast:
 
-Join strategy belongs to Spark's planner. ``JoinSelection`` broadcasts a
-side whose Catalyst size estimate fits
-``spark.sql.autoBroadcastJoinThreshold``, and AQE re-plans from runtime
-sizes, so an operator joining against a file scan, an aggregate or a
-persisted frame adds no hint of its own and the deployment's threshold
-decides. Catalyst cannot size every frame: a ``createDataFrame`` list
-(a blocklist) or a frame under an unsized source estimates at
-``spark.sql.defaultSizeInBytes``, effectively unbounded, and plans a
-shuffle join. :func:`broadcast_if_fits` covers those frames with a row
-count against one cap.
+1. The planner by default: ``JoinSelection`` broadcasts a side whose
+   Catalyst estimate fits ``spark.sql.autoBroadcastJoinThreshold`` and AQE
+   re-plans from runtime sizes, so a join against a file scan, an
+   aggregate (such as :func:`small_buckets`) or a persisted frame carries
+   no hint and the deployment's threshold decides.
+2. :func:`broadcast_if_fits` for unsized frames: a ``createDataFrame``
+   list estimates at ``spark.sql.defaultSizeInBytes``, effectively
+   unbounded; a row count against one cap decides its hint.
+3. :func:`keyed_join` for frames small by construction (one row per
+   group, per partition or per partition × check), which Catalyst sizes
+   from the input they were derived from.
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..compiler.sql import ident
 
 # Rows below which a frame the planner cannot size is broadcast. At a few
 # dozen bytes per row this is ~64 MB, the session's broadcast threshold.
@@ -36,20 +39,48 @@ def broadcast_if_fits(df: DataFrame, n_rows: Optional[int] = None) -> DataFrame:
     return F.broadcast(df) if n_rows <= BROADCAST_MAX_ROWS else df
 
 
+def keyed_join(
+    df: DataFrame, small: DataFrame, keys: Sequence[str], how: str = "inner"
+) -> DataFrame:
+    """``df`` joined (``inner``, ``left``, ``left_semi`` or ``left_anti``)
+    with the broadcast ``small``, which carries the ``keys`` under
+    ``df``'s names, null-safely (``<=>``: a null key matches a null, as a
+    groupBy puts every null key in one group). ``small``'s keys get names
+    no column of either side has (compared case-insensitively, as Spark
+    resolves them) and are dropped. With no ``keys`` it is a cross join
+    against ``small``'s single row."""
+    if not keys:
+        return df.join(F.broadcast(small), how="cross")
+    taken = {c.lower() for c in (*df.columns, *small.columns)}
+    prefix = "__key"
+    while any(f"{prefix}{i}" in taken for i in range(len(keys))):
+        prefix = "_" + prefix
+    fresh = [f"{prefix}{i}" for i in range(len(keys))]
+    renamed = small.withColumnsRenamed(dict(zip(keys, fresh)))
+    on = " AND ".join(f"{ident(k)} <=> {f}" for k, f in zip(keys, fresh))
+    return df.join(F.broadcast(renamed), F.expr(on), how).drop(*fresh)
+
+
 def attach_group_stats(
     df: DataFrame, stats: DataFrame, by: Optional[Sequence[str]]
 ) -> DataFrame:
     """``df``'s columns plus its group's columns from ``stats`` (one row
     per ``by`` group, built by a groupBy over ``df``; a single row when
-    ``by`` is empty) — a broadcast join-back, group-scale by construction.
+    ``by`` is None or empty): the group-stats join-back, a null-safe
+    :func:`keyed_join` (a null key gets its group's stats instead of
+    dropping out of an equi-join)."""
+    return keyed_join(df, stats, by or ())
 
-    Keys match null-safely (``<=>``): the groupBy that built ``stats``
-    puts every null key in one group, and its rows get that group's
-    stats instead of dropping out of an inner equi-join. With ``by``
-    None or empty it is a cross join against the single global row."""
-    if not by:
-        return df.join(F.broadcast(stats), how="cross")
-    keys = [f"__by{i}" for i in range(len(by))]
-    renamed = stats.withColumnsRenamed(dict(zip(by, keys)))
-    cond = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(by, keys)]
-    return df.join(F.broadcast(renamed), on=cond).drop(*keys)
+
+def small_buckets(df: DataFrame, keys: Sequence[str], cap: int) -> DataFrame:
+    """The degenerate-bucket cap: the distinct ``keys`` of ``df`` whose
+    bucket holds at most ``cap`` rows. Callers semi-join against it to
+    drop oversized buckets (an exact-duplicate mega-group, a degenerate
+    block key) before a bucket self-join; it is an aggregate the planner
+    sizes, so it carries no hint."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") <= cap)
+        .drop("__n")
+    )

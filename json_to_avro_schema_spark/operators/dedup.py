@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tables import spread_to_cores as _spread
+from ._joins import small_buckets
 from .text import fingerprint
 from .topk import grouped_topk
 
@@ -299,12 +300,7 @@ def minhash_incremental_candidates(
     idx_rows = idx.select("id", "band", "bh")
     all_rows = idx_rows.unionByName(new_rows)
     if max_bucket_size is not None:
-        small = (
-            all_rows.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+        small = small_buckets(all_rows, ["band", "bh"], max_bucket_size)
         new_rows = new_rows.join(small, ["band", "bh"], "left_semi")
         all_rows = all_rows.join(small, ["band", "bh"], "left_semi")
     left = new_rows.alias("l")
@@ -357,12 +353,7 @@ def minhash_lsh_candidates(
     # computes signatures once, not once per side
     band_rows = band_rows.persist()
     if max_bucket_size is not None:
-        small = (
-            band_rows.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+        small = small_buckets(band_rows, ["band", "bh"], max_bucket_size)
         band_rows = band_rows.join(small, ["band", "bh"], "left_semi")
     left = band_rows.alias("l")
     right = band_rows.alias("r")
@@ -442,18 +433,18 @@ def contamination_pairs(
     ``threshold`` — the decontamination step a pretraining pipeline runs
     against evaluation sets before training.
 
-    The candidate pairs carry no hint: the benchmark is small by contract,
-    but |candidates| is proportional to the CORPUS when the benchmark
-    leaked wholesale into a crawl, so the planner and AQE size the verify
-    join from the candidates' runtime size (a broadcast when they are few,
-    a shuffle join otherwise); results are identical either way.
+    No join carries a hint: the planner and AQE size each one. The
+    benchmark band table is small by contract (eval sets are thousands
+    of docs), so it broadcast-joins against the corpus bands at the
+    deployment's threshold; |candidates| is proportional to the CORPUS
+    when the benchmark leaked wholesale into a crawl, so the verify join
+    is a broadcast when they are few and a shuffle join otherwise;
+    results are identical either way.
 
-    Cross-corpus banded minhash: band rows for both sides (the benchmark
-    side is typically tiny — eval sets are thousands of docs, so its band
-    table broadcast-joins against the corpus bands), candidates verified
-    with exact shingle-Jaccard. Exact copies (j=1) always collide in every
-    band; recall at the threshold borderline follows the LSH curve (raise
-    ``bands`` for higher recall at higher verify cost)."""
+    Cross-corpus banded minhash: band rows for both sides, candidates
+    verified with exact shingle-Jaccard. Exact copies (j=1) always
+    collide in every band; recall at the threshold borderline follows the
+    LSH curve (raise ``bands`` for higher recall at higher verify cost)."""
     cb = minhash_band_rows(
         corpus, text_col, id_col,
         k=k, num_hashes=num_hashes, bands=bands,
@@ -462,11 +453,8 @@ def contamination_pairs(
         benchmark, text_col, id_col,
         k=k, num_hashes=num_hashes, bands=bands,
     )
-    # the benchmark band table is small by contract — broadcast it so the
-    # corpus bands stream through a BroadcastHashJoin with no wide shuffle
     cands = (
-        cb.join(F.broadcast(bb.withColumnRenamed("id", "bench_id")),
-                ["band", "bh"])
+        cb.join(bb.withColumnRenamed("id", "bench_id"), ["band", "bh"])
         .select(F.col("id").alias("id_a"), F.col("bench_id").alias("id_b"))
         .distinct()
     )
@@ -718,12 +706,7 @@ def simhash_near_duplicates(
         ).alias("e"),
     ).select("id", *carry, "e.chunk", "e.cv")
     if max_bucket_size is not None:
-        small = (
-            chunks.groupBy("chunk", "cv")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+        small = small_buckets(chunks, ["chunk", "cv"], max_bucket_size)
         chunks = chunks.join(small, ["chunk", "cv"], "left_semi")
     l, r = chunks.alias("l"), chunks.alias("r")
     joined = l.join(r, ["chunk", "cv"]).filter(F.col("l.id") < F.col("r.id"))

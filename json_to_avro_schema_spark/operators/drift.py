@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..compiler.sql import ident, lit
 from . import _prefix
+from ._joins import attach_group_stats
 
 
 def histogram(
@@ -743,7 +744,7 @@ def benford_report(
     # verdict) become null rather than an ANSI divide-by-zero — "nothing
     # to screen" is a null verdict, not a failure (found by the
     # hypothesis differential)
-    s = j.join(F.broadcast(tot), how="cross").select(
+    s = attach_group_stats(j, tot, None).select(
         "digit",
         "n",
         F.when(F.col("total") > 0, F.col("n") / F.col("total")).alias("__op"),
@@ -755,7 +756,7 @@ def benford_report(
         )
     )
     return (
-        s.join(F.broadcast(m), how="cross")
+        attach_group_stats(s, m, None)
         .select(
             "digit",
             "n",

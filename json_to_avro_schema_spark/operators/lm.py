@@ -38,7 +38,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ._joins import broadcast_if_fits
+from ._joins import broadcast_if_fits, keyed_join
 from .text import tokens
 
 
@@ -241,7 +241,8 @@ def perplexity_split(
     silently head). With ``boundaries=None`` the cut points are
     bootstrapped from this corpus at the ``cuts`` quantiles — one GK
     sketch pass globally, or one ``percentile_approx`` aggregate per
-    group (a tiny frame, broadcast back; no global sort either way).
+    group (a tiny frame; no global sort either way). Either frame joins
+    back null-safely through ``_joins.keyed_join``, hinted.
 
     ``decimals`` pre-rounds the score before bucketing — the
     cross-engine reproducibility knob (float summation order differs
@@ -277,15 +278,10 @@ def perplexity_split(
                 [(k, [float(v[0]), float(v[1])]) for k, v in boundaries.items()],
                 f"{by} string, __bnds array<double>",
             )
-        # null-safe equi-join: a null group value is a real group in the
-        # bootstrap mode (percentile_approx computed its cut points), and
-        # a plain join would leave those rows unbucketed
-        bounds = bounds.withColumnRenamed(by, "__bgrp")
-        scored = scored.join(
-            F.broadcast(bounds),
-            F.col(by).eqNullSafe(F.col("__bgrp")),
-            "left",
-        ).drop("__bgrp")
+        # null-safe: a null group value is a real group in the bootstrap
+        # mode (percentile_approx computed its cut points), and a plain
+        # join would leave those rows unbucketed
+        scored = keyed_join(scored, bounds, [by], "left")
         lo, hi = F.col("__bnds")[0], F.col("__bnds")[1]
 
     bucket = (

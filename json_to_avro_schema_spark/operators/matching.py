@@ -15,9 +15,10 @@ Distributed shape: one equi-join on the block key (hash join, no
 nested loop — plan-pinned in tests), `F.levenshtein` verify JVM-side in
 the join's projection.  Block-key SKEW is the one hazard: a degenerate
 key ("", "UNKNOWN") makes a quadratic bucket.  ``max_block_size`` caps
-it the minhash-bucket way — per-side block counts (group-scale aggs,
-broadcast) drop oversized blocks from candidate generation, trading
-bounded recall loss for a bounded join (dropped blocks are visible via
+it with the minhash bucket cap (``_joins.small_buckets``: per-side
+block counts, a group-scale aggregate the planner sizes and joins):
+oversized blocks drop out of candidate generation, trading bounded
+recall loss for a bounded join (dropped blocks are visible via
 :func:`block_stats`).
 
 Reference analog: none (``/root/reference/README.md:100-104``); extends
@@ -32,6 +33,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._joins import small_buckets
+
 
 def block_stats(df: DataFrame, block_col: str) -> DataFrame:
     """Per-block-key row counts — the skew diagnostic to run before
@@ -39,16 +42,6 @@ def block_stats(df: DataFrame, block_col: str) -> DataFrame:
     return df.groupBy(F.col(block_col).alias("block_key")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )
-
-
-def _cap_blocks(df: DataFrame, block_col: str, cap: int) -> DataFrame:
-    ok = (
-        df.groupBy(block_col)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") <= cap)
-        .select(block_col)
-    )
-    return df.join(F.broadcast(ok), block_col, "left_semi")
 
 
 def fuzzy_join(
@@ -80,8 +73,8 @@ def fuzzy_join(
         F.col(right_id), F.col(on).alias("__vr"), F.col(block_on).alias("__b")
     ).filter(F.col("__b").isNotNull() & F.col("__vr").isNotNull())
     if max_block_size is not None:
-        lt = _cap_blocks(lt, "__b", max_block_size)
-        rt = _cap_blocks(rt, "__b", max_block_size)
+        lt = lt.join(small_buckets(lt, ["__b"], max_block_size), "__b", "left_semi")
+        rt = rt.join(small_buckets(rt, ["__b"], max_block_size), "__b", "left_semi")
     dist = F.levenshtein(F.col("__vl"), F.col("__vr"))
     return (
         lt.join(rt, "__b")
@@ -116,7 +109,7 @@ def fuzzy_dedup_candidates(
         F.col(block_on).alias("__b"),
     ).filter(F.col("__b").isNotNull() & F.col("__v1").isNotNull())
     if max_block_size is not None:
-        a = _cap_blocks(a, "__b", max_block_size)
+        a = a.join(small_buckets(a, ["__b"], max_block_size), "__b", "left_semi")
     b = a.select(
         F.col("__id1").alias("__id2"),
         F.col("__v1").alias("__v2"),

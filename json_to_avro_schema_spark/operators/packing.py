@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..compiler.sql import ident
 from . import _prefix
+from ._joins import broadcast_if_fits
 
 _LOG = logging.getLogger(__name__)
 
@@ -129,7 +130,7 @@ def cumulative_tokens(
         offsets, f"{_PID} int, {by} {dict(df.dtypes)[by]}, {_BEFORE} long"
     )
     return (
-        part.join(F.broadcast(offset_df), [_PID, by])
+        part.join(broadcast_if_fits(offset_df, n_rows=len(offsets)), [_PID, by])
         .withColumn("cum_tokens_before", F.expr(f"{_BEFORE} + {within}"))
         .drop(_PID, _BEFORE)
     )
@@ -195,10 +196,11 @@ def select_mixture(
     )
     spark = df.sparkSession
     by_type = dict(df.dtypes)[by]
-    target_df = F.broadcast(
+    target_df = broadcast_if_fits(
         spark.createDataFrame(
             list(targets.items()), f"{by} {by_type}, __target long"
-        )
+        ),
+        n_rows=len(targets),
     )
     return (
         cum.join(target_df, by)

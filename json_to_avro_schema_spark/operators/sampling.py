@@ -34,6 +34,8 @@ from typing import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._joins import broadcast_if_fits
+
 # bucket space: first 8 hex chars of md5 -> [0, 2^32)
 HASH_SPACE = 1 << 32
 
@@ -116,15 +118,17 @@ def stratified_sample(
     ``default_fraction``. Small maps compile to a CASE over the stratum
     column — one shuffle-free filter; large maps (per-domain fractions can
     run to thousands of strata, where a literal CASE chain bloats the plan)
-    broadcast-join a threshold lookup table instead — still no shuffle of
-    ``df``."""
+    join a threshold lookup table instead, a ``createDataFrame`` list
+    hinted through ``_joins.broadcast_if_fits`` with its known size —
+    still no shuffle of ``df`` under the row cap."""
     if len(fractions) > 64:
         spark = df.sparkSession
         lookup = spark.createDataFrame(
             [(s, _threshold(f)) for s, f in sorted(fractions.items())],
             f"{strata_col} string, __thr long",
         )
-        joined = df.join(F.broadcast(lookup), [strata_col], "left")
+        lookup = broadcast_if_fits(lookup, n_rows=len(fractions))
+        joined = df.join(lookup, [strata_col], "left")
         thr = F.coalesce(F.col("__thr"), F.lit(_threshold(default_fraction)))
         return (
             joined.filter(sample_bucket(F.col(key_col), seed) < thr)

@@ -9,8 +9,9 @@ terms".  This module adds the two classic shapes, Spark-first:
   query-term frequencies are ONE codegen'd projection over the tokenized
   text (no explode — tf per term is a HOF count, Catalyst subexpression
   elimination tokenizes once per row), corpus statistics (N, Σdl, per-term
-  document frequency) are ONE scalar aggregate broadcast back, and the
-  top-k is ``orderBy().limit()`` → Catalyst ``TakeOrderedAndProject``
+  document frequency) are ONE scalar aggregate joined back as a 1-row
+  broadcast (``_joins.attach_group_stats``), and the top-k is
+  ``orderBy().limit()`` → Catalyst ``TakeOrderedAndProject``
   (per-partition heaps, never a global sort).  Two corpus scans total,
   zero data-sized shuffles — the right shape for occasional queries.
 
@@ -20,7 +21,9 @@ terms".  This module adds the two classic shapes, Spark-first:
   document-frequency table on the same layout and a 1-row corpus-stats
   meta table.  Query time touches only the query terms' buckets
   (PartitionFilters pruning, pinned in tests) — scan cost is
-  O(query-term postings), independent of corpus size.  ``max_df_fraction``
+  O(query-term postings), independent of corpus size; the pruned term
+  scan joins the postings unhinted, sized by the planner.
+  ``max_df_fraction``
   drops ultra-common terms at build time (the classic stopword guard:
   a term in half the corpus has ~zero idf but a postings list the size
   of the corpus — the one skew shape an inverted index must refuse).
@@ -51,6 +54,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..compiler.sql import call, lit
+from ._joins import attach_group_stats
 from .text import tokens
 
 
@@ -135,7 +139,7 @@ def bm25_search(
             for i in range(len(terms))
         ],
     )
-    scored = base.join(F.broadcast(stats), how="cross")
+    scored = attach_group_stats(base, stats, None)
     avgdl = F.col("__sumdl") / F.col("__n")
     score: Optional[Column] = None
     for i in range(len(terms)):
@@ -261,7 +265,7 @@ def bm25_search_indexed(
     # fixed-order sum under any postings layout
     order = call("array_position", call("array", *map(lit, terms)), "term")
     scored = (
-        postings.join(F.broadcast(tdf), "term")
+        postings.join(tdf, "term")
         .select("doc_id", F.expr(order).alias("__i"), contrib.alias("__c"))
         .groupBy("doc_id")
         .agg(F.expr(
@@ -310,8 +314,7 @@ def tfidf_top_terms(
     if min_df > 1:
         term_df = term_df.filter(F.col("df") >= min_df)
     scored = (
-        postings.join(term_df, "term")
-        .join(F.broadcast(n_row), how="cross")
+        attach_group_stats(postings.join(term_df, "term"), n_row, None)
         .select(
             F.col(id_col),
             "term",

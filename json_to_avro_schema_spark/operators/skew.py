@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..compiler.sql import percentile
+from ._joins import attach_group_stats
 
 
 def key_counts(df: DataFrame, key_col: str) -> DataFrame:
@@ -47,9 +48,10 @@ def skew_report(
     fan-out ``ceil(max_cnt / target_rows_per_task)``).
 
     Hot-key order is deterministic: count desc, key asc.  The global
-    stats ride on every row (a 1-row cross-broadcast) so the report is
-    one DataFrame, one scan, and oracle-hashable without float-ordering
-    tricks.  ``approx=False`` uses Spark's exact ``percentile`` (same
+    stats ride on every row (a 1-row broadcast cross join,
+    ``_joins.attach_group_stats``) so the report is one DataFrame, one
+    scan, and oracle-hashable without float-ordering tricks.
+    ``approx=False`` uses Spark's exact ``percentile`` (same
     interpolating convention as DuckDB ``quantile_cont`` — the oracle
     path), whose partial buffers hold every per-key count per task:
     right at gate scale, wrong at 10^9 distinct keys.  Pass
@@ -82,7 +84,7 @@ def skew_report(
         .filter(F.col("rank") <= top_k)
         .select("rank", "key", "cnt")
     )
-    return hot.join(F.broadcast(stats), how="cross").orderBy("rank")
+    return attach_group_stats(hot, stats, None).orderBy("rank")
 
 
 def recommended_salt(

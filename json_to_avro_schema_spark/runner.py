@@ -35,6 +35,7 @@ from .compiler.sql import (
     and_, call, coalesce_false, ident, is_not_null, lam, lit, not_, string, when,
 )
 from .errors import SchemaMismatchError, ValidationFailedError
+from .operators._joins import keyed_join
 
 ROW_PASS = "__row_pass"
 CHECK_PREFIX = "__chk_"
@@ -75,7 +76,6 @@ class ValidationResult:
     valid: DataFrame            # rows passing every enforce check, original
                                 # columns byte-identical (the expect_or_drop
                                 # sink: valid ∪ violations = input, disjoint)
-    schema_problems: List[str] = dc_field(default_factory=list)
     unchecked_paths: List[str] = dc_field(default_factory=list)
     plan: Optional[CompiledPlan] = None  # the schema-bound plan checked
 
@@ -173,17 +173,13 @@ def partitions_in(
 ) -> DataFrame:
     """The rows of ``df`` whose partition key is (``left_semi``) or is not
     (``left_anti``) among the ``keys_col`` values of the small ``keys``
-    frame, broadcast. Null-safe: a null key is its own partition and
-    matches a null in ``keys``, as in :func:`partition_verdicts`."""
-    # the keys' column gets a name no column of ``df`` has (Spark resolves
-    # names case-insensitively), so the join condition is never ambiguous
-    taken = {c.lower() for c in df.columns}
-    key = "__key"
-    while key in taken:
-        key = "_" + key
-    k = keys.selectExpr(f"{ident(keys_col or part_key_col)} AS {key}")
-    on = F.expr(f"{ident(part_key_col)} <=> {key}")
-    return df.join(F.broadcast(k), on, how)
+    frame: a null-safe :func:`~.operators._joins.keyed_join`, so a null
+    key is its own partition and matches a null in ``keys``, as in
+    :func:`partition_verdicts`."""
+    k = keys.selectExpr(
+        f"{ident(keys_col or part_key_col)} AS {ident(part_key_col)}"
+    )
+    return keyed_join(df, k, [part_key_col], how)
 
 
 def sample_violations(
@@ -267,10 +263,10 @@ def verdicts_from_violations(
     ).agg(F.expr("count(1) AS n_rows"))
     fails = (
         violations.selectExpr(
-            f"{_part_key_sql(violations, part_key_col)} AS __fail_key",
-            "explode(failed_checks) AS __fail_check",
+            f"{_part_key_sql(violations, part_key_col)} AS {key}",
+            "explode(failed_checks) AS check_name",
         )
-        .groupBy("__fail_key", "__fail_check")
+        .groupBy(key, "check_name")
         .agg(F.expr("count(1) AS n_fail"))
     )
     names = call("array", *[string(c.name) for c in plan.row_checks])
@@ -279,16 +275,13 @@ def verdicts_from_violations(
     )
     # null-safe on the key: a null partition key is its own partition (as
     # in partition_verdicts), and its failures must not drop out of the join
-    on = F.expr(f"{key} <=> __fail_key AND check_name = __fail_check")
-    return (
-        grid.join(F.broadcast(fails), on, "left")
-        .selectExpr(
-            key,
-            "check_name",
-            "n_rows",
-            "coalesce(n_fail, 0) AS n_fail",
-            "coalesce(n_fail, 0) = 0 AS pass",
-        )
+    joined = keyed_join(grid, fails, [part_key_col, "check_name"], "left")
+    return joined.selectExpr(
+        key,
+        "check_name",
+        "n_rows",
+        "coalesce(n_fail, 0) AS n_fail",
+        "coalesce(n_fail, 0) = 0 AS pass",
     )
 
 
@@ -296,19 +289,16 @@ def run_validation(
     spark: SparkSession,
     df: DataFrame,
     plan: CompiledPlan,
-    *,
-    enforce_schema: bool = True,
 ) -> ValidationResult:
     """Build the full lazy validation plan. No action is triggered here —
     callers write/collect the pieces they need (one scan each, or persist
     ``checked`` to share the scan).
 
     Raises :class:`SchemaMismatchError` when the physical schema can't carry
-    the spec's checks (with ``enforce_schema=False`` the mismatches are only
-    reported in the result and check columns may fail to resolve).
+    the spec's checks.
     """
     problems = schema_conformance(df.schema, plan.expected_schema)
-    if problems and enforce_schema:
+    if problems:
         raise SchemaMismatchError(problems)
     # accumulative additionalProperties / patternProperties: undeclared data
     # columns get their own checks, materialized against the actual schema
@@ -322,7 +312,6 @@ def run_validation(
         valid=checked.filter(ident(ROW_PASS)).selectExpr(
             *map(ident, original_columns)
         ),
-        schema_problems=problems,
         unchecked_paths=list(plan.unchecked_paths),
         plan=plan,
     )

@@ -144,8 +144,6 @@ def _state_schema(n_checks: int) -> T.StructType:
 def running_partition_verdicts(
     stream_df: DataFrame,
     plan: CompiledPlan,
-    *,
-    already_checked: bool = False,
 ) -> DataFrame:
     """Cumulative per-(part_key, check) verdicts over the whole stream via
     ``applyInPandasWithState``.
@@ -156,9 +154,8 @@ def running_partition_verdicts(
     running totals in the same long form as ``runner.partition_verdicts``.
     Output mode must be ``update``.
     """
-    if not already_checked:
-        plan = plan.bind_schema(stream_df.schema)
-    checked = stream_df if already_checked else apply_row_checks(stream_df, plan)
+    plan = plan.bind_schema(stream_df.schema)
+    checked = apply_row_checks(stream_df, plan)
     check_cols: List[str] = [CHECK_PREFIX + c.name for c in plan.row_checks]
     check_names: List[str] = [c.name for c in plan.row_checks]
     k = len(check_cols)

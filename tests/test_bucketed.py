@@ -84,20 +84,38 @@ def test_mismatched_bucket_count_still_correct(spark, bucketed_tables, tmp_path)
         spark.sql("DROP TABLE IF EXISTS index_b4")
 
 
-def test_colocated_dedup_query_writes_per_process_paths(spark, tmp_path):
-    """Two processes replaying the ``colocated_dedup`` bench query at once
-    must not overwrite each other's bucketed files: its tables live under a
-    directory of this process."""
+def test_colocated_dedup_query_cleans_up_each_replay(spark, tmp_path, monkeypatch):
+    """Two consecutive replays of the ``colocated_dedup`` bench query in one
+    process both return the oracle's counts, and neither leaves a
+    ``colocated_*`` directory or catalog table behind: each replay builds
+    its bucketed tables in its own scratch directory."""
+    import tempfile
+
+    import duckdb
+
     import __spark_entry__ as entry
 
     sf = tmp_path / "sf_tiny"
     spark.createDataFrame(
-        [(i, f"text {i % 7}") for i in range(300)], "doc_id long, text string"
+        [(i, f"text {i % 7}" if i < 280 else f"fresh {i}") for i in range(300)],
+        "doc_id long, text string",
     ).write.parquet(str(sf / "documents.parquet"))
-    entry.queries()["colocated_dedup"](spark, str(sf)).collect()
-    for t in ("colocated_corpus_sf_tiny", "colocated_index_sf_tiny"):
-        location = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
-            .filter("col_name = 'Location'").first()["data_type"]
-        )
-        assert f"colocated_sf_tiny_{os.getpid()}/" in location
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf / 'documents.parquet'}/*.parquet')"
+    )
+    want = con.execute(entry.oracle_sql()["colocated_dedup"]).fetchall()
+    assert want == [(20, sum(range(280, 300)))]
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    for _ in range(2):
+        got = entry.queries()["colocated_dedup"](spark, str(sf)).collect()
+        assert [tuple(r) for r in got] == want
+        assert not os.listdir(scratch)
+        assert not [
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("colocated_")
+        ]

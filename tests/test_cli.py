@@ -36,7 +36,7 @@ def test_cli_batch_run(spark, docs_parquet, tmp_path, capsys):
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["spec"] == "DocumentsIV"
-    assert summary["n_fail"] > 0 and not summary["schema_problems"]
+    assert summary["n_fail"] > 0
     assert spark.read.parquet(f"{out}/violations").count() > 0
     assert spark.read.parquet(f"{out}/verdicts").count() > 0
 

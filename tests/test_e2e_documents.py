@@ -41,7 +41,6 @@ def test_clean_rows_all_pass(spark):
     plan = compile_document(documents_iv_spec())
     df = generate_documents_iv(spark, 1000, violation_pct=0)
     res = run_validation(spark, df, plan)
-    assert res.schema_problems == []  # generator matches expected schema
     assert res.violations.count() == 0
     verdicts = res.verdicts.collect()
     assert all(r["pass"] for r in verdicts)

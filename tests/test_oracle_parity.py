@@ -68,11 +68,11 @@ ORACLED = sorted(entrymod.oracle_sql().keys())
 
 def _held(spark):
     """What a query could leave behind: directories under the temp dir,
-    temp views (a memory sink's table stays registered after ``stop()``)
-    and the shuffle-partition conf."""
+    catalog tables and temp views (a memory sink's table stays registered
+    after ``stop()``) and the shuffle-partition conf."""
     return (
         {e.name for e in os.scandir(tempfile.gettempdir()) if e.is_dir()},
-        {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        {t.name for t in spark.catalog.listTables()},
         spark.conf.get("spark.sql.shuffle.partitions"),
     )
 
@@ -112,12 +112,10 @@ def test_query_matches_oracle(spark, ddb, name, tmp_path, monkeypatch):
     ]
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
 
-    # postcondition: the query released what it took; colocated_dedup's
-    # per-process directory backs the bucketed catalog tables it registers
+    # postcondition: the query released what it took
     dirs, views, parts = _held(spark)
-    kept = {f"colocated_sf0_01_{os.getpid()}"}
-    assert not dirs - dirs0 - kept, f"{name}: left {sorted(dirs - dirs0)}"
-    assert views == views0, f"{name}: left temp views {sorted(views - views0)}"
+    assert not dirs - dirs0, f"{name}: left {sorted(dirs - dirs0)}"
+    assert views == views0, f"{name}: left tables {sorted(views - views0)}"
     assert not spark.streams.active, f"{name}: streams still active"
     assert parts == parts0, f"{name}: shuffle partitions {parts0} -> {parts}"
 

@@ -123,6 +123,36 @@ def test_plan_broadcasts_group_stats(df):
     assert "BroadcastHashJoin" in plan2, plan2
 
 
+def test_keyed_join_clash_free_and_null_safe(spark):
+    """The group-stats join-back's helper: ``df`` holds a column named like
+    the helper's renamed key in another case, and a null key matches a
+    null key, under every join type it passes through."""
+    from json_to_avro_schema_spark.operators._joins import keyed_join
+
+    big = spark.createDataFrame(
+        [("a", 1, "p"), (None, 2, "q"), ("b", 3, "r")],
+        "k string, v int, __KEY0 string",
+    )
+    small = spark.createDataFrame([("a", 10), (None, 20)], "k string, s int")
+
+    def rows(how):
+        out = keyed_join(big, small, ["k"], how)
+        return out.columns, sorted(map(tuple, out.collect()), key=repr)
+
+    matched = [("a", 1, "p", 10), (None, 2, "q", 20)]
+    assert rows("inner") == (
+        ["k", "v", "__KEY0", "s"], sorted(matched, key=repr)
+    )
+    assert rows("left") == (
+        ["k", "v", "__KEY0", "s"],
+        sorted(matched + [("b", 3, "r", None)], key=repr),
+    )
+    assert rows("left_semi") == (
+        ["k", "v", "__KEY0"], sorted([("a", 1, "p"), (None, 2, "q")], key=repr)
+    )
+    assert rows("left_anti") == (["k", "v", "__KEY0"], [("b", 3, "r")])
+
+
 def test_x_outlier_table_check(spark, df):
     from json_to_avro_schema_spark.compiler.plan import compile_document
     from json_to_avro_schema_spark.errors import SpecCompileError

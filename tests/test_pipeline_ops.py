@@ -593,11 +593,11 @@ def test_decontaminate(spark):
 
 
 def test_contamination_broadcast_guard(spark, auto_broadcast_off, final_plan):
-    """The candidate pairs carry no broadcast hint: with few candidates the
-    planner and AQE broadcast every join; with the session threshold at -1
-    only the benchmark band table (hinted, small by contract) broadcasts and
-    the verify joins shuffle — a wholesale leak's candidate list is never
-    force-broadcast. The pairs are identical either way."""
+    """No join carries a broadcast hint: with few candidates the planner
+    and AQE broadcast every join; with the session threshold at -1 every
+    join shuffles, the benchmark band table's too — a wholesale leak's
+    candidate list is never force-broadcast. The pairs are identical
+    either way."""
     from json_to_avro_schema_spark.operators.dedup import contamination_pairs
 
     corpus = _docs(spark)
@@ -615,7 +615,7 @@ def test_contamination_broadcast_guard(spark, auto_broadcast_off, final_plan):
     assert "BroadcastHashJoin" in plan_bc and "SortMergeJoin" not in plan_bc, plan_bc
     with auto_broadcast_off():
         rows_shuffle, plan_no = run()
-    assert plan_no.count("BroadcastHashJoin") == 1, plan_no
+    assert "BroadcastHashJoin" not in plan_no, plan_no
     assert "SortMergeJoin" in plan_no, plan_no
     assert rows_bc == rows_shuffle and len(rows_bc) > 0
     # no candidate cache is left behind

@@ -60,6 +60,6 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     assert summary["spec"] == "DocumentsIV"
-    assert summary["n_fail"] > 0 and not summary["schema_problems"]
+    assert summary["n_fail"] > 0
     assert spark.read.parquet(f"{out}/violations").count() > 0
     assert spark.read.parquet(f"{out}/verdicts").count() > 0
