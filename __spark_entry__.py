@@ -1351,7 +1351,7 @@ def _q_skew_report_events(spark: SparkSession, sf: str) -> DataFrame:
     """Hot-key skew diagnostics (operators/skew.py) on events.user_id —
     the measure-first side of the north rule's explicit skew handling:
     top-10 hottest keys with exact count-distribution stats, the skew
-    factor, and the salt fan-out a salted two-phase aggregate should use
+    factor, and the salt fan-out a hand-written salted stage would need
     (target_rows_per_task=50 at gate scale so the recommendation is
     non-trivial). rank cast to long: Spark row_number is int, DuckDB's
     is bigint, and the gate hash is type-sensitive."""
@@ -2755,8 +2755,8 @@ def _q_topk_price_by_flag(spark: SparkSession, sf: str) -> DataFrame:
     pushdown: the executed plan carries a Partial WindowGroupLimit BELOW
     the exchange, so each map task pre-prunes to its local top-K per flag
     and the 3 post-shuffle flag groups see O(tasks × K) rows, not the whole
-    table (plan pinned in tests/test_topk.py; measured A/B against a manual
-    salted two-phase in BENCH/BASELINE.md)."""
+    table (plan pinned in tests/test_topk.py; measured faster than a manual
+    salted two-phase in BENCH/BASELINE.md, so the engine salts nowhere)."""
     from json_to_avro_schema_spark.operators.topk import grouped_topk
 
     li = load_table(spark, sf, "lineitem").select(
@@ -2770,7 +2770,6 @@ def _q_topk_price_by_flag(spark: SparkSession, sf: str) -> DataFrame:
             F.col("l_orderkey"),
             F.col("l_linenumber"),
         ],
-        ["l_orderkey", "l_linenumber"],
         5,
     ).orderBy("l_returnflag", "rk")
 

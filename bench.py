@@ -665,7 +665,7 @@ def run_web_bench() -> dict:
         lambda: grouped_topk(
             occ, ["__pkey"],
             [F.col("doc_id").asc(), F.col("__pos").asc()],
-            ["doc_id", "__pos"], 1, rank_col="__prk",
+            1, rank_col="__prk",
         ).agg(F.count(F.lit(1)), F.sum("doc_id"))
     )
 
@@ -686,7 +686,7 @@ def run_web_bench() -> dict:
     plan = grouped_topk(
         occ, ["__pkey"],
         [F.col("doc_id").asc(), F.col("__pos").asc()],
-        ["doc_id", "__pos"], 1, rank_col="__prk",
+        1, rank_col="__prk",
     )._jdf.queryExecution().executedPlan().toString()
     out["winner_plan_partial_wgl"] = (
         "WindowGroupLimit" in plan and "Partial" in plan

@@ -1,37 +1,22 @@
 """Passes P12 + P13 — name sanitization for check/report identifiers.
 
-The reference sanitizes enum symbols into Avro-safe names
-(/root/reference/src/main/scala/Transpiler.scala:313-332: leading digit → '_'
-prefix, '-'/'/'/'.' → '_', comparison glyphs → LT/GT/Eq/NotEq) and prefixes
-record names that collide with Avro primitives
-(/root/reference/src/main/scala/NameSanitizer.scala:4-36).
-
-The engine keeps *raw* enum values for ``isin()`` checks (no Avro naming
-restriction on data) and applies sanitization only to check names / verdict
-report columns, where Spark column-name hygiene matters.
+The reference prefixes record names that collide with Avro primitives
+(NameSanitizer.scala:4-36).  Its enum-symbol sanitization
+(Transpiler.scala:313-332) has no counterpart here: the engine keeps *raw*
+enum values for ``isin()`` checks (no Avro naming restriction on data) and
+sanitizes only check names / verdict report columns, where Spark
+column-name hygiene matters.
 """
 
 from __future__ import annotations
 
 import re
 
-_GLYPHS = {"<": "LT", ">": "GT", "=": "Eq", "!=": "NotEq", "<=": "LTEq", ">=": "GTEq"}
-
 # Spark-reserved-ish / Avro primitive names the reference guards against
 # (NameSanitizer.scala:10-18).
 _RESERVED = {
     "boolean", "string", "int", "long", "float", "double", "bytes", "null",
 }
-
-
-def sanitize_symbol(value: str) -> str:
-    """Enum-symbol sanitization per Transpiler.scala:313-332 semantics."""
-    if value in _GLYPHS:
-        return _GLYPHS[value]
-    out = re.sub(r"[-/.\s]", "_", value)
-    if out and out[0].isdigit():
-        out = "_" + out
-    return out
 
 
 def sanitize_check_name(name: str, root_name: str = "") -> str:

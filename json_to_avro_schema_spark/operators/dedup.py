@@ -3,7 +3,7 @@
 Five strategies, cheapest→richest, all shuffle-conscious:
 
 * **exact** — hash-groupBy on a normalized-text fingerprint (xxhash64);
-  two-phase salted variant available via operators/uniqueness.
+  exact duplicate keys via operators/uniqueness (partial aggregate, no salt).
 * **MinHash + LSH** — char-shingles → H minhashes (per-hash ``array_min`` of
   JVM hashes, no UDF) → b bands of r rows → bucket join: only same-band-hash
   docs are candidate pairs; exact shingle-Jaccard verifies. Shuffle volume is
@@ -840,7 +840,6 @@ def dedup_near(
             members,
             ["cluster_rep"],
             [*keep_by, F.col(id_col).asc()],
-            [id_col],
             1,
             rank_col="__nrk",
         ).select(id_col)
@@ -1189,7 +1188,6 @@ def paragraph_dedup(
         occ,
         ["__pkey"],
         [F.col(id_col).asc(), F.col("__pos").asc()],
-        [id_col, "__pos"],
         1,
         rank_col="__prk",
     ).select(id_col, "__pos")

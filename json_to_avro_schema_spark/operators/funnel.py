@@ -102,7 +102,7 @@ def _first_alive_winner(
     pruned = alive.select(F.col(id_col), F.col(key_col))
     return (
         grouped_topk(
-            pruned, [key_col], [F.col(id_col).asc()], [id_col], 1,
+            pruned, [key_col], [F.col(id_col).asc()], 1,
             rank_col="__frk",
         )
         .select(F.col(id_col), F.lit(True).alias(f"__win_{stage}"))

@@ -493,7 +493,7 @@ def frequent_values(
     return grouped_topk(
         counts, ["column"],
         [F.col("n").desc(), F.asc_nulls_first("value")],
-        ["value"], k, rank_col="rank",
+        k, rank_col="rank",
     )
 
 

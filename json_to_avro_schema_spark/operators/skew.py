@@ -1,12 +1,17 @@
-"""Key-skew diagnostics: measure the hot-key problem before salting it.
+"""Key-skew diagnostics for the engine's one skew policy.
 
 The north rule mandates explicit skew handling on hot ``doc_id`` prefixes
 (BASELINE.json: "explicit repartitioning, AQE skew-join handling, and
-salting on hot doc_id prefixes").  The engine already *applies* salting
-(operators/uniqueness.py two-phase agg, AQE skew-join in session conf);
-this module is the *diagnostic* side a pipeline operator runs first: per-key
-count distribution, skew factor, the hot keys themselves, and the salt
-fan-out the salted aggregate should use.
+salting on hot doc_id prefixes").  The engine's policy is Catalyst's
+partial aggregation plus AQE's skew-join split (operators/uniqueness.py
+states it, session.py turns AQE on): a partial ``HashAggregate`` or
+``WindowGroupLimit`` sends a hot key to its reducer as at most one row
+per map task, and no operator salts.  This module is the *diagnostic* a
+pipeline operator runs to see the hot keys that policy absorbs: per-key
+count distribution, skew factor, the hot keys themselves, and the
+``recommended_salt`` column — the fan-out ``ceil(max_cnt /
+target_rows_per_task)`` a hand-written salted stage outside the engine
+would need.
 
 Distributed shape: ONE two-phase hash aggregate on the key (partial counts
 map-side, so the shuffle carries one row per distinct key per task), then
@@ -17,8 +22,6 @@ operators/topk.py).  Driver state is O(1): the report is a DataFrame.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -86,17 +89,3 @@ def skew_report(
     )
     return attach_group_stats(hot, stats, None).orderBy("rank")
 
-
-def recommended_salt(
-    df: DataFrame,
-    key_col: str,
-    *,
-    target_rows_per_task: int = 5_000_000,
-    cap: int = 1024,
-) -> int:
-    """Salt fan-out for a salted two-phase aggregate on ``key_col``:
-    enough buckets that the hottest key's partial groups fit a task,
-    capped (fan-out multiplies the phase-1 group count).  Collects ONE
-    scalar (the max per-key count)."""
-    mx = key_counts(df, key_col).agg(F.max("cnt")).collect()[0][0] or 0
-    return max(1, min(cap, math.ceil(mx / target_rows_per_task)))

@@ -22,7 +22,7 @@ in its plan (tests/test_topk.py asserts the Partial WindowGroupLimit).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,10 +42,8 @@ def grouped_topk(
     df: DataFrame,
     group_cols: Sequence[str],
     order_by: Sequence[Column],
-    tiebreak_cols: Sequence[str],
     k: int,
     *,
-    num_salts: Optional[int] = None,
     rank_col: str = "rk",
 ) -> DataFrame:
     """Top-``k`` rows per group under ``order_by``, exact and skew-proof.
@@ -57,8 +55,7 @@ def grouped_topk(
     Skew safety comes from Catalyst's rank-limit pushdown (see module
     docstring): the executed plan carries a Partial WindowGroupLimit before
     the exchange, so map tasks pre-prune to their local top-K and the
-    post-shuffle per-group work is O(tasks × K), not O(N). ``tiebreak_cols``
-    and ``num_salts`` are accepted and ignored.
+    post-shuffle per-group work is O(tasks × K), not O(N).
     """
     _check_args(df, k, rank_col)
     w = Window.partitionBy(*group_cols).orderBy(*order_by)

@@ -4,14 +4,17 @@ Two paths, both from the north rule:
 
 * **approximate** — ``approx_count_distinct`` (HyperLogLog++) vs ``count``:
   a cheap single-scan signal that duplicates exist, with HLL's ~2% error.
-* **exact violation rows** — salted two-phase aggregation: partial count by
-  ``(key, salt)`` absorbs hot-key skew (hot doc_id prefixes) into S× more
-  reducers, final sum by ``key``, then ``filter(total > 1)``.  A left-semi
-  join recovers the full duplicate rows when needed.
+* **exact violation rows** — ``groupBy(key).count()`` then
+  ``filter(count > 1)``.  A left-semi join recovers the full duplicate
+  rows when needed.
 
-At 10^12 rows the two-phase shape matters: a single groupBy(doc_id) would
-put every occurrence of a hot key on one reducer; the salt spreads partials
-first, and AQE coalesces the (much smaller) final stage.
+Skew policy (the engine's one, for hot ``doc_id`` prefixes): Catalyst's
+partial ``HashAggregate`` counts each key map-side, so a hot key reaches
+its reducer as at most one row per map task, whatever its frequency; AQE
+splits skewed joins (``session.py``).  The engine adds no salt: a salted
+``(key, salt)`` pre-aggregate costs a second hash exchange for spreading
+the partial aggregate already gives.  ``operators/skew.py`` measures the
+hot keys.
 """
 
 from __future__ import annotations
@@ -42,45 +45,21 @@ def approx_uniqueness(
     )
 
 
-def duplicate_keys(
-    df: DataFrame, columns: Sequence[str], *, salt_buckets: int = 16
-) -> DataFrame:
-    """Exact duplicate keys via salted two-phase aggregation.
-
-    Output: key columns + ``dup_count`` (total occurrences, always ≥ 2).
-
-    The salt is derived from the key columns plus the physical partition id
-    — deterministic (no ``monotonically_increasing_id`` / RNG), so a
-    partial-stage retry re-produces identical partials, and a hot key's
-    occurrences still split across partitions (each partition's copy of the
-    key lands in ONE salt bucket, different partitions in different
-    buckets — the skew absorption the salt exists for). Counts are exact
-    regardless: phase 2 re-sums per key.
-    """
-    cols = list(columns)
-    salt = F.pmod(
-        F.xxhash64(*cols, F.spark_partition_id()), F.lit(salt_buckets)
-    )
-    partial = (
-        df.select(*cols)
-        .withColumn("__salt", salt)
-        .groupBy(*cols, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
-    total = (
-        partial.groupBy(*cols)
-        .agg(F.sum("__partial").alias("dup_count"))
+def duplicate_keys(df: DataFrame, columns: Sequence[str]) -> DataFrame:
+    """Exact duplicate keys: key columns + ``dup_count`` (total
+    occurrences, always ≥ 2).  One hash exchange, above the partial
+    aggregate (plan pinned in tests/test_operators.py)."""
+    return (
+        df.groupBy(*columns)
+        .agg(F.count(F.lit(1)).alias("dup_count"))
         .filter(F.col("dup_count") > 1)
     )
-    return total
 
 
-def duplicate_rows(
-    df: DataFrame, columns: Sequence[str], *, salt_buckets: int = 16
-) -> DataFrame:
+def duplicate_rows(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     """Full rows participating in a duplicate key (left-semi join against the
     exact duplicate key set — semi keeps the probe side's bytes untouched)."""
-    dups = duplicate_keys(df, columns, salt_buckets=salt_buckets)
+    dups = duplicate_keys(df, columns)
     return df.join(dups.select(*columns), list(columns), "left_semi")
 
 
@@ -88,15 +67,12 @@ def uniqueness_verdict(
     df: DataFrame, columns: Sequence[str], *, by: str | None = None
 ) -> DataFrame:
     """Per-partition uniqueness verdict: (part_key, n_rows, n_distinct,
-    n_dup_rows, pass). Exact, two-phase (count_distinct is itself a partial
-    agg under the hood)."""
+    n_dup_rows, pass). Exact, two-phase: one group per ``(by, *columns)``
+    tuple — the raw columns, so null and separator-bearing values stay
+    distinct keys, and null keys group together as in ``duplicate_keys``."""
     key_cols = [by] if by else []
-    key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in columns])
-    grouped = (
-        df.select(*key_cols, key.alias("__k"))
-        .groupBy(*key_cols, "__k")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
+    tuple_cols = [*key_cols, *(c for c in columns if c != by)]
+    grouped = df.groupBy(*tuple_cols).agg(F.count(F.lit(1)).alias("__c"))
     agg_key = [F.col(c) for c in key_cols] if key_cols else [F.lit("__all__").alias("part_key")]
     out = grouped.groupBy(*agg_key).agg(
         F.sum("__c").alias("n_rows"),

@@ -241,7 +241,6 @@ def url_dedup(
         with_c,
         [canon_col],
         [F.col(id_col).asc()],
-        [id_col],
         1,
         rank_col="__url_rk",
     )
@@ -277,7 +276,7 @@ def domain_caps(
         F.xxhash64(F.col(id_col)).asc(),
         F.col(id_col).asc(),
     ]
-    kept = grouped_topk(src, [dcol], order, [id_col], cap, rank_col="__dom_rk")
+    kept = grouped_topk(src, [dcol], order, cap, rank_col="__dom_rk")
     return kept.drop("__dom_rk")
 
 
@@ -329,23 +328,6 @@ def url_word_score(
     return score
 
 
-def domain_stats(
-    df: DataFrame,
-    url_col: str = "url",
-    k: int = 20,
-) -> DataFrame:
-    """Top-``k`` domains by page count (desc, domain asc tie-break) — the
-    crawl-composition report. Plans into hash-agg +
-    ``TakeOrderedAndProject`` (never a full sort)."""
-    return (
-        df.select(url_domain(F.col(url_col)).alias("domain"))
-        .groupBy("domain")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .orderBy(F.col("n_pages").desc(), F.col("domain").asc())
-        .limit(k)
-    )
-
-
 def url_dedup_incremental(
     df: DataFrame,
     index: DataFrame,
@@ -393,7 +375,6 @@ def url_dedup_incremental(
         fresh,
         [hash_col],
         [F.col(id_col).asc()],
-        [id_col],
         1,
         rank_col="__url_rk",
     )

@@ -17,7 +17,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app: str = "json_to_avro_schema_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     master: str | None = None,
 ) -> SparkSession:
     """``master`` overrides the default ``local[cpus]`` (e.g.
@@ -25,8 +24,6 @@ def get_spark(
     sandbox); ``cpus`` still sizes shuffle partitions."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
     builder = SparkSession.builder
     # Under spark-submit the JVM gateway already exists and --master/--conf
     # from the submit command must win; setting .master() here would silently
@@ -37,7 +34,7 @@ def get_spark(
         builder = builder.master(master or f"local[{cpus}]")
     builder = (
         builder.appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -11,7 +11,6 @@ the engine reads parquet behind the same call shape (see module
 from __future__ import annotations
 
 import os
-from typing import Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,6 +43,3 @@ def spread_to_cores(df: DataFrame) -> DataFrame:
         return df
     return df.repartition(cores)
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -2,7 +2,7 @@
 the ``table_checks``/``ref_checks``/``stats`` arm).
 
 The spec declares them with engine extension keywords (compiler/plan.py):
-``x-unique`` → salted-agg uniqueness verdicts, ``x-ref`` → anti-join
+``x-unique`` → partial-aggregate uniqueness verdicts, ``x-ref`` → anti-join
 referential integrity, ``x-drift`` → binned-histogram KL/PSI vs a supplied
 baseline (``categorical: true`` switches to category-proportion PSI, no
 binning), ``x-vector`` → embedding-column conformance (dim / NaN / null /
@@ -80,12 +80,9 @@ def run_table_checks(
     fused: List = [F.count(F.lit(1)).alias("__n_rows")]
 
     for i, u in enumerate(plan.unique_checks):
-        # same \x1f-concat key as uniqueness_verdict: concat_ws never yields
-        # null, so count_distinct sees null-key groups too — identical
-        # n_distinct semantics to the groupBy formulation
-        key = F.concat_ws(
-            "\x1f", *[F.col(c).cast("string") for c in u.columns]
-        )
+        # a struct of the raw key columns is never null, so count_distinct
+        # sees null-key groups too — the n_distinct of groupBy(*columns)
+        key = F.struct(*u.columns)
         fused.append(F.count_distinct(key).alias(f"__uq{i}"))
 
     vec_dims: List[int] = []
@@ -271,8 +268,8 @@ def run_table_checks(
             if n_distinct == n_rows:
                 n_dup_rows = 0
             else:
-                # duplicates exist: one extra (rare-path) salted group-by
-                # recovers the exact duplicate-row count
+                # duplicates exist: one extra (rare-path) group-by, partial
+                # aggregate first, recovers the exact duplicate-row count
                 n_dup_rows = int(
                     uq.duplicate_keys(df, list(u.columns))
                     .agg(F.coalesce(F.sum("dup_count"), F.lit(0)).alias("s"))

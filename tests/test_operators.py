@@ -72,9 +72,8 @@ def test_uniqueness_exact_and_approx(spark):
 
 
 def test_duplicate_keys_repartition_invariant(spark):
-    """The salt is content-derived (key cols + partition id), never RNG or
-    monotonically_increasing_id: results are identical under any physical
-    partitioning (pattern: tests/test_sampling.py partition-independence)."""
+    """Results are identical under any physical partitioning (pattern:
+    tests/test_sampling.py partition-independence)."""
     df = spark.range(1000).selectExpr("id % 100 AS k")
     a = duplicate_keys(df, ["k"]).orderBy("k").collect()
     b = duplicate_keys(df.repartition(7), ["k"]).orderBy("k").collect()
@@ -82,6 +81,50 @@ def test_duplicate_keys_repartition_invariant(spark):
     assert a == b == c
     assert len(a) == 100 and all(r["dup_count"] == 10 for r in a)
 
+
+
+def test_duplicate_keys_one_exchange_above_partial_aggregate(spark):
+    """The skew policy in the plan: one hash exchange, fed by the map-side
+    partial count, so a hot key reaches its reducer as at most one row per
+    map task — and no salted pre-aggregate adds a second exchange. Read
+    from the initial (pre-AQE) plan."""
+    df = spark.range(1000).selectExpr("id % 100 AS k")
+    lines = (
+        duplicate_keys(df, ["k"])._jdf.queryExecution().executedPlan()
+        .toString().splitlines()
+    )
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1, "\n".join(lines)
+    below = lines[exchanges[0] + 1]
+    assert "HashAggregate" in below and "partial_count" in below, "\n".join(lines)
+
+
+def test_uniqueness_key_keeps_distinct_tuples_apart(spark):
+    """The verdict keys on the raw columns: a null never merges into a
+    neighbour column or into "", and a value holding a separator byte
+    never forms the same key as a different split of the same text."""
+    rows = [("a", None), (None, "a"), ("x\x1fy", "z"), ("x", "y\x1fz"),
+            (None, None), (None, None)]
+    df = spark.createDataFrame(rows, "a string, b string")
+    v = uniqueness_verdict(df, ["a", "b"]).collect()[0]
+    assert (v["n_rows"], v["n_distinct"], v["n_dup_rows"], v["pass"]) == (6, 5, 2, False)
+    assert v["n_distinct"] == df.groupBy("a", "b").count().count()
+    assert [tuple(r) for r in duplicate_keys(df, ["a", "b"]).collect()] == [(None, None, 2)]
+    one = spark.createDataFrame([(None,), ("",)], "a string")
+    v = uniqueness_verdict(one, ["a"]).collect()[0]
+    assert (v["n_distinct"], v["n_dup_rows"], v["pass"]) == (2, 0, True)
+    # the fused x-unique pass counts the (NULL, NULL) pair as one key, so
+    # it reaches the exact duplicate count rather than passing the table
+    from json_to_avro_schema_spark.compiler.plan import compile_document
+    from json_to_avro_schema_spark.table_checks import run_table_checks
+
+    plan = compile_document({
+        "$id": "x://t/UK", "type": "object",
+        "properties": {"a": {"type": "string"}, "b": {"type": "string"}},
+        "x-unique": [{"name": "uk", "columns": ["a", "b"]}],
+    })
+    uk = run_table_checks(spark, df, plan).collect()[0]
+    assert (uk["n_rows"], uk["n_bad"], uk["pass"]) == (6, 2, False)
 
 def test_referential_integrity_spans(spark):
     docs = generate_documents_iv(spark, 3000, violation_pct=10)

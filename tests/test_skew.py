@@ -6,7 +6,6 @@ import pytest
 
 from json_to_avro_schema_spark.operators.skew import (
     key_counts,
-    recommended_salt,
     skew_report,
 )
 
@@ -39,14 +38,6 @@ def test_skew_report_ties_deterministic(spark):
     df = spark.createDataFrame([("b",), ("a",), ("c",)], "k string")
     rep = skew_report(df, "k", top_k=2).collect()
     assert [r["key"] for r in rep] == ["a", "b"]  # tie on cnt -> key asc
-
-
-def test_recommended_salt_bounds(spark, skewed):
-    assert recommended_salt(skewed, "k", target_rows_per_task=40) == 3
-    assert recommended_salt(skewed, "k", target_rows_per_task=10_000) == 1
-    assert recommended_salt(skewed, "k", target_rows_per_task=1, cap=16) == 16
-    empty = spark.createDataFrame([], "k string")
-    assert recommended_salt(empty, "k") == 1
 
 
 def test_skew_report_rank_limit_pushdown_plan(spark, skewed):

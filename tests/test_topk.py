@@ -43,29 +43,25 @@ def _rows(df):
     return sorted(map(tuple, df.select("grp", "val", "id", "rk").collect()))
 
 
-@pytest.mark.parametrize("fn", [grouped_topk])
-def test_matches_plain_window_with_ties(spark, skewed_df, fn):
-    got = fn(
+def test_matches_plain_window_with_ties(spark, skewed_df):
+    got = grouped_topk(
         skewed_df,
         ["grp"],
         [F.col("val").desc(), F.col("id")],
-        ["id"],
         7,
     )
     assert _rows(got) == _rows(_plain(skewed_df, 7))
 
 
-@pytest.mark.parametrize("fn", [grouped_topk])
-def test_partition_independent_and_deterministic(spark, skewed_df, fn):
+def test_partition_independent_and_deterministic(spark, skewed_df):
     a = _rows(
-        fn(skewed_df, ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 5)
+        grouped_topk(skewed_df, ["grp"], [F.col("val").desc(), F.col("id")], 5)
     )
     b = _rows(
-        fn(
+        grouped_topk(
             skewed_df.repartition(13),
             ["grp"],
             [F.col("val").desc(), F.col("id")],
-            ["id"],
             5,
         )
     )
@@ -77,21 +73,21 @@ def test_group_smaller_than_k(spark):
         [("g", i, i) for i in range(3)], "grp string, val long, id long"
     )
     out = grouped_topk(
-        df, ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 10
+        df, ["grp"], [F.col("val").desc(), F.col("id")], 10
     )
     assert out.count() == 3
 
 
 def test_bad_k_rejected(spark, skewed_df):
     with pytest.raises(ValueError):
-        grouped_topk(skewed_df, ["grp"], [F.col("val").desc()], ["id"], 0)
+        grouped_topk(skewed_df, ["grp"], [F.col("val").desc()], 0)
 
 
 def test_working_column_clash_rejected(spark, skewed_df):
     with pytest.raises(ValueError):
         grouped_topk(
             skewed_df.withColumn("rk", F.lit(1)),
-            ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 5,
+            ["grp"], [F.col("val").desc(), F.col("id")], 5,
         )
 
 
@@ -101,7 +97,7 @@ def test_default_path_has_partial_window_group_limit(spark, skewed_df):
     to their local top-K — Catalyst's native two-phase (Spark ≥ 3.5)."""
     plan = (
         grouped_topk(
-            skewed_df, ["grp"], [F.col("val").desc(), F.col("id")], ["id"], 5
+            skewed_df, ["grp"], [F.col("val").desc(), F.col("id")], 5
         )
         ._jdf.queryExecution()
         .executedPlan()
